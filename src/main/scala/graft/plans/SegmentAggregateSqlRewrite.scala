@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, LongType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.tsdb.{Engine, SegmentAggregates, SegmentSchema, TableMetadata}
+import graft.tsdb.{Engine, SegmentAggregates, SegmentSlice, TableMetadata}
 
 /** Catalyst-level rewrite of simple aggregates over a time series view
   * into segment-native (or hybrid) aggregates — the Spark counterpart of
@@ -931,6 +931,10 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
           if windowId.contains(a.exprId) =>
         Some(WindowPart(if (ord == 0) "start" else "end", outName))
       case a: AttributeReference if groupTags.contains(a.name) => Some(TagRef(a.name))
+      // An aliased tag key (`tag AS g`, as INCLUDE MERGE ships its group
+      // keys): spliceRewrite re-aliases the output positionally.
+      case Alias(a: AttributeReference, _) if groupTags.contains(a.name) =>
+        Some(TagRef(a.name))
       case Alias(e, outName) if bucketSpecOf(meta, e).exists(bucket.contains) =>
         // The analyzer already guarantees a non-aggregate result expression
         // appears among the groupings, so this is THE bucket grouping.
@@ -1664,15 +1668,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       // segments, so DISTINCT over the segment relation is exact —
       // metadata-only, no reconstruction. (matchAggregate already declined
       // time ranges and bucket groupings here.)
-      val preds =
-        m.tagEq.toSeq.sortBy(_._1).map { case (t, v) => col(t) === v } ++
-          m.tagIn.toSeq.sortBy(_._1).map { case (t, vs) =>
-            col(t).isin(vs.map(v => v: Any): _*)
-          }
-      val segments0 = engine.dataFolder
-        .segmentsPruned(m.meta.name, scala.None, scala.None, m.tagEq, m.tagIn)
-      val segments = preds.reduceOption(_ && _)
-        .map(segments0.where).getOrElse(segments0)
+      val segments = new SegmentSlice(engine.dataFolder, m.meta, Seq.empty,
+        scala.None, scala.None, m.tagEq, m.tagIn).segments
       val ordered = m.specs.collect { case TagRef(tag) => col(tag) }
       segments.select(ordered: _*).distinct()
     } else if (m.bucket.nonEmpty) {
@@ -1736,13 +1733,7 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
     } else if (m.startUs.isEmpty && m.endUs.isEmpty) {
       // No time range: tag equalities and IN-lists prune the denormalized
       // segment relation directly — still metadata-only.
-      val preds =
-        m.tagEq.toSeq.sortBy(_._1).map { case (t, v) => col(t) === v } ++
-          m.tagIn.toSeq.sortBy(_._1).map { case (t, vs) =>
-            col(t).isin(vs.map(v => v: Any): _*)
-          }
-      buildWholeTable(engine, m.meta, m.groupTags, m.specs,
-        preds.reduceOption(_ && _), m.tagEq, m.tagIn)
+      buildWholeTable(engine, m.meta, m.groupTags, m.specs, m.tagEq, m.tagIn)
     } else {
       // Filtered path: route through the engine's structured read — tag
       // equalities and IN-lists stay segment-native prunes, a time range
@@ -1815,10 +1806,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
 
   private def buildWholeTable(
       engine: Engine, meta: TableMetadata, groupTags: Seq[String],
-      specs: Seq[AggSpec],
-      tagPred: Option[org.apache.spark.sql.Column] = scala.None,
-      tagEq: Map[String, String] = Map.empty,
-      tagIn: Map[String, Seq[String]] = Map.empty): DataFrame = {
+      specs: Seq[AggSpec], tagEq: Map[String, String],
+      tagIn: Map[String, Seq[String]]): DataFrame = {
     // Restrict the scan to the aggregated fields' partitions (ingest keeps
     // fields timestamp-aligned, so tag groups are identical across field
     // partitions and the per-field conditionals below are unchanged):
@@ -1830,16 +1819,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       case FieldAgg(_, f, _) => f
       case fe: FieldExprAgg => fe.field
     }.distinct
-    val aggFields =
-      if (fieldAggFields.nonEmpty) fieldAggFields
-      else Seq(meta.fieldColumns.head)
-    val base = engine.dataFolder
-      .segmentsPruned(meta.name, scala.None, scala.None, tagEq, tagIn)
-    val segments0 =
-      if (aggFields.toSet == meta.fieldColumns.toSet) base
-      else base.where(col(SegmentSchema.FieldColumn)
-        .isin(aggFields.map(f => meta.fieldIndex(f): Any): _*))
-    val segments = tagPred.map(segments0.where).getOrElse(segments0)
+    val segments = new SegmentSlice(engine.dataFolder, meta, fieldAggFields,
+      scala.None, scala.None, tagEq, tagIn, extentOnly = true).segments
     val aggCols = specs.collect {
       case FieldAgg(kind, field, outName) =>
         SegmentAggregates.aggColumnFor(kind, meta.fieldIndex(field)).as(outName)

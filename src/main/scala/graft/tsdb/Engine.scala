@@ -342,8 +342,6 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty,
       tsAggregates: Seq[Aggregate] = Seq.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
     require(!aggregates.contains(Aggregate.None),
       "Pass an empty aggregates list for a plain read, not Aggregate.None.")
     require(aggregates.distinct == aggregates,
@@ -352,39 +350,22 @@ final class Engine(val spark: SparkSession, val root: String) {
     val hasAgg = aggregates.nonEmpty || tsAggregates.nonEmpty
     // A ts-extent-only query still needs one field partition scanned (any
     // one: fields are timestamp-aligned, so every partition spans the same
-    // extent) — don't widen to all of them.
-    val selected =
-      if (fields.nonEmpty) fields
-      else if (aggregates.isEmpty && tsAggregates.nonEmpty) Seq(meta.fieldColumns.head)
-      else meta.fieldColumns
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    // extent) — don't widen to all of them. Equality and IN-list tag
+    // filters both prune the segment relation before ANY plan
+    // (segment-native, hybrid, or grid) touches it.
+    val slice = SegmentSlice(dataFolder, table, fields, startTime, endTime,
+      tagFilters, tagInFilters,
+      extentOnly = aggregates.isEmpty && tsAggregates.nonEmpty)
+    val meta = slice.meta
+    val selected = slice.fields
 
-    // Equality and IN-list tag filters both prune the segment relation
-    // before ANY plan (segment-native, hybrid, or grid) touches it.
-    val tagPred: Option[Column] = tagPredicate(tagFilters, tagInFilters)
-
-    val segmentNativeEligible =
-      hasAgg &&
-        startUs.isEmpty && endUs.isEmpty &&
-        groupByTags.forall(meta.tagColumns.contains)
-
-    val hybridEligible =
-      hasAgg &&
-        (startUs.nonEmpty || endUs.nonEmpty) &&
-        groupByTags.forall(meta.tagColumns.contains)
-
-    if (segmentNativeEligible) {
-      segmentNativeAggregate(meta, selected, aggregates, groupByTags, tagPred,
-        tagFilters, tagInFilters, tsAggregates)
-    } else if (hybridEligible) {
-      hybridRangeAggregate(meta, selected, aggregates, groupByTags, tagPred,
-        startUs, endUs, tagFilters, tagInFilters, tsAggregates)
+    if (hasAgg && groupByTags.forall(meta.tagColumns.contains)) {
+      if (slice.ranged)
+        hybridRangeAggregate(slice, aggregates, groupByTags, tsAggregates)
+      else segmentNativeAggregate(slice, aggregates, groupByTags, tsAggregates)
     } else {
-      val segments0 = dataFolder.segmentsPruned(table, startUs, endUs,
-        tagFilters, tagInFilters)
-      val segments = tagPred.map(segments0.where).getOrElse(segments0)
-      val points = GridView.dataPoints(segments, meta, selected, startUs, endUs)
+      val points = GridView.dataPoints(slice.tagFiltered, meta, selected,
+        slice.startUs, slice.endUs)
       if (!hasAgg) points
       else {
         val tsName = meta.timestampColumn
@@ -431,10 +412,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty,
       tsAggregates: Seq[Aggregate] = Seq.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    val bucketUs = Math.addExact(
-      Math.multiplyExact(bucket.getSeconds, 1000000L), bucket.getNano / 1000L)
+    val bucketUs = SegmentSlice.micros(bucket)
     require(bucketUs > 0, "Bucket width must be at least one microsecond.")
     require((aggregates.nonEmpty || tsAggregates.nonEmpty) &&
       !aggregates.contains(Aggregate.None),
@@ -442,34 +420,17 @@ final class Engine(val spark: SparkSession, val root: String) {
     require(aggregates.distinct == aggregates,
       "Duplicate aggregate kinds would produce duplicate output columns.")
     validateTsAggregates(tsAggregates)
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
     require(!groupByTags.contains("bucket"),
       "A group-by tag named 'bucket' would collide with the output bucket column.")
-    val selected =
-      if (fields.nonEmpty) fields
-      else if (aggregates.isEmpty) Seq(meta.fieldColumns.head)
-      else meta.fieldColumns
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, selected))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = SegmentSlice(dataFolder, table, fields, startTime, endTime,
+      tagFilters, tagInFilters, groupByTags, extentOnly = aggregates.isEmpty)
+    val meta = slice.meta
+    val selected = slice.fields
 
     // Epoch-floor bucketing in exact BIGINT arithmetic: x - pmod(x, w) ==
     // floor(x/w)*w for any sign of x, so pre-epoch points keep floor
     // semantics (a double-based floor(x/w) would lose exactness past 2^53).
     def bucketOf(c: Column): Column = c - pmod(c, lit(bucketUs))
-
-    val inRange = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-      endUs.map(hi => col("end_time") <= hi).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val contained =
-      inRange && bucketOf(col("start_time")) === bucketOf(col("end_time"))
 
     // Both sides emit raw partial rows in ONE shape — (tags...,
     // field_column, __graft_bucket, cnt/sum/m2/min/max/tmin/tmax) — merged
@@ -480,23 +441,21 @@ final class Engine(val spark: SparkSession, val root: String) {
     val keys = groupByTags.map(col)
     val withSq = needsSumSq(aggregates)
     val withEdges = needsEdges(aggregates)
-    val interior = interiorPartials(segments.where(contained), keys,
-      Some(bucketOf(col("start_time"))), withSq, withEdges,
-      withSum = needsSum(aggregates))
-    val boundary = GridView.bucketPartials(
-      segments.where(!contained), meta, selected, bucketUs, startUs, endUs,
-      withEdges)
-      .select(keys ++ Seq(
-        col(SegmentSchema.FieldColumn), col("__graft_bucket"),
-        col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
-        col("__bp_min"), col("__bp_max"),
-        col("__bp_tmin"), col("__bp_tmax")) ++
-        (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
-        else Seq.empty): _*)
-
     val mergeAggs = partialMergeAggs(meta, selected, tsAggregates.nonEmpty,
       withSq, withEdges)
-    val combined = interior.unionByName(boundary)
+    val combined = slice.split(slice.contained &&
+        bucketOf(col("start_time")) === bucketOf(col("end_time")))(
+      interiorPartials(_, keys, Some(bucketOf(col("start_time"))), withSq,
+        withEdges, withSum = needsSum(aggregates)),
+      GridView.bucketPartials(_, meta, selected, bucketUs, slice.startUs,
+          slice.endUs, withEdges)
+        .select(keys ++ Seq(
+          col(SegmentSchema.FieldColumn), col("__graft_bucket"),
+          col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
+          col("__bp_min"), col("__bp_max"),
+          col("__bp_tmin"), col("__bp_tmax")) ++
+          (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
+          else Seq.empty): _*))
       .groupBy((keys :+ col("__graft_bucket")): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
 
@@ -530,8 +489,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       fill: FillPolicy = FillPolicy.Nulls): DataFrame = {
     val agg = readTimeSeriesTableBucketed(table, bucket, fields, aggregates,
       groupByTags, startTime, endTime, tagFilters, tagInFilters)
-    val bucketUs = Math.addExact(
-      Math.multiplyExact(bucket.getSeconds, 1000000L), bucket.getNano / 1000L)
+    val bucketUs = SegmentSlice.micros(bucket)
     val keys = groupByTags.map(col)
     val aggColNames = agg.columns.filterNot(groupByTags.contains)
       .filterNot(_ == "bucket").toSeq
@@ -681,8 +639,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
     require(phases >= 1, "A seasonal profile needs at least one phase.")
-    val grainUs = Math.addExact(
-      Math.multiplyExact(grain.getSeconds, 1000000L), grain.getNano / 1000L)
+    val grainUs = SegmentSlice.micros(grain)
     val buckets = readTimeSeriesTableBucketed(table, grain, Seq(field),
       Seq(Aggregate.Count, Aggregate.Sum, Aggregate.Min, Aggregate.Max),
       groupByTags, startTime, endTime, tagFilters, tagInFilters)
@@ -777,21 +734,13 @@ final class Engine(val spark: SparkSession, val root: String) {
       groupByTags: Seq[String] = Seq.empty,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
-    val thresholdUs = Math.addExact(
-      Math.multiplyExact(threshold.getSeconds, 1000000L),
-      threshold.getNano / 1000L)
-
     // Timestamps are write-aligned across fields: one field partition
     // carries the full time axis of every series.
-    val segments0 = dataFolder
-      .segmentsPruned(table, scala.None, scala.None, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(meta.fieldColumns.head)))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = SegmentSlice(dataFolder, table, tagFilters = tagFilters,
+      tagInFilters = tagInFilters, groupByTags = groupByTags,
+      extentOnly = true)
+    val meta = slice.meta
+    val thresholdUs = SegmentSlice.micros(threshold)
 
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.ColumnBridge
@@ -803,7 +752,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       .orderBy(col("start_time"))
     // Chained select: CollapseProject must not inline (re-decode) the
     // struct kernel once per extracted field.
-    val perSegment = segments
+    val perSegment = slice.segments
       .select((meta.tagColumns.map(col) :+ col("start_time") :+
         col("end_time") :+ gaps.as("__g")): _*)
       .select((meta.tagColumns.map(col) :+ col("start_time") :+
@@ -846,42 +795,16 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
-
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
     val keys = groupByTags.map(col)
-    val partials =
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(keys ++ Seq(
-          SegmentAggregates.countInRangeCol(lower, upper).as("__tc_in"),
-          SegmentAggregates.lenCol.as("__tc_n")): _*)
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        val interior = segments.where(contained).select(keys ++ Seq(
-          SegmentAggregates.countInRangeCol(lower, upper).as("__tc_in"),
-          SegmentAggregates.lenCol.as("__tc_n")): _*)
-        val boundary = segments.where(!contained).select(keys ++ Seq(
-          SegmentAggregates.countInRangeClippedCol(lower, upper, tsLo, tsHi)
-            .as("__tc_in"),
-          SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__tc_n")): _*)
-        interior.unionByName(boundary)
-      }
+    val partials = slice.partials(keys) { clip =>
+      Seq(clip.fold(SegmentAggregates.countInRangeCol(lower, upper)) {
+          case (lo, hi) =>
+            SegmentAggregates.countInRangeClippedCol(lower, upper, lo, hi)
+        }.as("__tc_in"),
+        SegmentSlice.lenOf(clip).as("__tc_n"))
+    }
     val aggs = Seq(
       coalesce(sum(col("__tc_in")), lit(0L)).as(s"count_in_$field"),
       coalesce(sum(col("__tc_n")), lit(0L)).as(s"count_$field"))
@@ -925,40 +848,14 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
     require(intervals.nonEmpty, "thresholdStatsMulti needs intervals")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
-
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
     val keys = groupByTags.map(col)
-    val partials =
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(keys :+
-          SegmentAggregates.statsInRangesCol(intervals).as("__ts_st"): _*)
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        val interior = segments.where(contained).select(keys :+
-          SegmentAggregates.statsInRangesCol(intervals).as("__ts_st"): _*)
-        val boundary = segments.where(!contained).select(keys :+
-          SegmentAggregates.statsInRangesCol(intervals, tsLo, tsHi)
-            .as("__ts_st"): _*)
-        interior.unionByName(boundary)
-      }
+    val partials = slice.partials(keys) { clip =>
+      val (lo, hi) = SegmentSlice.window(clip)
+      Seq(SegmentAggregates.statsInRangesCol(intervals, lo, hi).as("__ts_st"))
+    }
     val grouped = aggregateStatsPartials(partials, keys, field)
     grouped.withColumn(s"avg_in_$field",
       col(s"sum_in_$field") / col(s"count_in_$field").cast("double"))
@@ -1024,62 +921,42 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
     require(!groupByTags.contains("bucket"),
       "A group-by tag named 'bucket' would collide with the output column.")
-    val bucketUs = Math.addExact(
-      Math.multiplyExact(bucket.getSeconds, 1000000L), bucket.getNano / 1000L)
+    val bucketUs = SegmentSlice.micros(bucket)
     require(bucketUs > 0, "Bucket width must be at least one microsecond.")
     val up = upper.getOrElse(Double.NaN)
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
+    val (tsLo, tsHi) = slice.clip
 
     // Epoch-floor bucketing in exact BIGINT arithmetic (see
     // readTimeSeriesTableBucketed).
     def bucketOf(c: Column): Column = c - pmod(c, lit(bucketUs))
-    val inRange = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-      endUs.map(hi => col("end_time") <= hi).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val contained =
-      inRange && bucketOf(col("start_time")) === bucketOf(col("end_time"))
-
     val keys = groupByTags.map(col)
-    val interior = segments.where(contained).select(keys ++ Seq(
-      bucketOf(col("start_time")).as("__graft_bucket"),
-      SegmentAggregates.statsInRangeCol(lower, up).as("__ts_st")): _*)
     // Straddlers: enumerate overlapped buckets clipped to the outer
     // range, then clip each kernel to its bucket ∩ range window.
-    val clipLo = startUs
+    val clipLo = slice.startUs
       .map(l => greatest(col("start_time"), lit(l)))
       .getOrElse(col("start_time"))
-    val clipHi = endUs
+    val clipHi = slice.endUs
       .map(h => least(col("end_time"), lit(h)))
       .getOrElse(col("end_time"))
-    val straddling = segments.where(!contained)
-      .withColumn("__graft_bucket",
-        explode(sequence(bucketOf(clipLo), bucketOf(clipHi),
-          lit(bucketUs))))
-      .select(keys ++ Seq(
-        col("__graft_bucket"),
-        SegmentAggregates.statsInRangeDynCol(lower, up,
-          greatest(col("__graft_bucket"),
-            lit(startUs.getOrElse(Long.MinValue))),
-          least(col("__graft_bucket") + lit(bucketUs - 1L),
-            lit(endUs.getOrElse(Long.MaxValue)))).as("__ts_st")): _*)
-    aggregateStatsPartials(interior.unionByName(straddling),
-      keys :+ col("__graft_bucket"), field)
+    val partials = slice.split(slice.contained &&
+        bucketOf(col("start_time")) === bucketOf(col("end_time")))(
+      _.select(keys ++ Seq(
+        bucketOf(col("start_time")).as("__graft_bucket"),
+        SegmentAggregates.statsInRangeCol(lower, up).as("__ts_st")): _*),
+      _.withColumn("__graft_bucket",
+          explode(sequence(bucketOf(clipLo), bucketOf(clipHi),
+            lit(bucketUs))))
+        .select(keys ++ Seq(
+          col("__graft_bucket"),
+          SegmentAggregates.statsInRangeDynCol(lower, up,
+            greatest(col("__graft_bucket"), lit(tsLo)),
+            least(col("__graft_bucket") + lit(bucketUs - 1L), lit(tsHi)))
+            .as("__ts_st")): _*))
+    aggregateStatsPartials(partials, keys :+ col("__graft_bucket"), field)
       .withColumn("bucket", timestamp_micros(col("__graft_bucket")))
       .drop("__graft_bucket")
       .select((keys :+ col("bucket")) ++ Seq(
@@ -1113,7 +990,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     require(meta.fieldColumns.contains(field),
       s"$field is not a stored field of $table.")
     val segs = dataFolder.segmentsStream(table, maxVersionsPerTrigger)
-      .where(fieldColumnPredicate(meta, Seq(field)))
+      .where(SegmentSlice.fieldColumnPredicate(meta, Seq(field)))
     val st = SegmentAggregates
       .statsInRangeCol(lower, upper.getOrElse(Double.NaN))
     val keys = window(col("__seg_end"), windowDuration) +:
@@ -1131,6 +1008,25 @@ final class Engine(val spark: SparkSession, val root: String) {
         max(col("__ts_st").getField("mx")).as(s"max_in_$field"))
   }
 
+  /** The slice of `field` broadcast-joined with a per-group `bounds` frame
+    * (tags…, lower, upper) on the bounds' tag columns, which are returned
+    * as the partials' keys.
+    */
+  private def joinBounds(table: String, field: String, bounds: DataFrame,
+      startTime: Option[java.time.Instant], endTime: Option[java.time.Instant],
+      tagFilters: Map[String, String], tagInFilters: Map[String, Seq[String]])
+      : (SegmentSlice, Seq[Column], DataFrame) = {
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters)
+    val joinTags = bounds.columns.filter(slice.meta.tagColumns.contains).toSeq
+    require(joinTags.nonEmpty, "bounds must carry at least one tag column.")
+    require(bounds.columns.toSet == (joinTags ++ Seq("lower", "upper")).toSet,
+      "bounds columns must be (tags..., lower, upper).")
+    (slice, joinTags.map(col), slice.segments.join(broadcast(bounds
+      .withColumn("lower", col("lower").cast("double"))
+      .withColumn("upper", col("upper").cast("double"))), joinTags))
+  }
+
   /** [[thresholdStats]] with PER-GROUP bounds: `bounds` carries some of
     * the table's tag columns plus `lower`/`upper` (doubles; NULL =
     * unbounded, upper semantics as in [[thresholdStats]]), broadcast-joins
@@ -1146,46 +1042,13 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    val joinTags = bounds.columns.filter(meta.tagColumns.contains).toSeq
-    require(joinTags.nonEmpty, "bounds must carry at least one tag column.")
-    require(bounds.columns.toSet == (joinTags ++ Seq("lower", "upper")).toSet,
-      "bounds columns must be (tags..., lower, upper).")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
-      .join(broadcast(bounds
-        .withColumn("lower", col("lower").cast("double"))
-        .withColumn("upper", col("upper").cast("double"))), joinTags)
-
-    val keys = joinTags.map(col)
-    val partials =
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(keys :+
-          SegmentAggregates.statsBetweenCol(lowerInclusive,
-            col("lower"), col("upper")).as("__ts_st"): _*)
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        val interior = segments.where(contained).select(keys :+
-          SegmentAggregates.statsBetweenCol(lowerInclusive,
-            col("lower"), col("upper")).as("__ts_st"): _*)
-        val boundary = segments.where(!contained).select(keys :+
-          SegmentAggregates.statsBetweenCol(lowerInclusive,
-            col("lower"), col("upper"), tsLo, tsHi).as("__ts_st"): _*)
-        interior.unionByName(boundary)
-      }
+    val (slice, keys, joined) = joinBounds(table, field, bounds, startTime,
+      endTime, tagFilters, tagInFilters)
+    val partials = slice.partials(keys, joined) { clip =>
+      val (lo, hi) = SegmentSlice.window(clip)
+      Seq(SegmentAggregates.statsBetweenCol(lowerInclusive,
+        col("lower"), col("upper"), lo, hi).as("__ts_st"))
+    }
     aggregateStatsPartials(partials, keys, field)
   }
 
@@ -1239,43 +1102,22 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagInFilters: Map[String, Seq[String]] = Map.empty,
       sparkFloorBins: Boolean = false): DataFrame = {
     require(width > 0, "Histogram width must be positive.")
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
-
-    val contained: Column =
-      if (startUs.isEmpty && endUs.isEmpty) lit(true)
-      else (startUs.map(lo => col("start_time") >= lo).toSeq ++
-        endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-    val fastEligible = contained &&
-      SegmentAggregates.singleBinCol(origin, width)
-
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
     val keys = groupByTags.map(col)
-    val fast = segments.where(fastEligible).select(keys ++ Seq(
-      SegmentAggregates.binCol(col("min_value"), origin, width)
-        .as("__vh_bin"),
-      SegmentAggregates.lenCol.as("__vh_cnt")): _*)
     import org.apache.spark.sql.graft.ColumnBridge
     def attr(name: String) = ColumnBridge.expression(col(name))
-    val slow = segments.where(!fastEligible).select(
-      (ColumnBridge.column(HistogramBins(origin, width, startUs, endUs,
+    val merged = slice.split(
+        slice.contained && SegmentAggregates.singleBinCol(origin, width))(
+      _.select(keys ++ Seq(
+        SegmentAggregates.binCol(col("min_value"), origin, width)
+          .as("__vh_bin"),
+        SegmentAggregates.lenCol.as("__vh_cnt")): _*),
+      _.select((ColumnBridge.column(HistogramBins(origin, width,
+        slice.startUs, slice.endUs,
         attr("model_type_id"), attr("start_time"), attr("end_time"),
         attr("timestamps"), attr("min_value"), attr("max_value"),
-        attr("values"), attr("residuals"), sparkFloorBins)) +: keys): _*)
-
-    val merged = fast.unionByName(slow)
+        attr("values"), attr("residuals"), sparkFloorBins)) +: keys): _*))
     merged.groupBy(keys :+ col("__vh_bin"): _*)
       .agg(sum(col("__vh_cnt")).as(s"count_$field"))
       .withColumnRenamed("__vh_bin", "bin")
@@ -1286,47 +1128,23 @@ final class Engine(val spark: SparkSession, val root: String) {
     * exact-quantile bisection: each refinement round costs one metadata
     * job no matter how many quantiles are being located.
     */
-  private def countAboveMulti(meta: TableMetadata, field: String,
-      lowers: Seq[Double], startUs: Option[Long], endUs: Option[Long],
-      tagEq: Map[String, String],
-      tagIn: Map[String, Seq[String]]): (Seq[Long], Long, Float, Float) = {
-    val segments0 = dataFolder
-      .segmentsPruned(meta.name, startUs, endUs, tagEq, tagIn)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagEq, tagIn)
-      .map(segments0.where).getOrElse(segments0)
+  private def countAboveMulti(slice: SegmentSlice,
+      lowers: Seq[Double]): (Seq[Long], Long, Float, Float) = {
     // ONE array-valued kernel per segment answers every threshold from a
     // shared traversal (bounds classify most without decode); the element
     // extraction sits in a CHAINED projection so CollapseProject cannot
     // inline (re-evaluate) the kernel per element.
     import org.apache.spark.sql.graft.ColumnBridge
     def attr(name: String) = ColumnBridge.expression(col(name))
-    def arrCol(tsLo: Long, tsHi: Long) = ColumnBridge.column(
-      SegmentCountAboveMulti(lowers, tsLo, tsHi,
-        attr("model_type_id"), attr("start_time"), attr("end_time"),
-        attr("timestamps"), attr("min_value"), attr("max_value"),
-        attr("values"), attr("residuals")))
-    val raw =
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(arrCol(Long.MinValue, Long.MaxValue).as("__arr"),
-          SegmentAggregates.lenCol.as("__n"),
-          col("min_value").as("__mn"), col("max_value").as("__mx"))
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        val interior = segments.where(contained).select(
-          arrCol(Long.MinValue, Long.MaxValue).as("__arr"),
-          SegmentAggregates.lenCol.as("__n"),
-          col("min_value").as("__mn"), col("max_value").as("__mx"))
-        val boundary = segments.where(!contained).select(
-          arrCol(tsLo, tsHi).as("__arr"),
-          SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__n"),
-          col("min_value").as("__mn"), col("max_value").as("__mx"))
-        interior.unionByName(boundary)
-      }
+    val raw = slice.partials(Seq.empty) { clip =>
+      val (lo, hi) = SegmentSlice.window(clip)
+      Seq(ColumnBridge.column(SegmentCountAboveMulti(lowers, lo, hi,
+          attr("model_type_id"), attr("start_time"), attr("end_time"),
+          attr("timestamps"), attr("min_value"), attr("max_value"),
+          attr("values"), attr("residuals"))).as("__arr"),
+        SegmentSlice.lenOf(clip).as("__n"),
+        col("min_value").as("__mn"), col("max_value").as("__mx"))
+    }
     // The stored-bounds extent rides along free (used for quantile
     // brackets; a NaN-poisoned max just degrades to the full-range
     // bracket, never to a wrong answer — the verify pass guards).
@@ -1370,23 +1188,16 @@ final class Engine(val spark: SparkSession, val root: String) {
     require(qs.nonEmpty, "At least one quantile is required.")
     require(qs.forall(q => q > 0.0 && q <= 1.0),
       "Quantiles must be in (0, 1].")
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters)
     import graft.core.ValueCounts.{floatFromKey, totalOrderKey}
 
-    def probes(xs: Seq[Double]): Seq[Long] =
-      countAboveMulti(meta, field, xs, startUs, endUs, tagFilters,
-        tagInFilters)._1
+    def probes(xs: Seq[Double]): Seq[Long] = countAboveMulti(slice, xs)._1
 
     // Tail census in one job: total n via the -Inf probe's companion
     // count, NaN count (only NaN is > +Inf), and the -Inf count.
-    val (tails, n, mn, mx) = countAboveMulti(meta, field,
-      Seq(Double.NegativeInfinity, Double.PositiveInfinity),
-      startUs, endUs, tagFilters, tagInFilters)
+    val (tails, n, mn, mx) = countAboveMulti(slice,
+      Seq(Double.NegativeInfinity, Double.PositiveInfinity))
     if (n == 0L) return qs.map(q => (q, Float.NaN))
     val negInfCount = n - tails.head
     val nanCount = tails(1)
@@ -1448,15 +1259,10 @@ final class Engine(val spark: SparkSession, val root: String) {
         active(k) = (bLo, bHi, bHi == fullHi)
       }
     }
-    val qDebug = sys.env.contains("SPARK_GRAFT_LADDER_DEBUG")
     def bisect(maxRounds: Int): Unit = {
       var rounds = 0
       while (active.nonEmpty && rounds < maxRounds) {
         rounds += 1
-        if (qDebug) System.err.println(s"[quantile] round $rounds: " +
-          active.toSeq.sortBy(_._1).map { case (k, (lo, hi, c)) =>
-            s"k=$k span=${hi - lo}${if (c) "" else " unconfirmed"}"
-          }.mkString(", "))
         // 16-way ladder per quantile per round: each probe element is one
         // slot of the shared [[SegmentCountAboveMulti]] ARRAY kernel, so
         // widening the fan grows an array literal, not the job count —
@@ -1654,15 +1460,9 @@ final class Engine(val spark: SparkSession, val root: String) {
          Map[(Seq[String], Long), Float]) = {
     // groupByTags may be EMPTY: the whole table is then one group with
     // key Nil (used by the percentile SQL splice for global medians).
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
     require(rankSpecs.nonEmpty, "exactRanksBy needs at least one rank spec.")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
     import graft.core.ValueCounts.totalOrderKey
     val fullLo = totalOrderKey(Float.NegativeInfinity)
     val fullHi = totalOrderKey(Float.PositiveInfinity)
@@ -1690,40 +1490,19 @@ final class Engine(val spark: SparkSession, val root: String) {
     // every bisection round, verification): cache it once, spill-safe —
     // on a cluster this pins each executor's slice hot across rounds
     // instead of re-reading parquet per round.
-    val segCached = {
-      val segments0 = dataFolder
-        .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-        .where(fieldColumnPredicate(meta, Seq(field)))
-        .where(GridView.segmentTimePredicate(startUs, endUs))
-      withKey(tagPredicate(tagFilters, tagInFilters)
-        .map(segments0.where).getOrElse(segments0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    def prunedSegments() = segCached
+    val segCached = withKey(slice.segments)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    /** Per-segment kernel partials with the shared contained/straddler
-      * time clipping, selecting `keys ++ arr ++ extra`.
+    /** Per-segment kernel partials `keys ++ (__arr, __n) ++ extra` of
+      * `segments` with the slice's contained/straddler time clipping.
       */
     def partialsOf(arrOf: (Long, Long) => Column,
-        extra: Seq[Column], segments: DataFrame): DataFrame = {
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(keys ++ Seq(
-          arrOf(Long.MinValue, Long.MaxValue).as("__arr"),
-          SegmentAggregates.lenCol.as("__n")) ++ extra: _*)
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        segments.where(contained).select(keys ++ Seq(
-          arrOf(Long.MinValue, Long.MaxValue).as("__arr"),
-          SegmentAggregates.lenCol.as("__n")) ++ extra: _*)
-          .unionByName(segments.where(!contained).select(keys ++ Seq(
-            arrOf(tsLo, tsHi).as("__arr"),
-            SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__n")) ++
-            extra: _*))
+        extra: Seq[Column], segments: DataFrame): DataFrame =
+      slice.partials(keys, segments) { clip =>
+        val (lo, hi) = SegmentSlice.window(clip)
+        Seq(arrOf(lo, hi).as("__arr"), SegmentSlice.lenOf(clip).as("__n")) ++
+          extra
       }
-    }
 
     // Grouped census as a DataFrame — never collected until the final
     // answer: per group n, the -Inf head, the NaN tail, and the stored
@@ -1737,7 +1516,7 @@ final class Engine(val spark: SparkSession, val root: String) {
         attrOf("values"), attrOf("residuals")))
     val censusParts = partialsOf(censusArr,
       Seq(col("min_value").as("__mn"), col("max_value").as("__mx")),
-      prunedSegments())
+      segCached)
     val censusDf = censusParts
       .select(keys ++ Seq(
         element_at(col("__arr"), 1).as("__gt_neginf"),
@@ -1771,18 +1550,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     // the sorted-threshold accumulator keeps each decoded value
     // O(log width) regardless), and the reduction is ONE LongVectorSum
     // column, so planning cost is width-independent.
-    val ladderDebug = sys.env.contains("SPARK_GRAFT_LADDER_DEBUG")
-    def debugPhase[T](label: String)(body: => T): T = {
-      if (!ladderDebug) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(
-          s"[ladder] $label ${(System.nanoTime() - t0) / 1000000L} ms")
-        r
-      }
-    }
-    val nGroups = debugPhase("census")(math.max(1L, censusDf.count()))
+    val nGroups = math.max(1L, censusDf.count())
     // Fan cap measured at the knee (round 15): 4096 cuts one narrowing
     // round but the wider kernel pass costs more than the round saves
     // (ts_sql_median 4.2 s → 5.7 s); 2048 stands.
@@ -1843,9 +1611,9 @@ final class Engine(val spark: SparkSession, val root: String) {
       * explode, no per-slot codegen columns.
       */
     def probeCounts(pointsDf: DataFrame, probeWidth: Int = width,
-        slice: Int = fan.toInt): DataFrame = {
+        block: Int = fan.toInt): DataFrame = {
       // One probe array per group, each rank's points at its fixed slot
-      // block __r·slice, all unused slots +Inf (the kernel's cheapest
+      // block __r·block, all unused slots +Inf (the kernel's cheapest
       // threshold) — compiled assembly from one collect_list. Join
       // strategy is left to AQE: an explicit broadcast() hint here costs
       // a blocking driver collect per round, while AQE's runtime stats
@@ -1854,9 +1622,9 @@ final class Engine(val spark: SparkSession, val root: String) {
       val probes = pointsDf.groupBy(keys: _*).agg(
         collect_list(struct(col("__r"), col("pts"))).as("__sl"))
         .select(keys :+ ColumnBridge.column(ProbeXsExpr(
-          ColumnBridge.expression(col("__sl")), probeWidth, slice))
+          ColumnBridge.expression(col("__sl")), probeWidth, block))
           .as("__xs"): _*)
-      val segments = prunedSegments().join(probes, keyNames)
+      val segments = segCached.join(probes, keyNames)
       val dynArr = (tsLo: Long, tsHi: Long) => ColumnBridge.column(
         SegmentCountAboveMultiDyn(tsLo, tsHi, attrOf("__xs"),
           attrOf("model_type_id"), attrOf("start_time"), attrOf("end_time"),
@@ -1867,7 +1635,7 @@ final class Engine(val spark: SparkSession, val root: String) {
         ColumnBridge.column(LongVectorSum(
           ColumnBridge.expression(col("__arr")), probeWidth)
           .toAggregateExpression()).as("__cnts"))
-      pointsDf.withColumn("__off", col("__r").cast("long") * lit(slice.toLong))
+      pointsDf.withColumn("__off", col("__r").cast("long") * lit(block.toLong))
         .join(counts, keyNames)
     }
 
@@ -1893,13 +1661,11 @@ final class Engine(val spark: SparkSession, val root: String) {
     // 3.5 s → 5.1 s). The active-row count rides the materializing job
     // itself ([[localCheckpointCountingNulls]]) — one job per round, not
     // checkpoint-count + count.
-    var (state, act) = debugPhase("state0")(
-      localCheckpointCountingNulls(state0, "res"))
+    var (state, act) = localCheckpointCountingNulls(state0, "res")
     def bisect(maxRounds: Int): Unit = {
       var r = 0
       while (act > 0 && r < maxRounds) {
         r += 1
-        val t0 = System.nanoTime()
         val pointsDf = state.where(col("res").isNull)
           .withColumn("pts", ptsExpr)
           .select(keys ++ Seq(col("k"), col("__r"), col("n"), col("lo"),
@@ -1934,9 +1700,6 @@ final class Engine(val spark: SparkSession, val root: String) {
           state.where(col("res").isNotNull).unionByName(updActive), "res")
         act = nextAct
         state = next
-        if (ladderDebug) System.err.println(
-          s"[ladder] round $r: active=$act " +
-            s"${(System.nanoTime() - t0) / 1000000L} ms")
       }
       require(act == 0L, "Grouped quantile bisection failed to converge.")
     }
@@ -1950,7 +1713,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     val finite = state.where(col("res").isNotNull && !isnan(col("res")) &&
       col("res") =!= lit(Float.NegativeInfinity) &&
       col("res") =!= lit(Float.PositiveInfinity) && !col("prov"))
-    if (debugPhase("verify-gate")(finite.limit(1).count()) > 0) {
+    if (finite.limit(1).count() > 0) {
       val vPoints = finite
         .withColumn("pts", array(floatToKey(col("res")),
           greatest(lit(fullLo), floatToKey(col("res")) - 1L)))
@@ -1983,21 +1746,19 @@ final class Engine(val spark: SparkSession, val root: String) {
     // The ONLY O(groups) driver materialization: the answer itself, the
     // size the callers return anyway.
     val t = groupByTags.length
-    val stats: Map[Seq[String], (Long, Long, Long)] = debugPhase("collect")(
-      censusDf
-        .select(groupByTags.map(col) ++
-          Seq(col("n"), col("negInf"), col("nan")): _*)
-        .collect().map { r =>
-          val g: Seq[String] = List.tabulate(t)(r.getString)
-          (g, (r.getLong(t), r.getLong(t + 1), r.getLong(t + 2)))
-        }.toMap)
-    val resolved: Map[(Seq[String], Long), Float] = debugPhase("collect2")(
-      state
-        .select(groupByTags.map(col) ++ Seq(col("k"), col("res")): _*)
-        .collect().map { r =>
-          val g: Seq[String] = List.tabulate(t)(r.getString)
-          ((g, r.getLong(t)), r.getFloat(t + 1))
-        }.toMap)
+    val stats: Map[Seq[String], (Long, Long, Long)] = censusDf
+      .select(groupByTags.map(col) ++
+        Seq(col("n"), col("negInf"), col("nan")): _*)
+      .collect().map { r =>
+        val g: Seq[String] = List.tabulate(t)(r.getString)
+        (g, (r.getLong(t), r.getLong(t + 1), r.getLong(t + 2)))
+      }.toMap
+    val resolved: Map[(Seq[String], Long), Float] = state
+      .select(groupByTags.map(col) ++ Seq(col("k"), col("res")): _*)
+      .collect().map { r =>
+        val g: Seq[String] = List.tabulate(t)(r.getString)
+        ((g, r.getLong(t)), r.getFloat(t + 1))
+      }.toMap
     censusDf.unpersist(false)
     segCached.unpersist(false)
     (stats, resolved)
@@ -2018,49 +1779,14 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    val joinTags = bounds.columns.filter(meta.tagColumns.contains).toSeq
-    require(joinTags.nonEmpty, "bounds must carry at least one tag column.")
-    require(bounds.columns.toSet == (joinTags ++ Seq("lower", "upper")).toSet,
-      "bounds columns must be (tags..., lower, upper).")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
-      .join(broadcast(bounds
-        .withColumn("lower", col("lower").cast("double"))
-        .withColumn("upper", col("upper").cast("double"))), joinTags)
-
-    val keys = joinTags.map(col)
-    val partials =
-      if (startUs.isEmpty && endUs.isEmpty)
-        segments.select(keys ++ Seq(
-          SegmentAggregates.countBetweenCol(col("lower"), col("upper"))
-            .as("__tc_in"),
-          SegmentAggregates.lenCol.as("__tc_n")): _*)
-      else {
-        val tsLo = startUs.getOrElse(Long.MinValue)
-        val tsHi = endUs.getOrElse(Long.MaxValue)
-        val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-          endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        val interior = segments.where(contained).select(keys ++ Seq(
-          SegmentAggregates.countBetweenCol(col("lower"), col("upper"))
-            .as("__tc_in"),
-          SegmentAggregates.lenCol.as("__tc_n")): _*)
-        val boundary = segments.where(!contained).select(keys ++ Seq(
-          SegmentAggregates.countBetweenCol(col("lower"), col("upper"),
-            tsLo, tsHi).as("__tc_in"),
-          SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__tc_n")): _*)
-        interior.unionByName(boundary)
-      }
+    val (slice, keys, joined) = joinBounds(table, field, bounds, startTime,
+      endTime, tagFilters, tagInFilters)
+    val partials = slice.partials(keys, joined) { clip =>
+      val (lo, hi) = SegmentSlice.window(clip)
+      Seq(SegmentAggregates.countBetweenCol(col("lower"), col("upper"), lo, hi)
+          .as("__tc_in"),
+        SegmentSlice.lenOf(clip).as("__tc_n"))
+    }
     partials.groupBy(keys: _*).agg(
       coalesce(sum(col("__tc_in")), lit(0L)).as(s"count_in_$field"),
       coalesce(sum(col("__tc_n")), lit(0L)).as(s"count_$field"))
@@ -2111,32 +1837,20 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, Seq(field)))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
+      endTime, tagFilters, tagInFilters, groupByTags)
+    val segments = slice.segments
 
     // Centering epoch: the range start when given, else the first point's
     // timestamp (min segment start_time — exact, metadata-only).
-    val t0 = startUs.getOrElse {
+    val t0 = slice.startUs.getOrElse {
       val r = segments.agg(min(col("start_time"))).collect().head
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
     import org.apache.spark.sql.graft.ColumnBridge
     def attr(name: String) = ColumnBridge.expression(col(name))
-    val arr = ColumnBridge.column(SegmentRegressionSums(t0,
-      startUs.getOrElse(Long.MinValue), endUs.getOrElse(Long.MaxValue),
+    val (tsLo, tsHi) = slice.clip
+    val arr = ColumnBridge.column(SegmentRegressionSums(t0, tsLo, tsHi,
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))
@@ -2198,8 +1912,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     require(meta.isTimeSeries, s"$table is not a time series table.")
     require(meta.fieldColumns.contains(field),
       s"$field is not a stored field of $table.")
-    val bucketUs = Math.addExact(
-      Math.multiplyExact(bucket.getSeconds, 1000000L), bucket.getNano / 1000L)
+    val bucketUs = SegmentSlice.micros(bucket)
     require(bucketUs > 0, "Bucket width must be at least one microsecond.")
     val tags = meta.tagColumns
     val tsName = meta.timestampColumn
@@ -2279,8 +1992,6 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty,
       tsAggregates: Seq[Aggregate] = Seq.empty): DataFrame = {
-    val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
     val normalized = unit.toUpperCase(java.util.Locale.ROOT)
     require(Engine.TruncUnits.contains(normalized),
       s"Unsupported truncation unit '$unit' (one of ${Engine.TruncUnits.mkString(", ")}).")
@@ -2291,23 +2002,12 @@ final class Engine(val spark: SparkSession, val root: String) {
     require(aggregates.distinct == aggregates,
       "Duplicate aggregate kinds would produce duplicate output columns.")
     validateTsAggregates(tsAggregates)
-    require(groupByTags.forall(meta.tagColumns.contains),
-      s"Group-by columns must be tags of $table.")
     require(!groupByTags.contains("bucket"),
       "A group-by tag named 'bucket' would collide with the output bucket column.")
-    val selected =
-      if (fields.nonEmpty) fields
-      else if (aggregates.isEmpty) Seq(meta.fieldColumns.head)
-      else meta.fieldColumns
-    val startUs = startTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    val endUs = endTime.map(i => i.getEpochSecond * 1000000L + i.getNano / 1000L)
-
-    val segments0 = dataFolder
-      .segmentsPruned(table, startUs, endUs, tagFilters, tagInFilters)
-      .where(fieldColumnPredicate(meta, selected))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPredicate(tagFilters, tagInFilters)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = SegmentSlice(dataFolder, table, fields, startTime, endTime,
+      tagFilters, tagInFilters, groupByTags, extentOnly = aggregates.isEmpty)
+    val meta = slice.meta
+    val selected = slice.fields
 
     // The truncation applied to a micros-epoch Long column, yielding the
     // bucket start as micros again. Built as a raw TruncTimestamp carrying
@@ -2319,9 +2019,6 @@ final class Engine(val spark: SparkSession, val root: String) {
         ColumnBridge.expression(timestamp_micros(c)), Some(zone))))
     }
 
-    val inRange = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-      endUs.map(hi => col("end_time") <= hi).toSeq)
-      .reduceOption(_ && _).getOrElse(lit(true))
     // Equal truncated bounds prove containment only where the truncation
     // is monotonic over the segment's span — true for any fixed-offset
     // zone, but a DST (or historical-offset) transition INSIDE the span
@@ -2340,7 +2037,7 @@ final class Engine(val spark: SparkSession, val root: String) {
         Seq(col("end_time") - col("start_time") < gap,
           offsetOf(col("start_time")) === offsetOf(col("end_time")))
     }
-    val contained = (Seq(inRange,
+    val contained = (Seq(slice.contained,
       truncOf(col("start_time")) === truncOf(col("end_time"))) ++
       safetyPreds).reduce(_ && _)
 
@@ -2350,11 +2047,12 @@ final class Engine(val spark: SparkSession, val root: String) {
     val keys = groupByTags.map(col)
     val withSq = needsSumSq(aggregates)
     val withEdges = needsEdges(aggregates)
-    val interior = interiorPartials(segments.where(contained), keys,
-      Some(truncOf(col("start_time"))), withSq, withEdges,
-      withSum = needsSum(aggregates))
-    val boundary = GridView
-      .explodedPoints(segments.where(!contained), meta, selected, startUs, endUs)
+    val mergeAggs = partialMergeAggs(meta, selected, tsAggregates.nonEmpty,
+      withSq, withEdges)
+    val combined = slice.split(contained)(
+      interiorPartials(_, keys, Some(truncOf(col("start_time"))), withSq,
+        withEdges, withSum = needsSum(aggregates)),
+      GridView.explodedPoints(_, meta, selected, slice.startUs, slice.endUs)
       .select(keys ++ Seq(
         col(SegmentSchema.FieldColumn),
         truncOf(col("__graft_ts")).as("__graft_bucket"),
@@ -2368,11 +2066,7 @@ final class Engine(val spark: SparkSession, val root: String) {
         (if (withEdges) Seq(
           col("__graft_value").as("__bp_vfirst"),
           col("__graft_value").as("__bp_vlast"))
-        else Seq.empty): _*)
-
-    val mergeAggs = partialMergeAggs(meta, selected, tsAggregates.nonEmpty,
-      withSq, withEdges)
-    val combined = interior.unionByName(boundary)
+        else Seq.empty): _*))
       .groupBy((keys :+ col("__graft_bucket")): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
 
@@ -2380,15 +2074,6 @@ final class Engine(val spark: SparkSession, val root: String) {
       timestamp_micros(col("__graft_bucket")).as("bucket")) ++
       finalAggColumns(aggregates, selected, tsAggregates, meta.timestampColumn): _*)
   }
-
-  /** Partition predicate selecting exactly the aggregated fields'
-    * `field_column` directories (all-fields = no restriction needed).
-    */
-  private def fieldColumnPredicate(meta: TableMetadata,
-      fields: Seq[String]): Column =
-    if (fields.toSet == meta.fieldColumns.toSet) lit(true)
-    else col(SegmentSchema.FieldColumn)
-      .isin(fields.map(f => meta.fieldIndex(f): Any): _*)
 
   private def gridAggColumn(agg: Aggregate, f: String,
       tsName: String = "ts"): Column = {
@@ -2429,17 +2114,6 @@ final class Engine(val spark: SparkSession, val root: String) {
     case Aggregate.Last => "last"
     case Aggregate.None => throw new IllegalArgumentException("not an aggregate")
   }
-
-  /** Equality and IN-list tag filters as one predicate over the segment
-    * relation (tags are denormalized into every segment row); sorted for a
-    * deterministic predicate order.
-    */
-  private def tagPredicate(tagEq: Map[String, String],
-      tagIn: Map[String, Seq[String]]): Option[Column] =
-    (tagEq.toSeq.sortBy(_._1).map { case (k, v) => col(k) === v } ++
-      tagIn.toSeq.sortBy(_._1).map { case (k, vs) =>
-        col(k).isin(vs.map(v => v: Any): _*)
-      }).reduceOption(_ && _)
 
   /** Only Min/Max make sense for the timestamp column (its count equals
     * the row count, its sum is meaningless).
@@ -2617,24 +2291,18 @@ final class Engine(val spark: SparkSession, val root: String) {
     * aggregate kinds are emitted from the same aggregation — one job, one
     * segment scan, however many kinds are asked for.
     */
-  private def segmentNativeAggregate(
-      meta: TableMetadata, fields: Seq[String], aggregates: Seq[Aggregate],
-      groupByTags: Seq[String], tagPred: Option[Column],
-      tagEq: Map[String, String] = Map.empty,
-      tagIn: Map[String, Seq[String]] = Map.empty,
-      tsAggregates: Seq[Aggregate] = Seq.empty): DataFrame = {
-    // Restrict to the aggregated fields' partitions FIRST: the per-field
-    // conditional aggregation below is correct either way, but without
-    // this predicate a 1-of-N-fields aggregate scans all N `field_column`
-    // directories instead of pruning to one. Tag equalities and IN-lists
-    // additionally skip whole files via manifest tag bounds.
-    val segments0 = dataFolder
-      .segmentsPruned(meta.name, scala.None, scala.None, tagEq, tagIn)
-      .where(fieldColumnPredicate(meta, fields))
-    val segments = tagPred.map(segments0.where).getOrElse(segments0)
-
+  private def segmentNativeAggregate(slice: SegmentSlice,
+      aggregates: Seq[Aggregate], groupByTags: Seq[String],
+      tsAggregates: Seq[Aggregate]): DataFrame = {
+    // The slice restricts to the aggregated fields' partitions FIRST: the
+    // per-field conditional aggregation below is correct either way, but
+    // without that predicate a 1-of-N-fields aggregate scans all N
+    // `field_column` directories instead of pruning to one. Tag equalities
+    // and IN-lists additionally skip whole files via manifest tag bounds.
+    val meta = slice.meta
+    val segments = slice.segments
     val tsName = meta.timestampColumn
-    val aggs = (for (agg <- aggregates; f <- fields) yield {
+    val aggs = (for (agg <- aggregates; f <- slice.fields) yield {
       val kind = kindOf(agg)
       SegmentAggregates.aggColumnFor(kind, meta.fieldIndex(f)).as(s"${kind}_$f")
     }) ++ tsAggregates.map {
@@ -2655,22 +2323,11 @@ final class Engine(val spark: SparkSession, val root: String) {
     * an optimization beyond the reference, which disables its aggregate
     * rewrite whenever any predicate is present.
     */
-  private def hybridRangeAggregate(
-      meta: TableMetadata, fields: Seq[String], aggregates: Seq[Aggregate],
-      groupByTags: Seq[String], tagPred: Option[Column],
-      startUs: Option[Long], endUs: Option[Long],
-      tagEq: Map[String, String] = Map.empty,
-      tagIn: Map[String, Seq[String]] = Map.empty,
-      tsAggregates: Seq[Aggregate] = Seq.empty): DataFrame = {
-    val segments0 = dataFolder
-      .segmentsPruned(meta.name, startUs, endUs, tagEq, tagIn)
-      .where(fieldColumnPredicate(meta, fields))
-      .where(GridView.segmentTimePredicate(startUs, endUs))
-    val segments = tagPred.map(segments0.where).getOrElse(segments0)
-
-    val contained = (startUs.map(lo => col("start_time") >= lo).toSeq ++
-      endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-
+  private def hybridRangeAggregate(slice: SegmentSlice,
+      aggregates: Seq[Aggregate], groupByTags: Seq[String],
+      tsAggregates: Seq[Aggregate]): DataFrame = {
+    val meta = slice.meta
+    val fields = slice.fields
     // Both sides emit raw partial rows in one shape, merged by a single
     // aggregation: interior segments as closed-form per-segment
     // expressions, boundary segments as one decode-generator partial each
@@ -2683,33 +2340,29 @@ final class Engine(val spark: SparkSession, val root: String) {
     val withEdges = needsEdges(aggregates)
     val countOnly = aggregates.forall(_ == Aggregate.Count) &&
       tsAggregates.isEmpty
-    val interior = interiorPartials(segments.where(contained),
-      groupByTags.map(col), withSq = withSq, withEdges = withEdges,
-      withSum = needsSum(aggregates))
-    val boundary =
-      if (countOnly)
-        // Dead sum/min/max/tmin/tmax placeholders: the merge computes
-        // them but COUNT is the only final column that reads anything.
-        segments.where(!contained).select(groupByTags.map(col) ++ Seq(
-          col(SegmentSchema.FieldColumn),
-          SegmentAggregates.clippedLenCol(
-            startUs.getOrElse(Long.MinValue), endUs.getOrElse(Long.MaxValue))
-            .as("__bp_cnt"),
-          lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"),
-          lit(Float.NaN).as("__bp_min"), lit(Float.NaN).as("__bp_max"),
-          lit(0L).as("__bp_tmin"), lit(0L).as("__bp_tmax")): _*)
-      else GridView.bucketPartials(
-        segments.where(!contained), meta, fields, Long.MaxValue, startUs, endUs,
-        withEdges)
-        .select(groupByTags.map(col) ++ Seq(
-          col(SegmentSchema.FieldColumn),
-          col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
-          col("__bp_min"), col("__bp_max"),
-          col("__bp_tmin"), col("__bp_tmax")) ++
-          (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
-          else Seq.empty): _*)
-
-    val partials = interior.unionByName(boundary)
+    val (tsLo, tsHi) = slice.clip
+    val partials = slice.split(slice.contained)(
+      interiorPartials(_, groupByTags.map(col), withSq = withSq,
+        withEdges = withEdges, withSum = needsSum(aggregates)),
+      straddling =>
+        if (countOnly)
+          // Dead sum/min/max/tmin/tmax placeholders: the merge computes
+          // them but COUNT is the only final column that reads anything.
+          straddling.select(groupByTags.map(col) ++ Seq(
+            col(SegmentSchema.FieldColumn),
+            SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__bp_cnt"),
+            lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"),
+            lit(Float.NaN).as("__bp_min"), lit(Float.NaN).as("__bp_max"),
+            lit(0L).as("__bp_tmin"), lit(0L).as("__bp_tmax")): _*)
+        else GridView.bucketPartials(straddling, meta, fields, Long.MaxValue,
+            slice.startUs, slice.endUs, withEdges)
+          .select(groupByTags.map(col) ++ Seq(
+            col(SegmentSchema.FieldColumn),
+            col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
+            col("__bp_min"), col("__bp_max"),
+            col("__bp_tmin"), col("__bp_tmax")) ++
+            (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
+            else Seq.empty): _*))
     val mergeAggs = partialMergeAggs(meta, fields, tsAggregates.nonEmpty,
       withSq, withEdges)
     val combined =
@@ -3081,14 +2734,8 @@ final class Engine(val spark: SparkSession, val root: String) {
         "share the statement's schema.")
     import org.apache.spark.sql.graft.ColumnBridge
     def attrOf(name: String) = ColumnBridge.expression(col(name))
-    val tsLo = t.startUs.getOrElse(Long.MinValue)
-    val tsHi = t.endUs.getOrElse(Long.MaxValue)
-    val segments0 = dataFolder
-      .segmentsPruned(t.table, t.startUs, t.endUs, t.tagEq, t.tagIn)
-      .where(fieldColumnPredicate(meta, Seq(t.field)))
-      .where(GridView.segmentTimePredicate(t.startUs, t.endUs))
-    val segments = tagPredicate(t.tagEq, t.tagIn)
-      .map(segments0.where).getOrElse(segments0)
+    val slice = new SegmentSlice(dataFolder, meta, Seq(t.field), t.startUs,
+      t.endUs, t.tagEq, t.tagIn)
 
     val probeSchema = StructType(
       StructField("__sid", IntegerType, nullable = false) +:
@@ -3103,67 +2750,41 @@ final class Engine(val spark: SparkSession, val root: String) {
     val joined = t.keyTags.zipWithIndex
       .map { case (tag, i) => col(tag) <=> col(s"__k$i") }
       .reduceOption(_ && _) match {
-        case Some(c) => segments.join(broadcast(probeDf), c)
-        case scala.None => segments.crossJoin(broadcast(probeDf))
+        case Some(c) => slice.segments.join(broadcast(probeDf), c)
+        case scala.None => slice.segments.crossJoin(broadcast(probeDf))
       }
 
-    if (sys.env.contains("SPARK_GRAFT_LADDER_DEBUG")) {
-      // Evidence line: how much of the joined slice the kernels can
-      // settle from metadata alone (debug-only extra job).
-      val r = joined.agg(
-        count(lit(1)),
-        sum(when(col("min_value") > array_max(col("__xs")) ||
-          col("max_value") <= array_min(col("__xs")), 0L).otherwise(1L)))
-        .collect().head
-      System.err.println(s"[rank-probe] ${if (fetch) "fetch" else "probe"} " +
-        s"table=${t.table} field=${t.field} states=${states.size} " +
-        s"joinedSegments=${r.getLong(0)} " +
-        s"boundarySegments=${if (r.isNullAt(1)) 0L else r.getLong(1)}")
-    }
-
-    // The shared contained/straddler split: contained segments answer
-    // with the no-clip kernel (no timestamp decode), straddlers clip to
-    // [tsLo, tsHi] — the same shape as the local ladder's partials.
-    def partials(body: (Long, Long) => Seq[Column]): DataFrame =
-      if (t.startUs.isEmpty && t.endUs.isEmpty)
-        joined.select(col("__sid") +: body(Long.MinValue, Long.MaxValue): _*)
-      else {
-        val contained = (t.startUs.map(lo => col("start_time") >= lo).toSeq ++
-          t.endUs.map(hi => col("end_time") <= hi).toSeq).reduce(_ && _)
-        joined.where(contained)
-          .select(col("__sid") +: body(Long.MinValue, Long.MaxValue): _*)
-          .unionByName(joined.where(!contained)
-            .select(col("__sid") +: body(tsLo, tsHi): _*))
-      }
-
+    // Contained segments answer with the no-clip kernel (no timestamp
+    // decode), straddlers clip to the range — the same shape as the local
+    // ladder's partials.
     if (!fetch) {
-      def arrOf(lo: Long, hi: Long) = ColumnBridge.column(
-        SegmentCountAboveMultiDyn(lo, hi, attrOf("__xs"),
-          attrOf("model_type_id"), attrOf("start_time"), attrOf("end_time"),
-          attrOf("timestamps"), attrOf("min_value"), attrOf("max_value"),
-          attrOf("values"), attrOf("residuals")))
-      def lenOf(lo: Long, hi: Long): Column =
-        if (lo == Long.MinValue && hi == Long.MaxValue)
-          SegmentAggregates.lenCol
-        else SegmentAggregates.clippedLenCol(lo, hi)
       // count(x <= t) = clippedLen - countAbove(t): both sides include
       // NaN consistently (NaN sits above every threshold in the SQL
       // total order, exactly like the generic `count_if(x <= t)`).
-      val perSeg = partials((lo, hi) =>
-        Seq(arrOf(lo, hi).as("__arr"), lenOf(lo, hi).as("__n")))
+      val perSeg = slice.partials(Seq(col("__sid")), joined) { clip =>
+          val (lo, hi) = SegmentSlice.window(clip)
+          Seq(ColumnBridge.column(SegmentCountAboveMultiDyn(lo, hi,
+              attrOf("__xs"), attrOf("model_type_id"), attrOf("start_time"),
+              attrOf("end_time"), attrOf("timestamps"), attrOf("min_value"),
+              attrOf("max_value"), attrOf("values"), attrOf("residuals")))
+              .as("__arr"),
+            SegmentSlice.lenOf(clip).as("__n"))
+        }
         .select(col("__sid") +: (1 to nT).map(m =>
           (col("__n") - element_at(col("__arr"), m)).as(s"__c$m")): _*)
       val sums = (1 to nT).map(m => sum(col(s"__c$m")).as(s"__c$m"))
       perSeg.groupBy("__sid").agg(sums.head, sums.tail: _*)
     } else {
-      def pairsOf(lo: Long, hi: Long) = ColumnBridge.column(
-        SegmentValuesInRange(
-          ColumnBridge.expression(element_at(col("__xs"), 1)),
-          ColumnBridge.expression(element_at(col("__xs"), 2)),
-          lo, hi, attrOf("model_type_id"), attrOf("start_time"),
-          attrOf("end_time"), attrOf("timestamps"), attrOf("min_value"),
-          attrOf("max_value"), attrOf("values"), attrOf("residuals")))
-      partials((lo, hi) => Seq(pairsOf(lo, hi).as("__p")))
+      slice.partials(Seq(col("__sid")), joined) { clip =>
+          val (lo, hi) = SegmentSlice.window(clip)
+          Seq(ColumnBridge.column(SegmentValuesInRange(
+            ColumnBridge.expression(element_at(col("__xs"), 1)),
+            ColumnBridge.expression(element_at(col("__xs"), 2)),
+            lo, hi, attrOf("model_type_id"), attrOf("start_time"),
+            attrOf("end_time"), attrOf("timestamps"), attrOf("min_value"),
+            attrOf("max_value"), attrOf("values"), attrOf("residuals")))
+            .as("__p"))
+        }
         .select(col("__sid"), explode(col("__p")).as("__e"))
         .select(col("__sid"), col("__e.v").as("__v"), col("__e.c").as("__c"))
         .groupBy("__sid", "__v").agg(sum(col("__c")).as("__c"))
@@ -3200,9 +2821,6 @@ object Engine {
       if (rules.isFixedOffset) scala.None
       else {
         import scala.jdk.CollectionConverters._
-        def us(i: java.time.Instant): Long =
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            i.getNano / 1000L)
         val hist = rules.getTransitions.asScala.toSeq.map(_.getInstant)
         val lastYear = hist.lastOption
           .map(_.atZone(java.time.ZoneOffset.UTC).getYear).getOrElse(2000)
@@ -3210,7 +2828,7 @@ object Engine {
           rule <- rules.getTransitionRules.asScala.toSeq
           year <- (lastYear - 1) to (lastYear + 21)
         } yield rule.createTransition(year).getInstant
-        val all = (hist ++ recurring).map(us).distinct.sorted
+        val all = (hist ++ recurring).map(SegmentSlice.micros(_)).distinct.sorted
         if (all.size < 2) Some(Long.MaxValue)
         else Some(all.sliding(2).map(p => p(1) - p(0)).min)
       }
@@ -3246,4 +2864,139 @@ object Engine {
 
   private def setLastRegistrant(spark: SparkSession, engine: Engine): Unit =
     lastRegistrant.synchronized { lastRegistrant.put(spark, engine) }
+}
+
+/** One pruned, validated slice of a time series table's segment relation:
+  * the preamble every segment-native [[Engine]] method shares. Building it
+  * checks the table is a time series table, that every named field is a
+  * stored field, and that every group-by and tag-filter key is a tag; it
+  * then prunes manifest files by time range and tag filters, and restricts
+  * the segment rows to the fields' partitions, the time range and the tag
+  * predicate, in that order.
+  *
+  * Split invariant: with a time range `[lo, hi]` (an absent bound is
+  * unbounded), `contained` is `start_time >= lo && end_time <= hi`. A
+  * contained segment answers with the unclipped kernel; every other
+  * segment of the slice straddles a range edge and clips its kernel to
+  * `[lo, hi]` (Long.MinValue / Long.MaxValue for an absent bound). Without
+  * a range every segment is contained and nothing is clipped.
+  *
+  * `named` empty selects every stored field, or, with `extentOnly`, only
+  * the first: fields are timestamp-aligned, so any one partition carries
+  * every timestamp.
+  */
+private[graft] final class SegmentSlice(
+    dataFolder: DataFolder, val meta: TableMetadata, named: Seq[String],
+    val startUs: Option[Long], val endUs: Option[Long],
+    tagFilters: Map[String, String] = Map.empty,
+    tagInFilters: Map[String, Seq[String]] = Map.empty,
+    groupByTags: Seq[String] = Seq.empty, extentOnly: Boolean = false) {
+  require(meta.isTimeSeries, s"${meta.name} is not a time series table.")
+  named.foreach(f => require(meta.fieldColumns.contains(f),
+    s"$f is not a stored field of ${meta.name}."))
+  require(groupByTags.forall(meta.tagColumns.contains),
+    s"Group-by columns must be tags of ${meta.name}.")
+  (tagFilters.keys ++ tagInFilters.keys).foreach(k =>
+    require(meta.tagColumns.contains(k),
+      s"Tag filter key $k is not a tag of ${meta.name} " +
+        s"(tags: ${meta.tagColumns.mkString(", ")})."))
+
+  /** The fields whose partitions the slice reads. */
+  val fields: Seq[String] =
+    if (named.nonEmpty) named
+    else if (extentOnly) meta.fieldColumns.take(1)
+    else meta.fieldColumns
+
+  /** Is the slice restricted to a time range (so some segments straddle)? */
+  val ranged: Boolean = startUs.nonEmpty || endUs.nonEmpty
+
+  /** The straddlers' kernel window `[lo, hi]`. */
+  val clip: (Long, Long) =
+    (startUs.getOrElse(Long.MinValue), endUs.getOrElse(Long.MaxValue))
+
+  /** Segments wholly inside the time range (`lit(true)` without one). */
+  val contained: Column = (startUs.map(lo => col("start_time") >= lo).toSeq ++
+    endUs.map(hi => col("end_time") <= hi).toSeq)
+    .reduceOption(_ && _).getOrElse(lit(true))
+
+  private lazy val pruned = dataFolder.segmentsPruned(meta.name, startUs,
+    endUs, tagFilters, tagInFilters)
+
+  private def withTagPredicate(df: DataFrame): DataFrame =
+    (tagFilters.toSeq.sortBy(_._1).map { case (k, v) => col(k) === v } ++
+      tagInFilters.toSeq.sortBy(_._1).map { case (k, vs) =>
+        col(k).isin(vs.map(v => v: Any): _*)
+      }).reduceOption(_ && _).map(df.where).getOrElse(df)
+
+  /** The slice's segment rows. */
+  lazy val segments: DataFrame = withTagPredicate(pruned
+    .where(SegmentSlice.fieldColumnPredicate(meta, fields))
+    .where(GridView.segmentTimePredicate(startUs, endUs)))
+
+  /** The pruned files under the tag predicate alone, for [[GridView]]
+    * reconstruction, which applies the field and time predicates itself.
+    */
+  lazy val tagFiltered: DataFrame = withTagPredicate(pruned)
+
+  /** `inside(from where within)` unioned by name with
+    * `straddling(from where !within)`.
+    */
+  def split(within: Column, from: DataFrame = segments)(
+      inside: DataFrame => DataFrame,
+      straddling: DataFrame => DataFrame): DataFrame =
+    inside(from.where(within)).unionByName(straddling(from.where(!within)))
+
+  /** Per-segment partial rows `keys ++ body(clip)` of `from` (the slice's
+    * segments, or a frame joined onto them): `body` receives None for
+    * contained segments and `Some((lo, hi))` for straddlers.
+    */
+  def partials(keys: Seq[Column], from: DataFrame = segments)(
+      body: Option[(Long, Long)] => Seq[Column]): DataFrame =
+    if (!ranged) from.select(keys ++ body(scala.None): _*)
+    else split(contained, from)(
+      _.select(keys ++ body(scala.None): _*),
+      _.select(keys ++ body(Some(clip)): _*))
+}
+
+private[graft] object SegmentSlice {
+  def apply(dataFolder: DataFolder, table: String,
+      fields: Seq[String] = Seq.empty,
+      startTime: Option[java.time.Instant] = scala.None,
+      endTime: Option[java.time.Instant] = scala.None,
+      tagFilters: Map[String, String] = Map.empty,
+      tagInFilters: Map[String, Seq[String]] = Map.empty,
+      groupByTags: Seq[String] = Seq.empty,
+      extentOnly: Boolean = false): SegmentSlice =
+    new SegmentSlice(dataFolder, dataFolder.metadata(table), fields,
+      startTime.map(micros), endTime.map(micros), tagFilters, tagInFilters,
+      groupByTags, extentOnly)
+
+  /** Epoch microseconds of an instant (sub-microsecond nanos truncate). */
+  def micros(i: java.time.Instant): Long =
+    i.getEpochSecond * 1000000L + i.getNano / 1000L
+
+  /** A duration in microseconds, failing on overflow. */
+  def micros(d: java.time.Duration): Long =
+    Math.addExact(Math.multiplyExact(d.getSeconds, 1000000L), d.getNano / 1000L)
+
+  /** A kernel's timestamp window: `[lo, hi]` for a straddler, unbounded
+    * for a contained segment.
+    */
+  def window(clip: Option[(Long, Long)]): (Long, Long) =
+    clip.getOrElse((Long.MinValue, Long.MaxValue))
+
+  /** A segment's point count, clipped to `[lo, hi]` for a straddler. */
+  def lenOf(clip: Option[(Long, Long)]): Column = clip match {
+    case Some((lo, hi)) => SegmentAggregates.clippedLenCol(lo, hi)
+    case scala.None => SegmentAggregates.lenCol
+  }
+
+  /** Partition predicate selecting exactly the fields' `field_column`
+    * directories (all fields = no restriction needed).
+    */
+  private[tsdb] def fieldColumnPredicate(meta: TableMetadata,
+      fields: Seq[String]): Column =
+    if (fields.toSet == meta.fieldColumns.toSet) lit(true)
+    else col(SegmentSchema.FieldColumn)
+      .isin(fields.map(f => meta.fieldIndex(f): Any): _*)
 }

@@ -1222,7 +1222,7 @@ object FederatedAggregate {
       val us = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
       s"timestamp_micros($us)"
     case t: java.time.Instant =>
-      s"timestamp_micros(${t.getEpochSecond * 1000000L + t.getNano / 1000L})"
+      s"timestamp_micros(${SegmentSlice.micros(t)})"
     case d: java.sql.Date => s"date_from_unix_date(${d.toLocalDate.toEpochDay})"
     case d: java.time.LocalDate => s"date_from_unix_date(${d.toEpochDay})"
     case other => fail(

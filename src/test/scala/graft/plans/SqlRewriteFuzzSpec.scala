@@ -89,7 +89,8 @@ class SqlRewriteFuzzSpec extends AnyFunSuite {
     // Groupings: (select expr with alias, group-by expr)
     val groupings: Seq[(String, String)] = rng.nextInt(10) match {
       case 0 | 1 => Seq.empty
-      case 2 | 3 => Seq(("tag", "tag"))
+      case 2 => Seq(("tag", "tag"))
+      case 3 => Seq(("tag AS g", "tag"))
       case 4 =>
         val u = pick(Seq("HOUR", "DAY", "WEEK"))
         Seq((s"date_trunc('$u', ts) AS b", s"date_trunc('$u', ts)"))
@@ -210,6 +211,19 @@ class SqlRewriteFuzzSpec extends AnyFunSuite {
     // The generator must keep exercising the ACCEPT paths — a refactor
     // that silently declines everything would pass equivalence vacuously.
     assert(spliced >= 60, s"only $spliced of 200 seeds spliced")
+  }
+
+  test("an aliased tag group key splices like the bare tag") {
+    // INCLUDE MERGE ships its group keys aliased (`tag AS __g0`): the
+    // alias must not push the aggregate onto the gridded plan.
+    val aliased = engine.sql("SELECT tag AS g, count(v) AS n, " +
+      "min(ts) AS t0 FROM fz GROUP BY tag ORDER BY g")
+    val plan = aliased.queryExecution.executedPlan.toString.toLowerCase
+    assert(!plan.contains("gridpoints"), plan)
+    assert(aliased.columns.toSeq == Seq("g", "n", "t0"))
+    val bare = engine.sql("SELECT tag, count(v) AS n, min(ts) AS t0 " +
+      "FROM fz GROUP BY tag ORDER BY tag")
+    assert(aliased.collect().toSeq == bare.collect().toSeq)
   }
 
   test("tumbling-window proof is memoized after the first execution") {

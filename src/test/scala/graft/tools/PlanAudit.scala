@@ -6,7 +6,8 @@ import graft.SparkEntry
 
 /** Prints formatted physical plans for representative queries so shuffle
   * counts, pushed filters, partition pruning, and broadcast choices can be
-  * audited. Run: sbt "Test/runMain graft.tools.PlanAudit [sfDir] [names...]"
+  * audited, with creation-order IDs stripped so dumps of two builds diff
+  * cleanly. Run: sbt "Test/runMain graft.tools.PlanAudit [sfDir] [names...]"
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -29,9 +30,20 @@ object PlanAudit {
       // formatted plan carries [codegen id : n] annotations — an
       // un-executed AdaptiveSparkPlan shows no codegen info at all.
       if (sys.env.get("SPARK_GRAFT_PLAN_EXEC").contains("1")) df.collect()
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      println(stripIds(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)))
     }
     spark.stop()
   }
+
+  /** Drops the IDs a JVM hands out in creation order, so two dumps of the
+    * same plan compare byte for byte: expression IDs (`value#123` becomes
+    * `value#`), exchange plan IDs, and RDD IDs with their call-site line
+    * numbers (`MapPartitionsRDD[305] at createDataFrame at Engine.scala:1593`
+    * becomes `MapPartitionsRDD[] at createDataFrame at Engine.scala`).
+    */
+  def stripIds(plan: String): String = plan
+    .replaceAll("#\\d+", "#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("RDD\\[\\d+\\] at (\\S+) at ([^:\\s]+):\\d+", "RDD[] at $1 at $2")
 }

@@ -913,6 +913,33 @@ class EngineSpec extends AnyFunSuite {
       math.abs(expected.getDouble(3)) * 1e-9)
   }
 
+  test("tag filters on a column that is not a tag fail with a clear message") {
+    val engine = newEngine()
+    engine.sql("CREATE TIME SERIES TABLE tk(ts_us TIMESTAMP, field_1 FIELD, " +
+      "field_2 FIELD, tag TAG)")
+    engine.write("tk", makePointsDf(200, Seq("a", "b")))
+    // A segment-relation column must not silently filter segments (it
+    // would count only one model type), and a field name must not reach
+    // the segment relation as an unresolvable column.
+    val misuses: Seq[() => Any] = Seq(
+      () => engine.thresholdCount("tk", "field_1", 0.0,
+        tagFilters = Map("model_type_id" -> "1")),
+      () => engine.thresholdCount("tk", "field_1", 0.0,
+        tagFilters = Map("field_2" -> "1")),
+      () => engine.readTimeSeriesTable("tk", Seq("field_1"),
+        engine.Aggregate.Count,
+        tagInFilters = Map("model_type_id" -> Seq("1", "2"))),
+      () => engine.timeGapStats("tk", java.time.Duration.ofSeconds(1),
+        tagFilters = Map("field_1" -> "1")))
+    misuses.foreach { misuse =>
+      val e = intercept[IllegalArgumentException](misuse())
+      assert(e.getMessage.contains("is not a tag of tk"), e.getMessage)
+    }
+    val n = engine.thresholdCount("tk", "field_1", Double.NegativeInfinity,
+      tagFilters = Map("tag" -> "a")).collect().head.getLong(1)
+    assert(n == 200L)
+  }
+
   test("time-range query prunes segments and filters exactly") {
     val engine = newEngine()
     engine.sql("CREATE TIME SERIES TABLE ranget(ts_us TIMESTAMP, field_1 FIELD, " +
