@@ -1353,6 +1353,7 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
   private[plans] var plantRangeBugForTests: Boolean = false
 
   private[plans] def build(engine: Engine, m0: MatchResult): DataFrame = {
+    import SegmentSlice.instant
     val m =
       if (plantRangeBugForTests) m0.copy(endUs = m0.endUs.map(_ + 1000000L))
       else m0
@@ -1365,8 +1366,6 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       // where NOTHING qualifies are dropped — the gridded plan's Filter
       // removes those rows before grouping, so the groups never exist.
       val vb = m.valueBound.get
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val countsOnly = m.specs.forall {
         case TagRef(_) | FieldAgg("count", _, _) => true
         case _ => false
@@ -1383,8 +1382,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
         val (bLo, bUp) = vb.intervals.head
         val bs = engine.thresholdStatsBucketed(m.meta.name, f,
           java.time.Duration.of(w, java.time.temporal.ChronoUnit.MICROS),
-          bLo, bUp, m.groupTags, m.startUs.map(inst),
-          m.endUs.map(inst), m.tagEq, m.tagIn)
+          bLo, bUp, m.groupTags, m.startUs.map(instant),
+          m.endUs.map(instant), m.tagEq, m.tagIn)
         val nonEmpty = bs.where(col(s"count_in_$f") > 0L)
         val wStart = col("bucket")
         val wEnd = timestamp_micros(unix_micros(col("bucket")) + lit(w))
@@ -1418,7 +1417,7 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
             throw new IllegalStateException("value bound without bounds")
         }
         val tc = engine.thresholdCount(m.meta.name, vb.field, lower, upper,
-          m.groupTags, m.startUs.map(inst), m.endUs.map(inst), m.tagEq,
+          m.groupTags, m.startUs.map(instant), m.endUs.map(instant), m.tagEq,
           m.tagIn)
         val cnt =
           if (complement) col(s"count_${vb.field}") - col(s"count_in_${vb.field}")
@@ -1434,7 +1433,7 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       } else {
         val f = vb.field
         val ts = engine.thresholdStatsMulti(m.meta.name, f, vb.intervals,
-          m.groupTags, m.startUs.map(inst), m.endUs.map(inst), m.tagEq,
+          m.groupTags, m.startUs.map(instant), m.endUs.map(instant), m.tagEq,
           m.tagIn)
         val nonEmpty =
           if (m.groupTags.nonEmpty) ts.where(col(s"count_in_$f") > 0L)
@@ -1461,10 +1460,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       // segments (decided from stored bounds) contribute (bin, len)
       // metadata-only; stragglers run the monotone bin-run kernel.
       val b = m.valueBin.get
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val hist = engine.valueHistogram(m.meta.name, b.field, b.origin,
-        b.width, m.groupTags, m.startUs.map(inst), m.endUs.map(inst),
+        b.width, m.groupTags, m.startUs.map(instant), m.endUs.map(instant),
         m.tagEq, m.tagIn, sparkFloorBins = true)
       val ordered = m.specs.map {
         case TagRef(tag) => col(tag)
@@ -1486,11 +1483,9 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       val field = m.specs.collect {
         case FieldAgg(k, f, _) if k != "count" => f
       }.distinct.headOption.getOrElse(m.meta.fieldColumns.head)
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val prof = engine.seasonalProfile(m.meta.name, field,
         java.time.Duration.of(tp.grainUs, java.time.temporal.ChronoUnit.MICROS),
-        tp.phases, m.groupTags, m.startUs.map(inst), m.endUs.map(inst),
+        tp.phases, m.groupTags, m.startUs.map(instant), m.endUs.map(instant),
         m.tagEq, m.tagIn)
       val phaseOut =
         if (tp.shift == 0 && tp.base == 0) col("phase")
@@ -1512,8 +1507,6 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       // joined frame is already aggregated — one row per group — so the
       // joins are answer-sized; internal names are positional to survive
       // duplicate SQL output names.
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val bounds = m.specs.collect { case fa: FilteredAgg => fa.bound }.distinct
       val idxOf = bounds.zipWithIndex.toMap
       val bucketUs = m.bucket.map {
@@ -1530,13 +1523,13 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
             val (bLo, bUp) = b.intervals.head
             engine.thresholdStatsBucketed(m.meta.name, f,
               java.time.Duration.of(w, java.time.temporal.ChronoUnit.MICROS),
-              bLo, bUp, m.groupTags, m.startUs.map(inst), m.endUs.map(inst),
-              m.tagEq, m.tagIn)
+              bLo, bUp, m.groupTags, m.startUs.map(instant),
+              m.endUs.map(instant), m.tagEq, m.tagIn)
               .withColumnRenamed("bucket", "__graft_b")
           case scala.None =>
             engine.thresholdStatsMulti(m.meta.name, f, b.intervals,
-              m.groupTags, m.startUs.map(inst), m.endUs.map(inst), m.tagEq,
-              m.tagIn)
+              m.groupTags, m.startUs.map(instant), m.endUs.map(instant),
+              m.tagEq, m.tagIn)
         }
         base.select(joinKeys.map(col) ++ Seq(
           col(s"count_in_$f").as(s"__fb${i}_count"),
@@ -1605,38 +1598,15 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       // result exactly. The output is an answer-sized driver frame.
       val pAggs = m.specs.collect { case p: PercentileAgg => p }
       val field = pAggs.map(_.field).distinct.head
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
-      def discRank(q: Double, n: Long): Long =
-        math.min(math.max(1L, math.ceil(q * n).toLong), n)
-      val (stats, resolved) = engine.exactRanksBy(m.meta.name, field,
+      val (counts, resolved) = engine.exactRanksBy(m.meta.name, field,
         pAggs.map(p => (p.q, p.disc)).distinct,
-        m.groupTags, m.startUs.map(inst), m.endUs.map(inst),
+        m.groupTags, m.startUs.map(instant), m.endUs.map(instant),
         m.tagEq, m.tagIn)
-      def valueAt(g: Seq[String], q: Double, disc: Boolean): Double = {
-        val n = stats(g)._1
-        if (disc) return resolved((g, discRank(q, n))).toDouble
-        val pos = (n - 1).toDouble * q
-        val lower = math.floor(pos).toLong
-        val higher = math.ceil(pos).toLong
-        val vLo = resolved((g, lower + 1L))
-        if (higher == lower) vLo.toDouble
-        else {
-          val vHi = resolved((g, higher + 1L))
-          // Boxed Float equality as Spark compares map keys: NaN equals
-          // NaN, -0.0 does not equal 0.0.
-          if (java.lang.Float.valueOf(vLo)
-              .equals(java.lang.Float.valueOf(vHi))) vLo.toDouble
-          else (higher.toDouble - pos) * vLo.toDouble +
-            (pos - lower.toDouble) * vHi.toDouble
-        }
-      }
       // A group whose segments overlap the time range but hold no
-      // in-range points has n = 0: ranksFor returned Seq.empty, so no
-      // (group, rank) resolved for it. The gridded plan this splice
-      // replaces emits no row for such a group (GROUP BY over zero
-      // rows) — drop it here too instead of crashing on the absent key.
-      val groups = stats.keys.toSeq.filter(g => stats(g)._1 > 0L)
+      // in-range points has n = 0. The gridded plan this splice replaces
+      // emits no row for such a group (GROUP BY over zero rows) — drop it
+      // here too.
+      val groups = counts.keys.toSeq.filter(g => counts(g) > 0L)
         .sortBy(_.mkString("\u0000"))
       val rows =
         if (groups.isEmpty && m.groupTags.isEmpty)
@@ -1646,7 +1616,8 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
         else groups.map { g =>
         org.apache.spark.sql.Row.fromSeq(m.specs.map {
           case TagRef(tag) => g(m.groupTags.indexOf(tag))
-          case PercentileAgg(_, q, _, disc) => valueAt(g, q, disc)
+          case PercentileAgg(_, q, _, disc) =>
+            engine.rankValue(counts, resolved, g, q, disc)
           case other => throw new IllegalStateException(
             s"unsupported spec $other alongside percentiles")
         })
@@ -1691,16 +1662,15 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       val aggs: Seq[engine.Aggregate] = kinds.map(kindToAggregate(engine))
       val tsAggs: Seq[engine.Aggregate] = m.specs
         .collect { case TsAgg(k, _) => k }.distinct.map(kindToAggregate(engine))
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val bucketed = m.bucket.get match {
         case FixedUs(us) => engine.readTimeSeriesTableBucketed(m.meta.name,
           java.time.Duration.of(us, java.time.temporal.ChronoUnit.MICROS),
-          fields, aggs, m.groupTags, m.startUs.map(inst), m.endUs.map(inst),
-          m.tagEq, m.tagIn, tsAggs)
+          fields, aggs, m.groupTags, m.startUs.map(instant),
+          m.endUs.map(instant), m.tagEq, m.tagIn, tsAggs)
         case CalendarTrunc(unit, zone) => engine.readTimeSeriesTableTruncated(
           m.meta.name, unit, zone, fields, aggs, m.groupTags,
-          m.startUs.map(inst), m.endUs.map(inst), m.tagEq, m.tagIn, tsAggs)
+          m.startUs.map(instant), m.endUs.map(instant), m.tagEq, m.tagIn,
+          tsAggs)
       }
       val ordered = m.specs.map {
         case TagRef(tag) => col(tag)
@@ -1753,11 +1723,9 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
       val aggs: Seq[engine.Aggregate] = kinds.map(kindToAggregate(engine))
       val tsAggs: Seq[engine.Aggregate] = m.specs
         .collect { case TsAgg(k, _) => k }.distinct.map(kindToAggregate(engine))
-      def inst(us: Long) = java.time.Instant.ofEpochSecond(
-        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
       val multi = engine.readTimeSeriesTableMulti(m.meta.name, fields, aggs,
-        m.groupTags, m.startUs.map(inst), m.endUs.map(inst), m.tagEq, m.tagIn,
-        tsAggs)
+        m.groupTags, m.startUs.map(instant), m.endUs.map(instant), m.tagEq,
+        m.tagIn, tsAggs)
       val ordered = m.specs.map {
         case TagRef(tag) => col(tag)
         case FieldAgg(kind, field, outName) => col(s"${kind}_$field").as(outName)

@@ -952,17 +952,17 @@ object TsQueries {
 
     // EXACT quantiles from compressed segments — no decode, no sort:
     // result q over n values = the k-th smallest under the SQL total
-    // order (k = ceil(q·n)), located by a histogram bracket plus a
-    // shared float-key bisection whose probes are all metadata-answered
-    // threshold counts (~15 tiny jobs regardless of data volume, where
-    // SQL percentile() sorts the whole column). The oracle replays the
-    // k-th-smallest definition with row_number.
+    // order (k = ceil(q·n)), located by the exact-rank ladder with the
+    // whole table as one group: a float-key bisection whose probes are
+    // segment threshold counts, mostly answered from stored bounds, in a
+    // job count independent of data volume (where SQL percentile() sorts
+    // the whole column). The oracle replays the k-th-smallest definition
+    // with row_number.
     ("ts_quantile", (s: SparkSession, d: String) => {
       val engine = engineFor(s, d)
-      import s.implicits._
       engine.exactQuantiles("events_lossless", "value",
           Seq(0.25, 0.5, 0.9, 0.99))
-        .toDF("q", "v").orderBy("q")
+        .select(col("q"), col("q_value").as("v")).orderBy("q")
     }, Some("""
       WITH pts AS (SELECT CAST(value AS FLOAT4) AS v FROM events),
       s AS (SELECT v, row_number() OVER (ORDER BY v) AS rn,
@@ -974,15 +974,15 @@ object TsQueries {
 
     // PER-SERIES exact quantiles — every user's true median and p90 with
     // no decode, no sort, no point shuffle (Spark's exact percentile
-    // sorts every group). The same census + bisection-ladder + verify
-    // refinement as ts_quantile, but every job answers ALL series at
-    // once: per-group probe arrays broadcast onto the segment relation
-    // and one dynamic multi-threshold kernel traversal per segment
-    // answers its group's probes. ~10 jobs total, independent of data
-    // volume AND group count.
+    // sorts every group). The same ladder as ts_quantile (census,
+    // bisection rounds, verification), every job answering ALL series at
+    // once: per-group probe arrays join onto the segment relation and one
+    // dynamic multi-threshold kernel traversal per segment answers its
+    // group's probes — the job count is independent of data volume AND
+    // group count.
     ("ts_quantile_by", (s: SparkSession, d: String) => {
       val engine = engineFor(s, d)
-      engine.exactQuantilesBy("events_lossless", "value", Seq(0.5, 0.9),
+      engine.exactQuantiles("events_lossless", "value", Seq(0.5, 0.9),
           Seq("user"))
         .select(col("user"), col("q"), col("q_value").as("v"))
         .orderBy("user", "q")

@@ -1123,267 +1123,39 @@ final class Engine(val spark: SparkSession, val root: String) {
       .withColumnRenamed("__vh_bin", "bin")
   }
 
-  /** One segment scan answering `count(v > x)` for SEVERAL thresholds x at
-    * once (plus the total point count) — the shared probe behind the
-    * exact-quantile bisection: each refinement round costs one metadata
-    * job no matter how many quantiles are being located.
-    */
-  private def countAboveMulti(slice: SegmentSlice,
-      lowers: Seq[Double]): (Seq[Long], Long, Float, Float) = {
-    // ONE array-valued kernel per segment answers every threshold from a
-    // shared traversal (bounds classify most without decode); the element
-    // extraction sits in a CHAINED projection so CollapseProject cannot
-    // inline (re-evaluate) the kernel per element.
-    import org.apache.spark.sql.graft.ColumnBridge
-    def attr(name: String) = ColumnBridge.expression(col(name))
-    val raw = slice.partials(Seq.empty) { clip =>
-      val (lo, hi) = SegmentSlice.window(clip)
-      Seq(ColumnBridge.column(SegmentCountAboveMulti(lowers, lo, hi,
-          attr("model_type_id"), attr("start_time"), attr("end_time"),
-          attr("timestamps"), attr("min_value"), attr("max_value"),
-          attr("values"), attr("residuals"))).as("__arr"),
-        SegmentSlice.lenOf(clip).as("__n"),
-        col("min_value").as("__mn"), col("max_value").as("__mx"))
-    }
-    // The stored-bounds extent rides along free (used for quantile
-    // brackets; a NaN-poisoned max just degrades to the full-range
-    // bracket, never to a wrong answer — the verify pass guards).
-    val extracted = raw.select(lowers.indices.map(i =>
-      element_at(col("__arr"), i + 1).as(s"__in_$i")) ++ Seq(col("__n"),
-      col("__mn"), col("__mx")): _*)
-    val aggs = lowers.indices.map(i =>
-      coalesce(sum(col(s"__in_$i")), lit(0L)).as(s"__in_$i")) ++ Seq(
-      coalesce(sum(col("__n")), lit(0L)).as("__n"),
-      min(col("__mn")).as("__mn"), max(col("__mx")).as("__mx"))
-    val row = extracted.agg(aggs.head, aggs.tail: _*).collect().head
-    val k = lowers.size
-    (lowers.indices.map(row.getLong), row.getLong(k),
-      if (row.isNullAt(k + 1)) Float.NaN else row.getFloat(k + 1),
-      if (row.isNullAt(k + 2)) Float.NaN else row.getFloat(k + 2))
-  }
-
-  /** EXACT quantiles of a stored field from compressed segments — no
-    * decode, no sort, no shuffle of points, which no reference engine
-    * (and no Spark built-in) offers: `percentile` sorts the full column
-    * and `approx_percentile` is approximate. Result for quantile q over
-    * n values: the k-th smallest value under the SQL total order
-    * (k = ceil(q·n); -Inf smallest, NaN greatest, zeros equal), i.e. the
-    * smallest value v with `count(x <= v) >= k` — and `count(x <= v)` is
-    * exactly what [[thresholdCount]] answers from segment metadata.
+  /** EXACT quantiles of a stored field from compressed segments, per tag
+    * group or over the whole slice — no decode, no sort, no point
+    * shuffle, where Spark's exact `percentile` sorts every group's values
+    * and `approx_percentile` is approximate. Result for quantile q over a
+    * group's n values: the k-th smallest value under the SQL total order
+    * (k = ceil(q·n); -Inf smallest, NaN greatest, zeros equal), located by
+    * [[exactRanksBy]]'s bisection over segment threshold counts in
+    * O(log(key space) / log(fan)) jobs, independent of both data volume
+    * and group count.
     *
-    * The driver runs a bounded refinement loop: one histogram pass
-    * brackets every quantile to a narrow value bin, then a binary search
-    * over the float total-order keys ([[graft.core.ValueCounts.totalOrderKey]])
-    * locates each k-th value exactly — all quantiles sharing ONE
-    * multi-threshold metadata job per round ([[countAboveMulti]]), and
-    * inside a narrow bracket virtually every segment is answered by its
-    * stored bounds alone. ~12-15 metadata-sized jobs total, independent
-    * of data volume; at 100 TB the alternative is sorting 100 TB.
+    * Returns (tags…, q DOUBLE, q_<field> FLOAT), groups in key order and
+    * quantiles in argument order: NaN for quantiles beyond the non-NaN
+    * tail and for a group with no points in range, -0.0 canonicalized to
+    * 0.0. An ungrouped call always returns one row per q.
     */
   def exactQuantiles(table: String, field: String, qs: Seq[Double],
-      startTime: Option[java.time.Instant] = scala.None,
-      endTime: Option[java.time.Instant] = scala.None,
-      tagFilters: Map[String, String] = Map.empty,
-      tagInFilters: Map[String, Seq[String]] = Map.empty): Seq[(Double, Float)] = {
-    require(qs.nonEmpty, "At least one quantile is required.")
-    require(qs.forall(q => q > 0.0 && q <= 1.0),
-      "Quantiles must be in (0, 1].")
-    val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
-      endTime, tagFilters, tagInFilters)
-    import graft.core.ValueCounts.{floatFromKey, totalOrderKey}
-
-    def probes(xs: Seq[Double]): Seq[Long] = countAboveMulti(slice, xs)._1
-
-    // Tail census in one job: total n via the -Inf probe's companion
-    // count, NaN count (only NaN is > +Inf), and the -Inf count.
-    val (tails, n, mn, mx) = countAboveMulti(slice,
-      Seq(Double.NegativeInfinity, Double.PositiveInfinity))
-    if (n == 0L) return qs.map(q => (q, Float.NaN))
-    val negInfCount = n - tails.head
-    val nanCount = tails(1)
-
-    val ks = qs.map(q => math.max(1L, math.ceil(q * n).toLong).min(n))
-
-    // Bracket the finite region per quantile with one histogram pass when
-    // the metadata extent (collected by the census scan) is finite;
-    // degenerate extents skip straight to the full-key bisection.
-    val fullLo = totalOrderKey(Float.NegativeInfinity)
-    val fullHi = totalOrderKey(Float.PositiveInfinity)
-    val brackets: Map[Long, (Long, Long)] =
-      if (mn.isNaN || mx.isNaN || mn.isInfinite || mx.isInfinite || !(mx > mn))
-        ks.map(_ -> (fullLo, fullHi)).toMap
-      else {
-        val width = (mx.toDouble - mn.toDouble) / 65536.0
-        val hist = valueHistogram(table, field, mn.toDouble, width,
-            Seq.empty, startTime, endTime, tagFilters, tagInFilters)
-          .orderBy("bin").collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        val cum = hist.scanLeft((Long.MinValue, negInfCount)) {
-          case ((_, acc), (bin, cnt)) => (bin, acc + cnt)
-        }.drop(1)
-        ks.map { k =>
-          // First bin whose cumulative count reaches k: the k-th value is
-          // inside it (or beyond the finite region → full tail bracket).
-          cum.find(_._2 >= k) match {
-            case Some((bin, _)) =>
-              val lo = mn.toDouble + bin * width
-              val hi = mn.toDouble + (bin + 1) * width
-              // One-key margin absorbs the double→float edge rounding.
-              val bLo = math.max(fullLo,
-                totalOrderKey(lo.toFloat) - 1L)
-              val bHi = math.min(fullHi,
-                totalOrderKey(hi.toFloat) + 1L)
-              k -> (bLo, bHi)
-            case scala.None => k -> (fullLo, fullHi)
-          }
-        }.toMap
-      }
-
-    // Shared bisection: one multi-threshold job per round narrows every
-    // still-active quantile. P(v) := count(x > v) <= n - k is monotone in
-    // v and first becomes true exactly at the k-th smallest value (see
-    // scaladoc). The standard lower-bound loop needs P(hi) confirmed;
-    // histogram brackets start unconfirmed and fall back to the full key
-    // range if their upper edge fails — and every resolved answer is
-    // verified (P(ans) ∧ ¬P(prev(ans))) in one final shared job, redoing
-    // any edge-rounding casualty over the full range.
-    val resolved = scala.collection.mutable.Map.empty[Long, Float]
-    // k -> (lo, hi, hiConfirmed)
-    val active = scala.collection.mutable.Map.empty[Long, (Long, Long, Boolean)]
-    ks.distinct.foreach { k =>
-      if (k > n - nanCount) resolved(k) = Float.NaN
-      else if (k <= negInfCount) resolved(k) = Float.NegativeInfinity
-      else {
-        val (bLo, bHi) = brackets(k)
-        // The full range's top (+Inf) satisfies P by the NaN pre-check.
-        active(k) = (bLo, bHi, bHi == fullHi)
-      }
-    }
-    def bisect(maxRounds: Int): Unit = {
-      var rounds = 0
-      while (active.nonEmpty && rounds < maxRounds) {
-        rounds += 1
-        // 16-way ladder per quantile per round: each probe element is one
-        // slot of the shared [[SegmentCountAboveMulti]] ARRAY kernel, so
-        // widening the fan grows an array literal, not the job count —
-        // but an r18 A/B measured NO win from widening anyway
-        // (ts_quantile isolated-JVM medians: fan 16 → 1.96/1.95 s,
-        // 32 → 1.70/1.99 s, 64 → 2.14 s, 128 → 2.51/2.60 s): the rounds
-        // saved are ~0.1 s metadata jobs while the first round's probe
-        // job grows with the threshold-array width (0.16 s at 16 → 0.68 s
-        // at 128, QueryProfile), so per-round cost grows ~linearly in fan
-        // against a ~1/log(fan) round saving. 16 stands.
-        // An UNCONFIRMED bracket probes its hi edge AND the interior fan
-        // in the same round (extra thresholds are free in the shared
-        // multi-count job): when the edge holds — the overwhelmingly
-        // common case — the interior flags narrow immediately instead of
-        // burning a whole round on the edge alone (one round of ~5 saved,
-        // i.e. one full metadata pass at any scale); when it fails, the
-        // interior flags are simply discarded with the bracket.
-        val fan = 16L
-        val plan: Seq[(Long, Seq[Long])] = active.toSeq.sortBy(_._1).map {
-          case (k, (lo, hi, confirmed)) =>
-            val m = math.min(fan, hi - lo)
-            val pts = (1L to m).map(j => lo + (hi - lo) * j / (m + 1))
-              .distinct.filter(p => p >= lo && p < hi)
-            val interior = if (pts.isEmpty) Seq(lo) else pts
-            (k, if (confirmed) interior else interior :+ hi)
-        }
-        val flat = plan.flatMap { case (k, ps) => ps.map(p => (k, p)) }
-        val counts = probes(flat.map(p => floatFromKey(p._2).toDouble))
-        val pOf: Map[(Long, Long), Boolean] = flat.zip(counts).map {
-          case ((k, p), above) => (k, p) -> (above <= n - k)
-        }.toMap
-        plan.foreach { case (k, ps) =>
-          val (lo, hi, confirmed) = active(k)
-          if (!confirmed && !pOf((k, hi)))
-            active(k) = (hi + 1, fullHi, true) // bracket edge lied: widen
-          else {
-            // Monotone flags over the interior points (all < hi): a false
-            // prefix then a true suffix.
-            val interior = if (confirmed) ps else ps.init
-            val flags = interior.map(p => pOf((k, p)))
-            val newHi = interior.zip(flags).find(_._2).map(_._1).getOrElse(hi)
-            val newLo = interior.zip(flags).takeWhile(!_._2).lastOption
-              .map(_._1 + 1).getOrElse(lo)
-            active(k) = (newLo, newHi, true)
-          }
-        }
-        active.toSeq.foreach { case (k, (lo, hi, confirmed)) =>
-          if (confirmed && lo >= hi) {
-            resolved(k) = floatFromKey(hi); active.remove(k)
-          }
-        }
-      }
-      require(active.isEmpty, "Quantile bisection failed to converge.")
-    }
-    bisect(64)
-
-    // Verification pass (one shared job): each answer must satisfy P and
-    // its predecessor key must not — otherwise a bracket edge lied; redo
-    // those over the full range.
-    val finiteKs = ks.distinct.filter(k =>
-      k <= n - nanCount && k > negInfCount)
-    if (finiteKs.nonEmpty) {
-      val checkXs = finiteKs.flatMap { k =>
-        val key = totalOrderKey(resolved(k))
-        Seq(floatFromKey(key).toDouble,
-          floatFromKey(math.max(fullLo, key - 1)).toDouble)
-      }
-      val checks = probes(checkXs)
-      val bad = finiteKs.zipWithIndex.filter { case (k, i) =>
-        val key = totalOrderKey(resolved(k))
-        val pAns = checks(2 * i) <= n - k
-        val pPrev = checks(2 * i + 1) <= n - k
-        !pAns || (key > fullLo && pPrev)
-      }.map(_._1)
-      if (bad.nonEmpty) {
-        bad.foreach { k => resolved.remove(k); active(k) = (fullLo, fullHi, true) }
-        bisect(64)
-      }
-    }
-    qs.zip(ks).map { case (q, k) =>
-      val v = resolved(k)
-      (q, if (v == 0.0f) 0.0f else v)
-    }
-  }
-
-  /** PER-GROUP exact quantiles — each series' true k-th smallest value
-    * (k = ceil(q·n_group), SQL float total order) with no decode, no
-    * sort, no point shuffle, where Spark's exact percentile sorts every
-    * group's values. The same driver-side bounded refinement as
-    * [[exactQuantiles]], with every job answering ALL groups at once:
-    * a grouped census (one segment aggregation), then a bisection ladder
-    * where each group probes ITS OWN interval — the per-group probe
-    * arrays broadcast onto the segment relation and one array-valued
-    * kernel traversal per segment answers that segment's group
-    * ([[SegmentCountAboveMultiDyn]]) — and one shared verification job.
-    * Job count is O(log(key space) / log(fan)) ≈ 10, independent of both
-    * data volume and group count; driver state is O(groups × quantiles),
-    * the size of the ANSWER.
-    *
-    * Returns (tags…, q DOUBLE, value FLOAT): NaN for empty groups'
-    * quantiles beyond the non-NaN tail, -0.0 canonicalized to 0.0 as in
-    * [[exactQuantiles]].
-    */
-  def exactQuantilesBy(table: String, field: String, qs: Seq[Double],
-      groupByTags: Seq[String],
+      groupByTags: Seq[String] = Seq.empty,
       startTime: Option[java.time.Instant] = scala.None,
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
     require(qs.nonEmpty, "At least one quantile is required.")
     require(qs.forall(q => q > 0.0 && q <= 1.0), "Quantiles must be in (0, 1].")
-    require(groupByTags.nonEmpty,
-      "Use exactQuantiles for the ungrouped whole-table case.")
-    val (stats, resolved) = exactRanksBy(table, field,
-      qs.map(q => (q, true)),
+    val (counts, values) = exactRanksBy(table, field, qs.map(q => (q, true)),
       groupByTags, startTime, endTime, tagFilters, tagInFilters)
-    val out = stats.keys.toSeq.sortBy(_.mkString("\u0000")).flatMap { g =>
-      val n = stats(g)._1
+    // Ungrouped, the whole slice is the one group Nil — present even when
+    // no segment reaches the range and the census has no group at all.
+    val groups =
+      if (groupByTags.isEmpty) Seq(Nil)
+      else counts.keys.toSeq.sortBy(_.mkString("\u0000"))
+    val out = groups.flatMap { g =>
       qs.map { q =>
-        val k = math.max(1L, math.ceil(q * n).toLong).min(math.max(n, 1L))
-        val v = resolved((g, k))
+        val v = rankValue(counts, values, g, q, disc = true).toFloat
         org.apache.spark.sql.Row.fromSeq(
           g ++ Seq(q, if (v == 0.0f) 0.0f else v))
       }
@@ -1399,31 +1171,6 @@ final class Engine(val spark: SparkSession, val root: String) {
       spark.sparkContext.parallelize(out, 1), outSchema)
   }
 
-  /** The grouped exact-order-statistic core behind [[exactQuantilesBy]]
-    * and the percentile SQL splice: resolves, per tag group, the ranks
-    * implied by `rankSpecs` — (q, disc=true) the discrete rank
-    * min(max(1, ceil(q*n)), max(n, 1)); (q, disc=false) BOTH bracketing
-    * continuous ranks floor((n-1)*q)+1 and ceil((n-1)*q)+1 (n > 0 only) —
-    * of the field under the SQL float total order, returning the
-    * per-group census (n, count(-Inf), count(NaN)) and every resolved
-    * (group, rank) value. Ranks beyond the non-NaN tail resolve to NaN,
-    * ranks inside the -Inf head to -Inf; everything else bisects.
-    *
-    * DISTRIBUTED LADDER: census, per-(group, rank) brackets, probe
-    * points, and per-round updates all live in DataFrames — the driver
-    * holds only the round counter and an active-row count, so 10^6-10^7
-    * series bisect with O(1) driver memory. Per round: the active state
-    * derives each rank's ladder points inside the plan (IntegralDivide on
-    * the total-order keyspace, identical arithmetic to the sequential
-    * ladder it replaces), points aggregate into one probe array per group
-    * (k-sorted, padded to a spec-static width), the array joins onto the
-    * segment relation for ONE kernel pass, and a fixed-width column
-    * reduction (map-side combined, no point explode) yields per-group
-    * counts that shrink each bracket. Job count stays O(log(key space) /
-    * log(fan)), independent of data volume and group count; the ONLY
-    * O(groups) driver materialization is the final answer collect the
-    * callers consume.
-    */
   /** Eager localCheckpoint that counts the rows whose `nullCol` is NULL
     * DURING the materializing job itself — one Spark job per ladder round
     * instead of two (Dataset.localCheckpoint(true) runs an internal
@@ -1450,16 +1197,39 @@ final class Engine(val spark: SparkSession, val root: String) {
       counts.sum)
   }
 
+  /** The one exact-order-statistic search, behind [[exactQuantiles]] and
+    * the percentile SQL splice: resolves, per tag group (or, with no
+    * `groupByTags`, over the whole slice as the single group Nil), the
+    * ranks implied by `rankSpecs` — (q, disc=true) the discrete rank
+    * min(max(1, ceil(q*n)), max(n, 1)); (q, disc=false) BOTH bracketing
+    * continuous ranks floor((n-1)*q)+1 and ceil((n-1)*q)+1 (n > 0 only) —
+    * of the field under the SQL float total order, returning each census
+    * group's point count n and every resolved (group, rank) value;
+    * [[rankValue]] turns them into quantile values. Ranks beyond the
+    * non-NaN tail resolve to NaN, ranks inside the -Inf head to -Inf;
+    * everything else bisects.
+    *
+    * DISTRIBUTED LADDER: census, per-(group, rank) brackets, probe
+    * points, and per-round updates all live in DataFrames — the driver
+    * holds only the round counter and an active-row count, so 10^6-10^7
+    * series bisect with O(1) driver memory. Per round: the active state
+    * derives each rank's ladder points inside the plan (IntegralDivide on
+    * the total-order keyspace), points aggregate into one probe array per
+    * group (k-sorted, padded to a spec-static width), the array joins onto
+    * the segment relation for ONE kernel pass, and a fixed-width column
+    * reduction (map-side combined, no point explode) yields per-group
+    * counts that shrink each bracket. Job count stays O(log(key space) /
+    * log(fan)), independent of data volume and group count; the ONLY
+    * O(groups) driver materialization is the final answer collect the
+    * callers consume.
+    */
   private[graft] def exactRanksBy(table: String, field: String,
       rankSpecs: Seq[(Double, Boolean)], groupByTags: Seq[String],
       startTime: Option[java.time.Instant] = scala.None,
       endTime: Option[java.time.Instant] = scala.None,
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty)
-      : (Map[Seq[String], (Long, Long, Long)],
-         Map[(Seq[String], Long), Float]) = {
-    // groupByTags may be EMPTY: the whole table is then one group with
-    // key Nil (used by the percentile SQL splice for global medians).
+      : (Map[Seq[String], Long], Map[(Seq[String], Long), Float]) = {
     require(rankSpecs.nonEmpty, "exactRanksBy needs at least one rank spec.")
     val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
       endTime, tagFilters, tagInFilters, groupByTags)
@@ -1559,8 +1329,8 @@ final class Engine(val spark: SparkSession, val root: String) {
     val width = (ksStatic * fan).toInt
 
     // Ranks per group from the spec list — the same clamp arithmetic as
-    // the sequential ladder (IEEE double ops are deterministic, so the
-    // expression and the Scala closure agree bit-for-bit). The group's
+    // [[rankValue]] (IEEE double ops are deterministic, so the expression
+    // and the Scala closure agree bit-for-bit). The group's
     // distinct ranks are assembled in ONE array so posexplode hands each
     // rank a group-stable position `__r` — its FIXED slot block in every
     // probe array this ladder builds (offset = __r·fan, a pure
@@ -1594,7 +1364,7 @@ final class Engine(val spark: SparkSession, val root: String) {
 
     // The per-rank ladder points, derived INSIDE the plan from (lo, hi)
     // by a compiled kernel ([[LadderKernels.ladderPoints]]) — integer
-    // keyspace arithmetic identical to the sequential ladder.
+    // keyspace arithmetic.
     val ptsExpr: Column = ColumnBridge.column(LadderPointsExpr(
       ColumnBridge.expression(col("lo")), ColumnBridge.expression(col("hi")),
       fan))
@@ -1648,7 +1418,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     // advances as a cached DataFrame, the driver sees only the active
     // count. P is monotone in the probe point, so the first satisfied
     // point is the new upper bound and the last unsatisfied + 1 the new
-    // lower — exactly the sequential ladder's update.
+    // lower.
     // localCheckpoint (NOT cache) each round: the next round's plan
     // references this round's state twice, so without lineage truncation
     // the logical plan doubles per round and the driver OOMs building
@@ -1706,7 +1476,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     bisect(64)
 
     // Shared verification job: P(ans) AND NOT P(prev) per finite answer;
-    // any casualty redoes its full range (same guard as exactQuantiles).
+    // any casualty redoes its full range.
     // Answers proven by their resolving round's own counts (adjacent
     // probed points, the common case) skip re-probing entirely — the
     // verification kernel pass only runs for bound-fallback resolutions.
@@ -1746,12 +1516,11 @@ final class Engine(val spark: SparkSession, val root: String) {
     // The ONLY O(groups) driver materialization: the answer itself, the
     // size the callers return anyway.
     val t = groupByTags.length
-    val stats: Map[Seq[String], (Long, Long, Long)] = censusDf
-      .select(groupByTags.map(col) ++
-        Seq(col("n"), col("negInf"), col("nan")): _*)
+    val counts: Map[Seq[String], Long] = censusDf
+      .select(groupByTags.map(col) :+ col("n"): _*)
       .collect().map { r =>
         val g: Seq[String] = List.tabulate(t)(r.getString)
-        (g, (r.getLong(t), r.getLong(t + 1), r.getLong(t + 2)))
+        (g, r.getLong(t))
       }.toMap
     val resolved: Map[(Seq[String], Long), Float] = state
       .select(groupByTags.map(col) ++ Seq(col("k"), col("res")): _*)
@@ -1761,7 +1530,38 @@ final class Engine(val spark: SparkSession, val root: String) {
       }.toMap
     censusDf.unpersist(false)
     segCached.unpersist(false)
-    (stats, resolved)
+    (counts, resolved)
+  }
+
+  /** Quantile `q` of group `g` from [[exactRanksBy]]'s per-group point
+    * counts and resolved ranks: with `disc`, the value at the discrete
+    * rank min(max(1, ceil(q·n)), n); otherwise Spark Percentile's
+    * interpolation (higher−pos)·vLo + (pos−lower)·vHi at pos = (n−1)·q,
+    * with its shortcut to vLo when the two values are equal as boxed
+    * Floats (NaN equals NaN, -0.0 does not equal 0.0). NaN for a group
+    * with no points (or none in the census).
+    */
+  private[graft] def rankValue(counts: Map[Seq[String], Long],
+      resolved: Map[(Seq[String], Long), Float], g: Seq[String], q: Double,
+      disc: Boolean): Double = {
+    val n = counts.getOrElse(g, 0L)
+    if (n == 0L) Double.NaN
+    else if (disc)
+      resolved((g, math.min(math.max(1L, math.ceil(q * n).toLong), n))).toDouble
+    else {
+      val pos = (n - 1).toDouble * q
+      val lower = math.floor(pos).toLong
+      val higher = math.ceil(pos).toLong
+      val vLo = resolved((g, lower + 1L))
+      if (higher == lower) vLo.toDouble
+      else {
+        val vHi = resolved((g, higher + 1L))
+        if (java.lang.Float.valueOf(vLo).equals(java.lang.Float.valueOf(vHi)))
+          vLo.toDouble
+        else (higher.toDouble - pos) * vLo.toDouble +
+          (pos - lower.toDouble) * vHi.toDouble
+      }
+    }
   }
 
 
@@ -1909,18 +1709,16 @@ final class Engine(val spark: SparkSession, val root: String) {
       tagFilters: Map[String, String] = Map.empty,
       tagInFilters: Map[String, Seq[String]] = Map.empty): DataFrame = {
     val meta = dataFolder.metadata(table)
-    require(meta.isTimeSeries, s"$table is not a time series table.")
-    require(meta.fieldColumns.contains(field),
-      s"$field is not a stored field of $table.")
     val bucketUs = SegmentSlice.micros(bucket)
     require(bucketUs > 0, "Bucket width must be at least one microsecond.")
     val tags = meta.tagColumns
-    val tsName = meta.timestampColumn
 
     // Segment-native anchors: per-bucket value bounds + timestamp extent.
+    // The bucketed read's slice runs the table and field checks.
     val anchors = readTimeSeriesTableBucketed(table, bucket, Seq(field),
       Seq(Aggregate.Min, Aggregate.Max), tags, startTime, endTime,
       tagFilters, tagInFilters, tsAggregates = Seq(Aggregate.Min, Aggregate.Max))
+    val tsName = meta.timestampColumn
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(tags.map(col): _*).orderBy(col("__b"))
     val ctx = anchors.select(tags.map(col) ++ Seq(
@@ -2971,9 +2769,16 @@ private[graft] object SegmentSlice {
       startTime.map(micros), endTime.map(micros), tagFilters, tagInFilters,
       groupByTags, extentOnly)
 
-  /** Epoch microseconds of an instant (sub-microsecond nanos truncate). */
+  /** Epoch microseconds of an instant (sub-microsecond nanos truncate),
+    * failing on overflow.
+    */
   def micros(i: java.time.Instant): Long =
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
+    Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
+      i.getNano / 1000L)
+
+  /** The instant at epoch microseconds `us`. */
+  def instant(us: Long): java.time.Instant = java.time.Instant.ofEpochSecond(
+    Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)
 
   /** A duration in microseconds, failing on overflow. */
   def micros(d: java.time.Duration): Long =

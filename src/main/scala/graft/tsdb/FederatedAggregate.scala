@@ -126,13 +126,6 @@ object FederatedAggregate {
   @volatile private[graft] var plantDropFrameForTests = false
   @volatile private[graft] var plantRankBugForTests = false
 
-  /** Test/tooling-only: force the generic SQL probe rounds even for
-    * segment-native-eligible statements — the A/B switch behind
-    * tools.RankProbeAB's fast-vs-generic round-cost measurement. Never
-    * set in production code.
-    */
-  @volatile private[graft] var disableNativeProbeForTests = false
-
   /** Test-only: pin the rank-search round cap so specs can force the
     * paginated-fetch safety valve without a 500-round fixture. Never set
     * in production code.
@@ -643,8 +636,7 @@ object FederatedAggregate {
     // (0.95×). Gate/4 places the measured point comfortably native while
     // keeping truly tiny multi-field tables on the generic rounds.
     val fastProbe: Option[(IndexedSeq[RankProbe.Target], Long)] =
-      if (engine.isEmpty || analyzeSql.isDefined || quantiles.isEmpty ||
-        disableNativeProbeForTests)
+      if (engine.isEmpty || analyzeSql.isDefined || quantiles.isEmpty)
         scala.None
       else {
         val fieldNames = qChildren.map(c => quantileChildren(c) match {

@@ -6,8 +6,9 @@ import graft.tsdb.FederatedAggregate
 
 /** A/B cost of the federated rank search's SEGMENT-NATIVE rounds vs the
   * generic SQL rounds — SAME statements, same endpoints, same session;
-  * only the probe/fetch transport differs (the test-only switch forces
-  * the generic path on eligible statements). Values are asserted equal
+  * only the probe/fetch transport differs (pinning the native size gate
+  * [[FederatedAggregate.NativeProbeMinPoints]] to 0 or Long.MaxValue
+  * selects the path). Values are asserted equal
   * between the two paths before any timing is reported.
   *
   * Two shapes over the cached sf tables, each through a live
@@ -61,23 +62,19 @@ object RankProbeAB {
       def ab(name: String, sel: String,
           run: String => Array[org.apache.spark.sql.Row],
           med: String => Double): Unit = {
-        def native[T](body: => T): T = {
-          // Pin the size gate open so the arm measures the NATIVE rounds
-          // even below the production crossover. Save/restore the PRIOR
-          // value — never a hard-coded constant — so the tool composes
-          // with anything else that pinned the gate in this JVM.
+        // Each arm pins the size gate: 0 opens it so the NATIVE rounds run
+        // even below the production crossover, Long.MaxValue shuts it so
+        // every child keeps the generic rounds. Save/restore the PRIOR
+        // value — never a hard-coded constant — so the tool composes with
+        // anything else that pinned the gate in this JVM.
+        def gated[T](minPoints: Long)(body: => T): T = {
           val saved = FederatedAggregate.NativeProbeMinPoints
-          FederatedAggregate.NativeProbeMinPoints = 0L
-          FederatedAggregate.disableNativeProbeForTests = false
+          FederatedAggregate.NativeProbeMinPoints = minPoints
           try body finally
             FederatedAggregate.NativeProbeMinPoints = saved
         }
-        def generic[T](body: => T): T = {
-          val saved = FederatedAggregate.disableNativeProbeForTests
-          FederatedAggregate.disableNativeProbeForTests = true
-          try body finally
-            FederatedAggregate.disableNativeProbeForTests = saved
-        }
+        def native[T](body: => T): T = gated(0L)(body)
+        def generic[T](body: => T): T = gated(Long.MaxValue)(body)
         // Values must be identical on both paths before timing means
         // anything.
         val fastRows = native(run(sel)).map(_.toString).sorted.toSeq
@@ -132,7 +129,6 @@ object RankProbeAB {
             "FROM big GROUP BY tag", runBig, medBig)
       } finally bigServer.close()
     } finally {
-      FederatedAggregate.disableNativeProbeForTests = false
       server.close()
       spark.stop()
     }

@@ -170,7 +170,7 @@ object ScaleDrive {
     }
 
     val medians = timed("exact median per series (1000)") {
-      engine.exactQuantilesBy("big", "v", Seq(0.5), Seq("tag"))
+      engine.exactQuantiles("big", "v", Seq(0.5), Seq("tag"))
         .collect().map(r => r.getString(0) -> r.getFloat(2)).toMap
     }
     println(f"  medians: ${medians.size}%,d series")
@@ -203,7 +203,7 @@ object ScaleDrive {
       System.gc()
       val heapBefore = rt.totalMemory() - rt.freeMemory()
       val wideRows = timed(f"exact median, $qGroups%,d groups") {
-        engine.exactQuantilesBy("wide", "v", Seq(0.5), Seq("tag")).count()
+        engine.exactQuantiles("wide", "v", Seq(0.5), Seq("tag")).count()
       }
       System.gc()
       val heapAfter = rt.totalMemory() - rt.freeMemory()

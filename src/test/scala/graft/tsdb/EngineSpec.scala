@@ -940,6 +940,26 @@ class EngineSpec extends AnyFunSuite {
     assert(n == 200L)
   }
 
+  test("a time bound beyond the microsecond range fails instead of pruning") {
+    val engine = newEngine()
+    engine.sql("CREATE TIME SERIES TABLE tb(ts_us TIMESTAMP, field_1 FIELD, " +
+      "field_2 FIELD, tag TAG)")
+    engine.write("tb", makePointsDf(200, Seq("a")))
+    def count(start: Option[java.time.Instant],
+        end: Option[java.time.Instant]): Long =
+      engine.readTimeSeriesTable("tb", Seq("field_1"), engine.Aggregate.Count,
+        startTime = start, endTime = end).collect().head.getLong(0)
+    // Instant.MAX / Instant.MIN as open bounds overflow epoch µs: wrapped,
+    // they would prune every segment and answer 0 instead of failing.
+    for ((start, end) <- Seq((scala.None, Some(java.time.Instant.MAX)),
+        (Some(java.time.Instant.MIN), scala.None))) {
+      val e = intercept[ArithmeticException](count(start, end))
+      assert(e.getMessage.contains("overflow"), e.getMessage)
+    }
+    assert(count(Some(java.time.Instant.EPOCH),
+      Some(java.time.Instant.parse("9999-12-31T23:59:59Z"))) == 200L)
+  }
+
   test("time-range query prunes segments and filters exactly") {
     val engine = newEngine()
     engine.sql("CREATE TIME SERIES TABLE ranget(ts_us TIMESTAMP, field_1 FIELD, " +

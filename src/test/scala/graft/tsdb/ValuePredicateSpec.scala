@@ -707,8 +707,10 @@ class ValuePredicateSpec extends AnyFunSuite {
         .map(_.getFloat(0))
       val sorted = vals.sortWith((a, b) =>
         graft.core.ValueCounts.sqlCompare(a.toDouble, b.toDouble) < 0)
-      val got = engine.exactQuantiles(t, "value", qs)
-      for (((q, v), _) <- got.zipWithIndex) {
+      val got = engine.exactQuantiles(t, "value", qs).collect()
+        .map(r => (r.getDouble(0), r.getFloat(1)))
+      assert(got.map(_._1).toSeq == qs, s"table=$t")
+      for ((q, v) <- got) {
         val k = math.max(1L, math.ceil(q * sorted.length).toLong).toInt
         val want = sorted(k - 1)
         assert(graft.core.ValueCounts.sqlCompare(v.toDouble,
@@ -729,12 +731,34 @@ class ValuePredicateSpec extends AnyFunSuite {
         graft.core.ValueCounts.sqlCompare(a.toDouble, b.toDouble) < 0)
     val gotR = engine.exactQuantiles("qt", "value", Seq(0.5),
       startTime = Some(inst(wLo)), endTime = Some(inst(wHi)))
+      .collect().head.getFloat(1)
     val wantR = inWin((math.ceil(0.5 * inWin.length).toInt - 1).max(0))
-    assert(graft.core.ValueCounts.sqlCompare(gotR.head._2.toDouble,
-      wantR.toDouble) == 0 || (gotR.head._2.isNaN && wantR.isNaN))
+    assert(graft.core.ValueCounts.sqlCompare(gotR.toDouble,
+      wantR.toDouble) == 0 || (gotR.isNaN && wantR.isNaN))
+    // A window holding no points answers one NaN row per q: between two
+    // adjacent timestamps (segments straddle it) and past the last point
+    // (no segment reaches it).
+    val ts = engine.readTable("qt").select(unix_micros(col("ts")))
+      .distinct().orderBy(unix_micros(col("ts"))).limit(2).collect()
+      .map(_.getLong(0))
+    for ((eLo, eHi) <- Seq((ts(0) + 1, ts(1) - 1), (hi + 1, hi + 1000000L))) {
+      val empty = engine.exactQuantiles("qt", "value", qs,
+          startTime = Some(inst(eLo)), endTime = Some(inst(eHi)))
+        .collect().map(r => (r.getDouble(0), r.getFloat(1))).toSeq
+      assert(empty.map(_._1) == qs && empty.forall(_._2.isNaN),
+        s"empty window [$eLo, $eHi]: $empty")
+    }
+    // -0.0 comes back as 0.0.
+    import spark.implicits._
+    engine.sql("CREATE TIME SERIES TABLE qz(ts TIMESTAMP, value FIELD, tag TAG)")
+    engine.write("qz", (1 to 20).map(i =>
+      (i * 100L, if (i <= 10) -0.0f else 1.0f, "z")).toDF("ts", "value", "tag"))
+    val zero = engine.exactQuantiles("qz", "value", Seq(0.25, 1.0)).collect()
+      .map(r => java.lang.Float.floatToRawIntBits(r.getFloat(1))).toSeq
+    assert(zero == Seq(0.0f, 1.0f).map(java.lang.Float.floatToRawIntBits))
   }
 
-  test("exactQuantilesBy matches per-group point-level order statistics") {
+  test("exactQuantiles per tag matches point-level order statistics") {
     val engine = newEngine()
     buildTable(engine, "qg", "", irregular = false)
     buildTable(engine, "qgy", "(2.0%)", irregular = true)
@@ -747,7 +771,7 @@ class ValuePredicateSpec extends AnyFunSuite {
           tag -> rows.map(_.getFloat(1)).sortWith((a, b) =>
             graft.core.ValueCounts.sqlCompare(a.toDouble, b.toDouble) < 0)
         }
-      val got = engine.exactQuantilesBy(tbl, "value", qs, Seq("tag"))
+      val got = engine.exactQuantiles(tbl, "value", qs, Seq("tag"))
         .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getFloat(2))
         .toMap
       assert(got.size == byTag.size * qs.size)
@@ -776,7 +800,7 @@ class ValuePredicateSpec extends AnyFunSuite {
         tag -> rows.map(_.getFloat(1)).sortWith((a, b) =>
           graft.core.ValueCounts.sqlCompare(a.toDouble, b.toDouble) < 0)
       }
-    val gotR = engine.exactQuantilesBy("qg", "value", Seq(0.5), Seq("tag"),
+    val gotR = engine.exactQuantiles("qg", "value", Seq(0.5), Seq("tag"),
         startTime = Some(inst(wLo)), endTime = Some(inst(wHi)))
       .collect().map(r => r.getString(0) -> r.getFloat(2)).toMap
     inWin.foreach { case (tag, sorted) =>
@@ -784,6 +808,43 @@ class ValuePredicateSpec extends AnyFunSuite {
       assert(graft.core.ValueCounts.sqlCompare(gotR(tag).toDouble,
         want.toDouble) == 0 || (gotR(tag).isNaN && want.isNaN),
         s"ranged tag=$tag")
+    }
+    // A window inside a segment of tag a, between two of its points, holds
+    // no point of a but one of another tag: a still answers, NaN per q.
+    val byTagTs = engine.readTable("qgy")
+      .select(col("tag"), unix_micros(col("ts"))).collect()
+      .groupBy(_.getString(0)).map { case (tag, rows) =>
+        tag -> rows.map(_.getLong(1)).sorted }
+    val aSegments = SegmentSlice(engine.dataFolder, "qgy", Seq("value"))
+      .segments.where(col("tag") === "a")
+      .select(col("start_time"), col("end_time")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val (gLo, gHi) = byTagTs("a").sliding(2).map(p => (p(0) + 1, p(1) - 1))
+      .find { case (l, h) =>
+        aSegments.exists { case (s0, s1) => s0 < l && s1 > h } &&
+          byTagTs.exists { case (tag, t) =>
+            tag != "a" && t.exists(x => x >= l && x <= h) }
+      }.get
+    val gap = engine.exactQuantiles("qgy", "value", Seq(0.5, 1.0), Seq("tag"),
+        startTime = Some(inst(gLo)), endTime = Some(inst(gHi)))
+      .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getFloat(2))
+      .toMap
+    assert(gap(("a", 0.5)).isNaN && gap(("a", 1.0)).isNaN, s"gap: $gap")
+    val inGap = engine.readTable("qgy")
+      .where(unix_micros(col("ts")).between(gLo, gHi))
+      .select(col("tag"), col("value")).collect()
+      .groupBy(_.getString(0)).map { case (tag, rows) =>
+        tag -> rows.map(_.getFloat(1)).sortWith((a, b) =>
+          graft.core.ValueCounts.sqlCompare(a.toDouble, b.toDouble) < 0)
+      }
+    assert(inGap.keySet.subsetOf(gap.keySet.map(_._1)), s"gap: $gap")
+    gap.foreach { case ((tag, q), v) =>
+      val sorted = inGap.getOrElse(tag, Array.empty[Float])
+      val want = if (sorted.isEmpty) Float.NaN
+        else sorted(math.ceil(q * sorted.length).toInt - 1)
+      assert(graft.core.ValueCounts.sqlCompare(v.toDouble,
+        want.toDouble) == 0 || (v.isNaN && want.isNaN),
+        s"gap tag=$tag q=$q got=$v want=$want")
     }
   }
 
