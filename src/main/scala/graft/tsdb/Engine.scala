@@ -799,10 +799,9 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime, tagFilters, tagInFilters, groupByTags)
     val keys = groupByTags.map(col)
     val partials = slice.partials(keys) { clip =>
-      Seq(clip.fold(SegmentAggregates.countInRangeCol(lower, upper)) {
-          case (lo, hi) =>
-            SegmentAggregates.countInRangeClippedCol(lower, upper, lo, hi)
-        }.as("__tc_in"),
+      val (lo, hi) = SegmentSlice.window(clip)
+      Seq(SegmentAggregates.countInRangeCol(lit(lower), lit(upper), lo, hi)
+          .as("__tc_in"),
         SegmentSlice.lenOf(clip).as("__tc_n"))
     }
     val aggs = Seq(
@@ -925,7 +924,8 @@ final class Engine(val spark: SparkSession, val root: String) {
       "A group-by tag named 'bucket' would collide with the output column.")
     val bucketUs = SegmentSlice.micros(bucket)
     require(bucketUs > 0, "Bucket width must be at least one microsecond.")
-    val up = upper.getOrElse(Double.NaN)
+    val lo = SegmentAggregates.boundLit(lower)
+    val up = SegmentAggregates.boundLit(upper)
     val slice = SegmentSlice(dataFolder, table, Seq(field), startTime,
       endTime, tagFilters, tagInFilters, groupByTags)
     val (tsLo, tsHi) = slice.clip
@@ -946,13 +946,13 @@ final class Engine(val spark: SparkSession, val root: String) {
         bucketOf(col("start_time")) === bucketOf(col("end_time")))(
       _.select(keys ++ Seq(
         bucketOf(col("start_time")).as("__graft_bucket"),
-        SegmentAggregates.statsInRangeCol(lower, up).as("__ts_st")): _*),
+        SegmentAggregates.statsInRangeCol(lo, up).as("__ts_st")): _*),
       _.withColumn("__graft_bucket",
           explode(sequence(bucketOf(clipLo), bucketOf(clipHi),
             lit(bucketUs))))
         .select(keys ++ Seq(
           col("__graft_bucket"),
-          SegmentAggregates.statsInRangeDynCol(lower, up,
+          SegmentAggregates.statsInRangeCol(lo, up,
             greatest(col("__graft_bucket"), lit(tsLo)),
             least(col("__graft_bucket") + lit(bucketUs - 1L), lit(tsHi)))
             .as("__ts_st")): _*))
@@ -991,8 +991,8 @@ final class Engine(val spark: SparkSession, val root: String) {
       s"$field is not a stored field of $table.")
     val segs = dataFolder.segmentsStream(table, maxVersionsPerTrigger)
       .where(SegmentSlice.fieldColumnPredicate(meta, Seq(field)))
-    val st = SegmentAggregates
-      .statsInRangeCol(lower, upper.getOrElse(Double.NaN))
+    val st = SegmentAggregates.statsInRangeCol(
+      SegmentAggregates.boundLit(lower), SegmentAggregates.boundLit(upper))
     val keys = window(col("__seg_end"), windowDuration) +:
       meta.tagColumns.map(col)
     segs
@@ -1046,8 +1046,8 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime, tagFilters, tagInFilters)
     val partials = slice.partials(keys, joined) { clip =>
       val (lo, hi) = SegmentSlice.window(clip)
-      Seq(SegmentAggregates.statsBetweenCol(lowerInclusive,
-        col("lower"), col("upper"), lo, hi).as("__ts_st"))
+      Seq(SegmentAggregates.statsInRangeCol(col("lower"), col("upper"),
+        lit(lo), lit(hi), lowerInclusive).as("__ts_st"))
     }
     aggregateStatsPartials(partials, keys, field)
   }
@@ -1239,14 +1239,10 @@ final class Engine(val spark: SparkSession, val root: String) {
     val ksStatic = rankSpecs.distinct.map { case (_, d) => if (d) 1 else 2 }.sum
 
     import org.apache.spark.sql.graft.ColumnBridge
-    def attrOf(name: String) = ColumnBridge.expression(col(name))
     def keyToFloat(c: Column): Column =
       ColumnBridge.column(FloatFromOrderKey(ColumnBridge.expression(c)))
     def floatToKey(c: Column): Column =
       ColumnBridge.column(FloatTotalOrderKey(ColumnBridge.expression(c)))
-    def longDiv(a: Column, b: Column): Column = ColumnBridge.column(
-      new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-        ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
     // One synthetic constant key unifies the grouped and whole-table
     // shapes (the global case is ONE group — a single-row probe frame).
@@ -1278,12 +1274,10 @@ final class Engine(val spark: SparkSession, val root: String) {
     // answer: per group n, the -Inf head, the NaN tail, and the stored
     // value bounds seeding each bracket (cutting the key range from 2^32
     // to the group's actual span).
-    val censusArr = (tsLo: Long, tsHi: Long) => ColumnBridge.column(
-      SegmentCountAboveMulti(
-        Seq(Double.NegativeInfinity, Double.PositiveInfinity), tsLo, tsHi,
-        attrOf("model_type_id"), attrOf("start_time"), attrOf("end_time"),
-        attrOf("timestamps"), attrOf("min_value"), attrOf("max_value"),
-        attrOf("values"), attrOf("residuals")))
+    val censusArr = (tsLo: Long, tsHi: Long) =>
+      SegmentAggregates.countAboveMultiCol(
+        typedLit(Seq(Double.NegativeInfinity, Double.PositiveInfinity)),
+        tsLo, tsHi)
     val censusParts = partialsOf(censusArr,
       Seq(col("min_value").as("__mn"), col("max_value").as("__mx")),
       segCached)
@@ -1395,11 +1389,8 @@ final class Engine(val spark: SparkSession, val root: String) {
           ColumnBridge.expression(col("__sl")), probeWidth, block))
           .as("__xs"): _*)
       val segments = segCached.join(probes, keyNames)
-      val dynArr = (tsLo: Long, tsHi: Long) => ColumnBridge.column(
-        SegmentCountAboveMultiDyn(tsLo, tsHi, attrOf("__xs"),
-          attrOf("model_type_id"), attrOf("start_time"), attrOf("end_time"),
-          attrOf("timestamps"), attrOf("min_value"), attrOf("max_value"),
-          attrOf("values"), attrOf("residuals")))
+      val dynArr = (tsLo: Long, tsHi: Long) =>
+        SegmentAggregates.countAboveMultiCol(col("__xs"), tsLo, tsHi)
       val parts = partialsOf(dynArr, Seq.empty, segments)
       val counts = parts.groupBy(keys: _*).agg(
         ColumnBridge.column(LongVectorSum(
@@ -1583,7 +1574,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       endTime, tagFilters, tagInFilters)
     val partials = slice.partials(keys, joined) { clip =>
       val (lo, hi) = SegmentSlice.window(clip)
-      Seq(SegmentAggregates.countBetweenCol(col("lower"), col("upper"), lo, hi)
+      Seq(SegmentAggregates.countInRangeCol(col("lower"), col("upper"), lo, hi)
           .as("__tc_in"),
         SegmentSlice.lenOf(clip).as("__tc_n"))
     }
@@ -2414,23 +2405,8 @@ final class Engine(val spark: SparkSession, val root: String) {
           // original travel clause — each endpoint resolves `VERSION AS
           // OF` against its own history, the same per-endpoint semantics
           // plain INCLUDE gives it.
-          val (travelRewritten, travels) =
-            SqlExtensions.rewriteTimeTravel(select)
-          travels.foreach { case (table, travel) =>
-            val snapshot = travel match {
-              case SqlExtensions.AtVersion(v) => readTableVersion(table, v)
-              case SqlExtensions.AtTimestamp(ms) =>
-                readTableAsOfTimestamp(table, ms)
-              case SqlExtensions.AtChanges(a, b) =>
-                readTableChanges(table, a, b)
-            }
-            snapshot.createOrReplaceTempView(
-              SqlExtensions.travelViewName(table, travel))
-          }
           val d = FederatedAggregate.decompose(spark, select,
-            analyzeSql = if (travels.isEmpty) scala.None
-              else Some(travelRewritten),
-            engine = Some(this))
+            analyzeSql = bindTimeTravel(select), engine = Some(this))
           d.merge(runAll(d.partialSql), runAll)
         } else {
           val frames = runEndpoints(select, pin = false)
@@ -2463,22 +2439,29 @@ final class Engine(val spark: SparkSession, val root: String) {
         emptyOk()
       case SqlExtensions.Passthrough =>
         registerViews()
-        // Delta-style time travel: bind each `t VERSION AS OF n` /
-        // `t TIMESTAMP AS OF '...'` to a snapshot view before delegating.
-        val (rewritten, travels) = SqlExtensions.rewriteTimeTravel(trimmed)
-        travels.foreach { case (table, travel) =>
-          val snapshot = travel match {
-            case SqlExtensions.AtVersion(v) => readTableVersion(table, v)
-            case SqlExtensions.AtTimestamp(ms) =>
-              readTableAsOfTimestamp(table, ms)
-            case SqlExtensions.AtChanges(a, b) => readTableChanges(table, a, b)
-          }
-          snapshot.createOrReplaceTempView(
-            SqlExtensions.travelViewName(table, travel))
-        }
-        val df = spark.sql(rewritten)
+        val df = spark.sql(bindTimeTravel(trimmed).getOrElse(trimmed))
         graft.plans.SegmentAggregateSqlRewrite.tryRewrite(this, df).getOrElse(df)
     }
+  }
+
+  /** Delta-style time travel: bind each `t VERSION AS OF n`,
+    * `t TIMESTAMP AS OF '...'` and `t CHANGES FROM a TO b` of `sql` to a
+    * snapshot view, and return the statement over those views (None when
+    * it travels nowhere).
+    */
+  private def bindTimeTravel(sql: String): Option[String] = {
+    val (rewritten, travels) = SqlExtensions.rewriteTimeTravel(sql)
+    travels.foreach { case (table, travel) =>
+      val snapshot = travel match {
+        case SqlExtensions.AtVersion(v) => readTableVersion(table, v)
+        case SqlExtensions.AtTimestamp(ms) =>
+          readTableAsOfTimestamp(table, ms)
+        case SqlExtensions.AtChanges(a, b) => readTableChanges(table, a, b)
+      }
+      snapshot.createOrReplaceTempView(
+        SqlExtensions.travelViewName(table, travel))
+    }
+    if (travels.isEmpty) scala.None else Some(rewritten)
   }
 
   /** Answer one `GRAFT SEGMENT PROBE` statement — a probe or fetch round
@@ -2561,10 +2544,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       // total order, exactly like the generic `count_if(x <= t)`).
       val perSeg = slice.partials(Seq(col("__sid")), joined) { clip =>
           val (lo, hi) = SegmentSlice.window(clip)
-          Seq(ColumnBridge.column(SegmentCountAboveMultiDyn(lo, hi,
-              attrOf("__xs"), attrOf("model_type_id"), attrOf("start_time"),
-              attrOf("end_time"), attrOf("timestamps"), attrOf("min_value"),
-              attrOf("max_value"), attrOf("values"), attrOf("residuals")))
+          Seq(SegmentAggregates.countAboveMultiCol(col("__xs"), lo, hi)
               .as("__arr"),
             SegmentSlice.lenOf(clip).as("__n"))
         }

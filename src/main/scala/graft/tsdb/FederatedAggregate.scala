@@ -253,7 +253,10 @@ object FederatedAggregate {
       case _ =>
     }
 
-    val (head, fromTail0) = splitAtTopLevelFrom(selectText)
+    // Clause text is cut from the statement and re-embedded in generated
+    // ones (the probe queries wrap FROM/WHERE in parens), where a `--`
+    // comment would swallow what follows: drop comments first.
+    val (head, fromTail0) = splitAtTopLevelFrom(withoutComments(selectText))
     if (head.isEmpty || fromTail0.isEmpty)
       fail("could not locate the statement's top-level FROM clause.")
     // The partial and probe queries must not carry the statement's
@@ -1223,146 +1226,120 @@ object FederatedAggregate {
         "plain INCLUDE.")
   }
 
-  /** Split at the SELECT's own FROM: the first `FROM` keyword at paren
-    * depth 0 outside quotes/backticks (`extract(x FROM ts)` and subquery
-    * FROMs sit inside parens).
+  /** Paren depth of every character of `sql` that is SQL code; -1 inside
+    * a quoted string or backticked identifier (delimiters included), -2
+    * inside a `--` or `/* */` comment. The one scanner behind every clause
+    * cut below: keywords, parens and commas inside quotes or comments
+    * never cut, and an apostrophe in a comment opens no quote.
     */
-  private[graft] def splitAtTopLevelFrom(sql: String): (String, String) = {
+  private def codeDepths(sql: String): Array[Int] = {
+    val out = new Array[Int](sql.length)
+    def mark(from: Int, until: Int, v: Int): Int = {
+      java.util.Arrays.fill(out, from, until.min(sql.length), v)
+      until
+    }
     var depth = 0
-    var quote: Char = 0
     var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'f' | 'F' if depth == 0 &&
-            sql.regionMatches(true, i, "FROM", 0, 4) &&
-            (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
-            (i + 4 >= sql.length || !isWordChar(sql.charAt(i + 4))) =>
-          return (sql.substring(0, i).trim, sql.substring(i).trim)
-        case _ =>
+      if (c == '\'' || c == '"' || c == '`') {
+        var j = i + 1
+        while (j < sql.length && sql.charAt(j) != c) {
+          if (c != '`' && sql.charAt(j) == '\\') j += 1
+          j += 1
+        }
+        i = mark(i, j + 1, -1)
+      } else if (sql.startsWith("--", i)) {
+        val nl = sql.indexOf('\n', i)
+        i = mark(i, if (nl < 0) sql.length else nl, -2)
+      } else if (sql.startsWith("/*", i)) {
+        val close = sql.indexOf("*/", i + 2)
+        i = mark(i, if (close < 0) sql.length else close + 2, -2)
+      } else {
+        if (c == ')') depth -= 1
+        out(i) = depth
+        if (c == '(') depth += 1
+        i += 1
       }
-      i += 1
     }
-    (sql.trim, "")
+    out
   }
+
+  /** `sql` with every comment blanked to spaces, so clause text cut from
+    * it can be re-embedded anywhere in a generated statement.
+    */
+  private def withoutComments(sql: String): String = {
+    val depths = codeDepths(sql)
+    sql.indices.map(i => if (depths(i) == -2) ' ' else sql.charAt(i)).mkString
+  }
+
+  /** The first index of `sql` at paren depth 0, outside quotes and
+    * comments, where `at` holds.
+    */
+  private def topLevelIndex(sql: String)(at: Int => Boolean): Option[Int] = {
+    val depths = codeDepths(sql)
+    sql.indices.find(i => depths(i) == 0 && at(i))
+  }
+
+  /** True when keyword `w` starts at `i` of `sql` as a whole word. */
+  private def wordAt(sql: String, i: Int, w: String): Boolean = {
+    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
+    sql.regionMatches(true, i, w, 0, w.length) &&
+      (i == 0 || !isWordChar(sql.charAt(i - 1))) &&
+      (i + w.length >= sql.length || !isWordChar(sql.charAt(i + w.length)))
+  }
+
+  private def groupByAt(sql: String, i: Int): Boolean =
+    wordAt(sql, i, "GROUP") &&
+      sql.substring(i).matches("(?is)^GROUP\\s+BY\\b.*")
+
+  /** Split at the SELECT's own FROM: the first top-level `FROM` keyword
+    * (`extract(x FROM ts)` and subquery FROMs sit inside parens).
+    */
+  private[graft] def splitAtTopLevelFrom(sql: String): (String, String) =
+    topLevelIndex(sql)(wordAt(sql, _, "FROM")) match {
+      case Some(i) => (sql.substring(0, i).trim, sql.substring(i).trim)
+      case scala.None => (sql.trim, "")
+    }
 
   /** Drop the statement's trailing top-level HAVING / ORDER BY / SORT BY /
     * LIMIT / OFFSET clauses: they replay locally on the answer-sized
     * merged frame, so they must not ride into the partial or probe
     * queries (a HAVING over partials would mis-filter; a per-endpoint
-    * ORDER/LIMIT would truncate groups before the merge). Scans at paren
-    * depth 0 outside quotes/backticks, like the splitters below — a
-    * subquery's own trailing clauses sit inside parens and survive.
+    * ORDER/LIMIT would truncate groups before the merge). A subquery's
+    * own trailing clauses sit inside parens and survive.
     */
-  private[graft] def stripTopLevelTrailers(fromTail: String): String = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    def wordAt(idx: Int, w: String): Boolean =
-      fromTail.regionMatches(true, idx, w, 0, w.length) &&
-        (idx == 0 || !isWordChar(fromTail.charAt(idx - 1))) &&
-        (idx + w.length >= fromTail.length ||
-          !isWordChar(fromTail.charAt(idx + w.length)))
-    while (i < fromTail.length) {
-      val c = fromTail.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ if depth == 0 &&
-            (wordAt(i, "HAVING") || wordAt(i, "LIMIT") ||
-              wordAt(i, "OFFSET") ||
-              ((wordAt(i, "ORDER") || wordAt(i, "SORT")) && fromTail
-                .substring(i).matches("(?is)^(ORDER|SORT)\\s+BY\\b.*"))) =>
-          return fromTail.substring(0, i).trim
-        case _ =>
-      }
-      i += 1
-    }
-    fromTail.trim
-  }
+  private[graft] def stripTopLevelTrailers(fromTail: String): String =
+    topLevelIndex(fromTail)(i =>
+      wordAt(fromTail, i, "HAVING") || wordAt(fromTail, i, "LIMIT") ||
+        wordAt(fromTail, i, "OFFSET") ||
+        ((wordAt(fromTail, i, "ORDER") || wordAt(fromTail, i, "SORT")) &&
+          fromTail.substring(i).matches("(?is)^(ORDER|SORT)\\s+BY\\b.*")))
+      .fold(fromTail)(fromTail.substring(0, _)).trim
 
   /** Drop the trailing top-level GROUP BY clause (HAVING/ORDER/LIMIT/
     * OFFSET were stripped upstream, so the grouping list runs to the
     * statement end).
     */
-  private[graft] def stripTopLevelGroupBy(fromTail: String): String = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < fromTail.length) {
-      val c = fromTail.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'g' | 'G' if depth == 0 &&
-            fromTail.regionMatches(true, i, "GROUP", 0, 5) &&
-            (i == 0 || !isWordChar(fromTail.charAt(i - 1))) &&
-            fromTail.substring(i).matches("(?is)^GROUP\\s+BY\\b.*") =>
-          return fromTail.substring(0, i).trim
-        case _ =>
-      }
-      i += 1
-    }
-    fromTail.trim
-  }
+  private[graft] def stripTopLevelGroupBy(fromTail: String): String =
+    topLevelIndex(fromTail)(groupByAt(fromTail, _))
+      .fold(fromTail)(fromTail.substring(0, _)).trim
 
   /** The partial query replaces the select list, so ordinal GROUP BY
     * references (`GROUP BY 1`) would silently re-bind — reject them.
     */
-  private def rejectOrdinalGroupBy(fromTail: String): Unit = {
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    def isWordChar(c: Char) = Character.isLetterOrDigit(c) || c == '_'
-    while (i < fromTail.length) {
-      val c = fromTail.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0 }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case 'g' | 'G' if depth == 0 &&
-            fromTail.regionMatches(true, i, "GROUP", 0, 5) &&
-            (i == 0 || !isWordChar(fromTail.charAt(i - 1))) =>
-          val rest = fromTail.substring(i)
-          val afterBy = rest.replaceFirst("(?is)^GROUP\\s+BY\\s*", "")
-          if (afterBy.length < rest.length) {
-            // Top-level comma split of the grouping list (it runs to the
-            // statement end: HAVING/ORDER/LIMIT were stripped upstream).
-            var d2 = 0; var q2: Char = 0; var start = 0; var j = 0
-            val toks = mutable.ArrayBuffer.empty[String]
-            while (j < afterBy.length) {
-              val c2 = afterBy.charAt(j)
-              if (q2 != 0) { if (c2 == q2) q2 = 0 }
-              else c2 match {
-                case '\'' | '"' | '`' => q2 = c2
-                case '(' => d2 += 1
-                case ')' => d2 -= 1
-                case ',' if d2 == 0 =>
-                  toks += afterBy.substring(start, j); start = j + 1
-                case _ =>
-              }
-              j += 1
-            }
-            toks += afterBy.substring(start)
-            if (toks.exists(_.trim.matches("\\d+"))) fail(
-              "ordinal GROUP BY references re-bind when the select list " +
-                "is rewritten to partials; use explicit expressions.")
-          }
-        case _ =>
-      }
-      i += 1
+  private def rejectOrdinalGroupBy(fromTail: String): Unit =
+    topLevelIndex(fromTail)(groupByAt(fromTail, _)).foreach { g =>
+      val list = fromTail.substring(g)
+        .replaceFirst("(?is)^GROUP\\s+BY\\s*", "")
+      // The grouping list runs to the statement end (HAVING/ORDER/LIMIT
+      // were stripped upstream); split it at its top-level commas.
+      val depths = codeDepths(list)
+      val cuts = -1 +: list.indices.filter(i =>
+        list.charAt(i) == ',' && depths(i) == 0) :+ list.length
+      if (cuts.sliding(2).exists { case Seq(a, b) =>
+          list.substring(a + 1, b).trim.matches("\\d+") })
+        fail("ordinal GROUP BY references re-bind when the select list " +
+          "is rewritten to partials; use explicit expressions.")
     }
-  }
 }

@@ -16,7 +16,7 @@ import java.util.Base64
   * `GRAFT SEGMENT PROBE <base64>`, a self-contained description of the
   * pruned segment slice plus the per-state thresholds. The endpoint
   * answers it with ONE kernel pass over segment metadata
-  * ([[SegmentCountAboveMultiDyn]] / [[SegmentValuesInRange]]): interior
+  * ([[SegmentCountAboveMulti]] / [[SegmentValuesInRange]]): interior
   * segments (bounds fully above/below every threshold) settle from
   * min/max metadata with zero decode, so a probe round costs O(boundary
   * segments), not a full grid — the reference's segment-skipping

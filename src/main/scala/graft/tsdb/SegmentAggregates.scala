@@ -1,7 +1,9 @@
 package graft.tsdb
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.core.{Models, TimestampCodec}
 
@@ -62,110 +64,108 @@ object SegmentAggregates {
       length(col("residuals")) > 0
 
   /** True when the segment's stored bounds prove every value is outside
-    * (lower, upper]. Bound semantics are Spark's own comparison semantics
-    * (NaN greatest, -0 = 0 — matching [[graft.core.ValueCounts.sqlCompare]]):
-    * all-NaN fitted segments carry NaN bounds and compare accordingly. A
-    * HIDDEN NaN (NaN behind non-NaN bounds, MacaqueV/residual-tail only)
-    * is above any non-NaN `upper`, so `max <= lower` still proves 0 —
-    * EXCEPT when `upper` is the unbounded (NaN) sentinel, which includes
-    * NaN values.
+    * the constant interval (lower, upper] (None or NaN upper = unbounded,
+    * NaN values included; None lower = unbounded below). Bound semantics
+    * are Spark's own comparison semantics (NaN greatest, -0 = 0 —
+    * matching [[graft.core.ValueCounts.sqlCompare]]): all-NaN fitted
+    * segments carry NaN bounds and compare accordingly. A HIDDEN NaN (NaN
+    * behind non-NaN bounds, MacaqueV/residual-tail only) is above any
+    * non-NaN `upper`, so `max <= lower` still proves the segment out —
+    * EXCEPT when `upper` is unbounded, which includes NaN values.
     */
-  private def allOutCol(lower: Double, upper: Double): Column =
-    if (upper.isNaN) col("max_value") <= lower && !nanCapable
-    else col("max_value") <= lower || col("min_value") > upper
+  private def allOutCol(lower: Option[Double],
+      upper: Option[Double]): Column = {
+    val up = upper.filterNot(_.isNaN)
+    val below = lower.map(l =>
+      if (up.isEmpty) col("max_value") <= l && !nanCapable
+      else col("max_value") <= l)
+    val above = up.map(col("min_value") > _)
+    (below ++ above).reduceOption(_ || _).getOrElse(lit(false))
+  }
+
+  /** A constant value bound for the kernel helpers below, None for an
+    * unbounded side. It is a Catalyst literal, which [[statsInRangeCol]]
+    * recognizes to pick its short-circuit on the driver.
+    */
+  def boundLit(v: Option[Double]): Column =
+    ColumnBridge.column(Literal.create(v.map(Double.box).orNull, DoubleType))
+
+  /** A [[boundLit]] column's value; None for any other column. */
+  private def constant(bound: Column): Option[Option[Double]] =
+    ColumnBridge.expression(bound) match {
+      case Literal(v, DoubleType) => Some(Option(v).map(_.asInstanceOf[Double]))
+      case _ => None
+    }
 
   /** Count of a segment's reconstructed values in (lower, upper] under SQL
-    * comparison semantics ([[graft.core.ValueCounts.countInRange]]; upper
-    * = Double.NaN means unbounded, including NaN values) — the partial
-    * behind segment-native value-predicate COUNT. Most segments never
-    * decode: the stored value bounds answer entirely-out (0) and, for
-    * segments that cannot hide NaN, entirely-in (len, timestamps-only)
-    * directly; only bound-straddling segments evaluate the kernel, which
-    * is itself closed-form for PMC and O(log len) for Swing.
+    * comparison semantics ([[SegmentCountInRange]]; a NULL or NaN upper is
+    * unbounded, NaN values included) among its points in [tsLo, tsHi] —
+    * the partial behind segment-native value-predicate COUNT, over
+    * constant bounds or PER-ROW bound columns of a broadcast-joined
+    * statistics frame. Most segments never decode: the stored value
+    * bounds answer entirely-out (0) and, unclipped, for segments that
+    * cannot hide NaN, entirely-in (len, timestamps-only) directly; only
+    * bound-straddling segments evaluate the kernel, which is itself
+    * closed-form for PMC and O(log len) for Swing, and clips to the window
+    * exactly (O(1) index arithmetic for regular segments). Per-row NULL
+    * bounds fall through to the kernel.
     */
-  def countInRangeCol(lower: Double, upper: Double): Column = {
-    val kernel = ColumnBridge.column(SegmentCountInRange(
-      lower, upper, Long.MinValue, Long.MaxValue,
-      attr("model_type_id"), attr("start_time"), attr("end_time"),
-      attr("timestamps"), attr("min_value"), attr("max_value"),
-      attr("values"), attr("residuals")))
-    when(allOutCol(lower, upper), lit(0L))
-      .when(!nanCapable && col("min_value") > lower &&
-        col("max_value") <= upper, lenCol)
-      .otherwise(kernel)
-  }
-
-  /** Range-clipped [[countInRangeCol]] for boundary segments: the kernel
-    * applies the timestamp window exactly (O(1) index arithmetic for
-    * regular segments), the bounds still short-circuit entirely-out
-    * segments to zero without touching timestamps.
-    */
-  def countInRangeClippedCol(lower: Double, upper: Double,
-      tsLo: Long, tsHi: Long): Column = {
-    val kernel = ColumnBridge.column(SegmentCountInRange(
-      lower, upper, tsLo, tsHi,
-      attr("model_type_id"), attr("start_time"), attr("end_time"),
-      attr("timestamps"), attr("min_value"), attr("max_value"),
-      attr("values"), attr("residuals")))
-    when(allOutCol(lower, upper), lit(0L)).otherwise(kernel)
-  }
-
-  /** [[countInRangeCol]] with PER-ROW bounds (columns of a broadcast-joined
-    * statistics frame): same metadata fast paths, decided with columnar
-    * comparisons — the partial behind per-group dynamic thresholds. NULL
-    * bounds fall through to the kernel (unbounded).
-    */
-  def countBetweenCol(lowerCol: Column, upperCol: Column,
+  def countInRangeCol(lower: Column, upper: Column,
       tsLo: Long = Long.MinValue, tsHi: Long = Long.MaxValue): Column = {
-    val kernel = ColumnBridge.column(SegmentCountBetween(
-      ColumnBridge.expression(lowerCol), ColumnBridge.expression(upperCol),
-      tsLo, tsHi,
+    val kernel = ColumnBridge.column(SegmentCountInRange(
+      ColumnBridge.expression(lower), ColumnBridge.expression(upper),
+      Literal(tsLo), Literal(tsHi),
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))
+    // Constant bounds fold to plain metadata tests in the optimizer.
+    val allOut = coalesce(
+      when(isnan(upper), col("max_value") <= lower && !nanCapable)
+        .otherwise(col("max_value") <= lower || col("min_value") > upper),
+      lit(false))
+    val allIn = coalesce(!nanCapable && col("min_value") > lower &&
+      col("max_value") <= upper, lit(false))
+    val outOrIn = when(allOut, lit(0L))
+    // A clipped all-in segment still needs the clipped length.
     val clipped = tsLo != Long.MinValue || tsHi != Long.MaxValue
-    val allOut =
-      when(isnan(upperCol), col("max_value") <= lowerCol && !nanCapable)
-        .otherwise(col("max_value") <= lowerCol || col("min_value") > upperCol)
-    val allIn =
-      if (clipped) lit(false) // a clipped all-in still needs the clipped len
-      else !nanCapable &&
-        col("min_value") > lowerCol && col("max_value") <= upperCol
-    when(coalesce(allOut, lit(false)), lit(0L))
-      .when(coalesce(allIn, lit(false)), lenCol)
-      .otherwise(kernel)
+    (if (clipped) outOrIn else outOrIn.when(allIn, lenCol)).otherwise(kernel)
   }
 
-  /** (cnt, sum, mn, mx) struct of a segment's values inside the value
-    * interval ([[graft.core.ValueCounts.statsInRange]]) — the partial
-    * behind segment-native value-filtered SUM/MIN/MAX/AVG. The column
-    * branch answers entirely-out segments from stored bounds without
-    * touching the binary columns (the dominant case under selective
-    * predicates); the kernel itself binary-searches a Swing segment's
-    * in-range run and only evaluates that. `lower` None = no lower bound
-    * (everything from the order's bottom, -Inf included); `upper` NaN =
-    * unbounded above (NaN values included).
+  /** The value-filtered stats partial of a segment where nothing qualifies. */
+  private def emptyStats: Column = struct(lit(0L).as("cnt"),
+    lit(0.0).as("sum"),
+    lit(null).cast("float").as("mn"), lit(null).cast("float").as("mx"),
+    lit(null).cast("long").as("tmin"), lit(null).cast("long").as("tmax"),
+    lit(0.0).as("m2"))
+
+  /** (cnt, sum, mn, mx, tmin, tmax, m2) struct of a segment's values inside
+    * the value interval ([[SegmentStatsInRange]]) among its points in
+    * [tsLo, tsHi] — the partial behind segment-native value-filtered
+    * SUM/MIN/MAX/AVG. `lower` is exclusive unless `lowerInclusive`; a NULL
+    * bound is unbounded on its side (a NULL or NaN upper includes NaN
+    * values). With constant exclusive bounds, the column branch answers
+    * entirely-out segments from stored bounds without touching the binary
+    * columns (the dominant case under selective predicates); a window,
+    * constant or per-row (bucketed stats), can only shrink the in-range
+    * set. Per-row bounds (argmin/argmax, per-group filtered stats) go
+    * straight to the kernel, which classifies entirely-out segments from
+    * its scalar bounds itself. The kernel binary-searches a Swing
+    * segment's in-range run and only evaluates that.
     */
-  def statsInRangeCol(lower: Option[Double], upper: Double,
-      tsLo: Long = Long.MinValue, tsHi: Long = Long.MaxValue): Column = {
-    val kernel = ColumnBridge.column(SegmentStatsInRange(
-      lower.getOrElse(Double.NegativeInfinity), lower.nonEmpty, upper,
-      tsLo, tsHi,
+  def statsInRangeCol(lower: Column, upper: Column,
+      tsLo: Column = lit(Long.MinValue), tsHi: Column = lit(Long.MaxValue),
+      lowerInclusive: Boolean = false): Column = {
+    val kernel = ColumnBridge.column(SegmentStatsInRange(lowerInclusive,
+      ColumnBridge.expression(lower), ColumnBridge.expression(upper),
+      ColumnBridge.expression(tsLo), ColumnBridge.expression(tsHi),
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))
-    val empty = struct(lit(0L).as("cnt"), lit(0.0).as("sum"),
-      lit(null).cast("float").as("mn"), lit(null).cast("float").as("mx"),
-      lit(null).cast("long").as("tmin"), lit(null).cast("long").as("tmax"),
-      lit(0.0).as("m2"))
-    val outBelow = lower
-      .map(l =>
-        if (upper.isNaN) col("max_value") <= l && !nanCapable
-        else col("max_value") <= l)
-      .getOrElse(lit(false))
-    val outAbove =
-      if (upper.isNaN) lit(false) else col("min_value") > upper
-    when(outBelow || outAbove, empty).otherwise(kernel)
+    (constant(lower), constant(upper)) match {
+      case (Some(lo), Some(up)) if !lowerInclusive =>
+        when(allOutCol(lo, up), emptyStats).otherwise(kernel)
+      case _ => kernel
+    }
   }
 
   /** [[statsInRangeCol]] over a UNION of disjoint intervals — the
@@ -183,64 +183,19 @@ object SegmentAggregates {
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))
-    val empty = struct(lit(0L).as("cnt"), lit(0.0).as("sum"),
-      lit(null).cast("float").as("mn"), lit(null).cast("float").as("mx"),
-      lit(null).cast("long").as("tmin"), lit(null).cast("long").as("tmax"),
-      lit(0.0).as("m2"))
-    val allOut = intervals.map { case (lo, up) =>
-      val outBelow = lo
-        .map(l =>
-          if (up.isEmpty) col("max_value") <= l && !nanCapable
-          else col("max_value") <= l)
-        .getOrElse(lit(false))
-      val outAbove = up.map(col("min_value") > _).getOrElse(lit(false))
-      outBelow || outAbove
-    }.reduce(_ && _)
-    when(allOut, empty).otherwise(kernel)
+    val allOut = intervals
+      .map { case (lo, up) => allOutCol(lo, up) }.reduce(_ && _)
+    when(allOut, emptyStats).otherwise(kernel)
   }
 
-  /** [[statsInRangeCol]] with the TIMESTAMP window as COLUMNS — the
-    * per-(segment, bucket) partial behind bucketed value-filtered stats.
-    * The entirely-out short-circuit still comes from the stored value
-    * bounds alone (the window clip can only shrink the in-range set).
+  /** Per-threshold `count(v > x)` array of a segment's points in
+    * [tsLo, tsHi] ([[SegmentCountAboveMulti]]) — the probe of the
+    * exact-rank ladders; `thresholds` is an `array<double>` literal or
+    * per-row column.
     */
-  def statsInRangeDynCol(lower: Option[Double], upper: Double,
-      tsLoCol: Column, tsHiCol: Column): Column = {
-    val kernel = ColumnBridge.column(SegmentStatsInRangeDyn(
-      lower.getOrElse(Double.NegativeInfinity), lower.nonEmpty, upper,
-      ColumnBridge.expression(tsLoCol), ColumnBridge.expression(tsHiCol),
-      attr("model_type_id"), attr("start_time"), attr("end_time"),
-      attr("timestamps"), attr("min_value"), attr("max_value"),
-      attr("values"), attr("residuals")))
-    val empty = struct(lit(0L).as("cnt"), lit(0.0).as("sum"),
-      lit(null).cast("float").as("mn"), lit(null).cast("float").as("mx"),
-      lit(null).cast("long").as("tmin"), lit(null).cast("long").as("tmax"),
-      lit(0.0).as("m2"))
-    val outBelow = lower
-      .map(l =>
-        if (upper.isNaN) col("max_value") <= l && !nanCapable
-        else col("max_value") <= l)
-      .getOrElse(lit(false))
-    val outAbove =
-      if (upper.isNaN) lit(false) else col("min_value") > upper
-    when(outBelow || outAbove, empty).otherwise(kernel)
-  }
-
-  /** [[statsInRangeCol]] with PER-ROW bounds (columns of a
-    * broadcast-joined per-group frame) — the partial behind segment-native
-    * argmin/argmax and per-group filtered stats. NULL bounds mean
-    * unbounded; `lowerInclusive` makes `lower = upper = target` select
-    * exactly the points equal to `target` (NaN targets included). No
-    * column-level short-circuit here: the kernel itself classifies
-    * entirely-out segments from the scalar bounds before touching any
-    * binary column, so the branch would only duplicate that test.
-    */
-  def statsBetweenCol(lowerInclusive: Boolean, lowerCol: Column,
-      upperCol: Column, tsLo: Long = Long.MinValue,
-      tsHi: Long = Long.MaxValue): Column =
-    ColumnBridge.column(SegmentStatsBetween(
-      lowerInclusive, ColumnBridge.expression(lowerCol),
-      ColumnBridge.expression(upperCol), tsLo, tsHi,
+  def countAboveMultiCol(thresholds: Column, tsLo: Long, tsHi: Long): Column =
+    ColumnBridge.column(SegmentCountAboveMulti(
+      ColumnBridge.expression(thresholds), Literal(tsLo), Literal(tsHi),
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))

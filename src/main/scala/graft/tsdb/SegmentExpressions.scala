@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 import graft.core.{Models, TimestampCodec}
@@ -130,28 +131,70 @@ object SegmentKernels {
     r
   }
 
-  /** Fold an optionally-INCLUSIVE lower bound into statsInRange's
-    * exclusive form: nextDown for finite bounds (exact — no double lies
-    * between), unbounded for -Inf, +Inf for NaN (only NaN sits above).
-    * Shared by [[SegmentStatsBetween]]'s interpreted and generated paths.
+  /** [[SegmentCountInRange]]'s one entry point, interpreted and generated:
+    * a NULL lower bound is the -Inf sentinel, a NULL upper bound the NaN
+    * "unbounded" sentinel (the SQL order's maximum, NaN values included).
     */
-  def effectiveLower(isNull: Boolean, lv: Double,
-      inclusive: Boolean): (Double, Boolean) = {
-    if (isNull) (0.0, false)
-    else if (!inclusive) (lv, true)
-    else if (java.lang.Double.isNaN(lv)) (Double.PositiveInfinity, true)
-    else if (lv == Double.NegativeInfinity) (0.0, false)
-    else (Math.nextDown(lv), true)
-  }
+  def countInRange(lowerNull: Boolean, lower: Double, upperNull: Boolean,
+      upper: Double, tsLo: Long, tsHi: Long, modelTypeId: Byte,
+      startTime: Long, endTime: Long, timestamps: Array[Byte],
+      minValue: Float, maxValue: Float, values: Array[Byte],
+      residuals: Array[Byte]): Long =
+    graft.core.ValueCounts.countInRange(
+      if (lowerNull) Double.NegativeInfinity else lower,
+      if (upperNull) Double.NaN else upper, tsLo, tsHi, modelTypeId,
+      startTime, endTime, timestamps, minValue, maxValue, values, residuals)
 
-  def statsInRangeRow(lower: Double, hasLower: Boolean, upper: Double,
+  /** [[SegmentStatsInRange]]'s one entry point, interpreted and generated.
+    * The kernel's lower bound is exclusive with NaN meaning unbounded, so
+    * a NULL lower maps to NaN and an INCLUSIVE lower folds in exactly:
+    * nextDown for finite bounds (no double lies between), unbounded for
+    * -Inf (nothing below it), +Inf for NaN (only NaN sits above +Inf).
+    * Nothing lies above an exclusive NaN bound: the empty (+Inf, +Inf].
+    * A NULL upper is the NaN "unbounded" sentinel, NaN values included.
+    */
+  def statsInRangeRow(lowerNull: Boolean, lower: Double,
+      lowerInclusive: Boolean, upperNull: Boolean, upper: Double,
       tsLo: Long, tsHi: Long, modelTypeId: Byte, startTime: Long,
       endTime: Long, timestamps: Array[Byte], minValue: Float,
       maxValue: Float, values: Array[Byte],
-      residuals: Array[Byte]): InternalRow =
-    statsInRangesRow(Array(if (hasLower) lower else Double.NaN),
-      Array(upper), tsLo, tsHi, modelTypeId, startTime, endTime, timestamps,
-      minValue, maxValue, values, residuals)
+      residuals: Array[Byte]): InternalRow = {
+    val hi = if (upperNull) Double.NaN else upper
+    val (lo, up) =
+      if (lowerNull) (Double.NaN, hi)
+      else if (java.lang.Double.isNaN(lower))
+        (Double.PositiveInfinity,
+          if (lowerInclusive) hi else Double.PositiveInfinity)
+      else if (!lowerInclusive) (lower, hi)
+      else if (lower == Double.NegativeInfinity) (Double.NaN, hi)
+      else (Math.nextDown(lower), hi)
+    statsInRangesRow(Array(lo), Array(up), tsLo, tsHi, modelTypeId,
+      startTime, endTime, timestamps, minValue, maxValue, values, residuals)
+  }
+
+  /** [[SegmentCountAboveMulti]]'s one entry point, interpreted and
+    * generated: a NULL threshold array probes no threshold.
+    */
+  def countAboveMulti(xsNull: Boolean, xs: ArrayData, tsLo: Long,
+      tsHi: Long, modelTypeId: Byte, startTime: Long, endTime: Long,
+      timestamps: Array[Byte], minValue: Float, maxValue: Float,
+      values: Array[Byte], residuals: Array[Byte]): ArrayData =
+    new GenericArrayData(graft.core.ValueCounts.countAboveMulti(
+      if (xsNull) Array.emptyDoubleArray else xs.toDoubleArray(), tsLo,
+      tsHi, modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
+      values, residuals))
+
+  /** The (cnt, sum, mn, mx, tmin, tmax, m2) struct of the value-filtered
+    * stats kernels; mn/mx/tmin/tmax are NULL when no value qualifies.
+    */
+  val StatsType: StructType = StructType(Seq(
+    StructField("cnt", LongType, nullable = false),
+    StructField("sum", DoubleType, nullable = false),
+    StructField("mn", FloatType, nullable = true),
+    StructField("mx", FloatType, nullable = true),
+    StructField("tmin", LongType, nullable = true),
+    StructField("tmax", LongType, nullable = true),
+    StructField("m2", DoubleType, nullable = false)))
 
   def statsInRangesRow(los: Array[Double], his: Array[Double],
       tsLo: Long, tsHi: Long, modelTypeId: Byte, startTime: Long,
@@ -323,24 +366,34 @@ case class SegmentTimeGaps(
   * timestamps within [tsLo, tsHi] — the kernel behind segment-native
   * value-predicate COUNT ([[graft.core.ValueCounts.countInRange]]): PMC
   * closed form, Swing O(log len) monotone binary search, values-only walk
-  * for MacaqueV. Codegen'd like [[SegmentLen]]; the double bounds embed as
-  * raw bits so ±Infinity and exactness survive Java source text.
+  * for MacaqueV. The bounds are expressions: literals for one predicate
+  * per query, or columns of a broadcast-joined statistics frame for
+  * per-group thresholds (outlier screens beyond each series' own
+  * μ ± k·σ), so per-group bounds never collect on the driver. A NULL
+  * bound is unbounded on its side ([[SegmentKernels.countInRange]]); the
+  * window, like the segment columns, is never NULL. Codegen'd like
+  * [[SegmentLen]].
   */
 case class SegmentCountInRange(
-    lower: Double, upper: Double, tsLo: Long, tsHi: Long,
+    lower: Expression, upper: Expression, tsLo: Expression, tsHi: Expression,
     modelTypeId: Expression, startTime: Expression, endTime: Expression,
     timestamps: Expression, minValue: Expression, maxValue: Expression,
     values: Expression, residuals: Expression)
   extends Expression {
 
-  override def children: Seq[Expression] = Seq(
+  override def children: Seq[Expression] = Seq(lower, upper, tsLo, tsHi,
     modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
     values, residuals)
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
 
   override def eval(input: InternalRow): Any = {
-    graft.core.ValueCounts.countInRange(lower, upper, tsLo, tsHi,
+    val lo = lower.eval(input)
+    val up = upper.eval(input)
+    SegmentKernels.countInRange(lo == null, lo.asInstanceOf[Double],
+      up == null, up.asInstanceOf[Double],
+      tsLo.eval(input).asInstanceOf[Long],
+      tsHi.eval(input).asInstanceOf[Long],
       modelTypeId.eval(input).asInstanceOf[Byte],
       startTime.eval(input).asInstanceOf[Long],
       endTime.eval(input).asInstanceOf[Long],
@@ -353,57 +406,63 @@ case class SegmentCountInRange(
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val evals = children.map(_.genCode(ctx))
-    val lowerBits = java.lang.Double.doubleToRawLongBits(lower)
-    val upperBits = java.lang.Double.doubleToRawLongBits(upper)
+    val Seq(lo, up) = evals.take(2)
     ev.copy(
       code = evals.map(_.code).reduce(_ + _) +
         code"""
-           |long ${ev.value} = graft.core.ValueCounts.countInRange(
-           |  java.lang.Double.longBitsToDouble(${lowerBits}L),
-           |  java.lang.Double.longBitsToDouble(${upperBits}L),
-           |  ${tsLo}L, ${tsHi}L, ${evals.map(_.value).mkString(", ")});
+           |long ${ev.value} = graft.tsdb.SegmentKernels.countInRange(
+           |  ${lo.isNull}, ${lo.value}, ${up.isNull}, ${up.value},
+           |  ${evals.drop(2).map(_.value).mkString(", ")});
            """.stripMargin,
       isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(lower, upper, tsLo, tsHi, newChildren(0), newChildren(1),
-      newChildren(2), newChildren(3), newChildren(4), newChildren(5),
-      newChildren(6), newChildren(7))
+    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3),
+      newChildren(4), newChildren(5), newChildren(6), newChildren(7),
+      newChildren(8), newChildren(9), newChildren(10), newChildren(11))
 }
 
-/** (count, Σv, min, max) of a segment's reconstructed values inside a
-  * value interval ([[graft.core.ValueCounts.statsInRange]]) — the kernel
-  * behind segment-native value-filtered SUM/MIN/MAX/AVG: lower exclusive
-  * (inactive when `hasLower` is false), upper inclusive with the NaN
-  * "unbounded" sentinel, timestamps clipped to [tsLo, tsHi]. min/max are
-  * NULL when no value qualifies. Codegen'd like [[SegmentSumStats]];
-  * consumers extract fields of the SAME struct subtree so aggregate-level
-  * subexpression elimination evaluates the kernel once per segment.
+/** (count, Σv, min, max, tmin, tmax, m2) of a segment's reconstructed
+  * values inside a value interval
+  * ([[graft.core.ValueCounts.statsInRange]]) — the kernel behind
+  * segment-native value-filtered SUM/MIN/MAX/AVG: lower exclusive unless
+  * `lowerInclusive`, upper inclusive, timestamps clipped to [tsLo, tsHi];
+  * min/max are NULL when no value qualifies. Bounds and window are
+  * expressions: literals for one predicate per query, a per-row window
+  * for bucketed stats (a bucket-straddling segment explodes into its
+  * overlapped buckets, each row clipped to its bucket), per-row bounds of
+  * a broadcast-joined per-group frame for argmin/argmax and per-group
+  * filtered stats. A NULL bound is unbounded on its side, and
+  * `lower = upper = target` with `lowerInclusive` selects exactly the
+  * points equal to `target`, NaN targets included
+  * ([[SegmentKernels.statsInRangeRow]]); the window is never NULL.
+  * Codegen'd like [[SegmentSumStats]]; consumers extract fields of the
+  * SAME struct subtree so aggregate-level subexpression elimination
+  * evaluates the kernel once per segment.
   */
 case class SegmentStatsInRange(
-    lower: Double, hasLower: Boolean, upper: Double, tsLo: Long, tsHi: Long,
+    lowerInclusive: Boolean, lower: Expression, upper: Expression,
+    tsLo: Expression, tsHi: Expression,
     modelTypeId: Expression, startTime: Expression, endTime: Expression,
     timestamps: Expression, minValue: Expression, maxValue: Expression,
     values: Expression, residuals: Expression)
   extends Expression {
 
-  override def children: Seq[Expression] = Seq(
+  override def children: Seq[Expression] = Seq(lower, upper, tsLo, tsHi,
     modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
     values, residuals)
-  override def dataType: DataType = StructType(Seq(
-    StructField("cnt", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("mn", FloatType, nullable = true),
-    StructField("mx", FloatType, nullable = true),
-    StructField("tmin", LongType, nullable = true),
-    StructField("tmax", LongType, nullable = true),
-    StructField("m2", DoubleType, nullable = false)))
+  override def dataType: DataType = SegmentKernels.StatsType
   override def nullable: Boolean = false
 
   override def eval(input: InternalRow): Any = {
-    SegmentKernels.statsInRangeRow(lower, hasLower, upper, tsLo, tsHi,
+    val lo = lower.eval(input)
+    val up = upper.eval(input)
+    SegmentKernels.statsInRangeRow(lo == null, lo.asInstanceOf[Double],
+      lowerInclusive, up == null, up.asInstanceOf[Double],
+      tsLo.eval(input).asInstanceOf[Long],
+      tsHi.eval(input).asInstanceOf[Long],
       modelTypeId.eval(input).asInstanceOf[Byte],
       startTime.eval(input).asInstanceOf[Long],
       endTime.eval(input).asInstanceOf[Long],
@@ -416,25 +475,25 @@ case class SegmentStatsInRange(
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val evals = children.map(_.genCode(ctx))
-    val lowerBits = java.lang.Double.doubleToRawLongBits(lower)
-    val upperBits = java.lang.Double.doubleToRawLongBits(upper)
+    val Seq(lo, up) = evals.take(2)
     val rowCls = classOf[InternalRow].getName
     ev.copy(
       code = evals.map(_.code).reduce(_ + _) +
         code"""
            |$rowCls ${ev.value} = graft.tsdb.SegmentKernels.statsInRangeRow(
-           |  java.lang.Double.longBitsToDouble(${lowerBits}L), $hasLower,
-           |  java.lang.Double.longBitsToDouble(${upperBits}L),
-           |  ${tsLo}L, ${tsHi}L, ${evals.map(_.value).mkString(", ")});
+           |  ${lo.isNull}, ${lo.value}, $lowerInclusive,
+           |  ${up.isNull}, ${up.value},
+           |  ${evals.drop(2).map(_.value).mkString(", ")});
            """.stripMargin,
       isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(lower, hasLower, upper, tsLo, tsHi, newChildren(0), newChildren(1),
-      newChildren(2), newChildren(3), newChildren(4), newChildren(5),
-      newChildren(6), newChildren(7))
+    copy(lowerInclusive, newChildren(0), newChildren(1), newChildren(2),
+      newChildren(3), newChildren(4), newChildren(5), newChildren(6),
+      newChildren(7), newChildren(8), newChildren(9), newChildren(10),
+      newChildren(11))
 }
 
 /** [[SegmentStatsInRange]] over a UNION of disjoint value intervals —
@@ -453,14 +512,7 @@ case class SegmentStatsInRanges(
   override def children: Seq[Expression] = Seq(
     modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
     values, residuals)
-  override def dataType: DataType = StructType(Seq(
-    StructField("cnt", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("mn", FloatType, nullable = true),
-    StructField("mx", FloatType, nullable = true),
-    StructField("tmin", LongType, nullable = true),
-    StructField("tmax", LongType, nullable = true),
-    StructField("m2", DoubleType, nullable = false)))
+  override def dataType: DataType = SegmentKernels.StatsType
   override def nullable: Boolean = false
 
   @transient private lazy val losArr: Array[Double] = los.toArray
@@ -498,153 +550,6 @@ case class SegmentStatsInRanges(
     copy(los, his, tsLo, tsHi, newChildren(0), newChildren(1),
       newChildren(2), newChildren(3), newChildren(4), newChildren(5),
       newChildren(6), newChildren(7))
-}
-
-/** [[SegmentStatsInRange]] with the TIMESTAMP window as EXPRESSIONS —
-  * the kernel behind per-bucket value-filtered stats: a bucket-straddling
-  * segment explodes into its overlapped buckets and each (segment,
-  * bucket) row evaluates this kernel against that bucket's window. The
-  * value bounds stay literals (one predicate per query); the window clip
-  * is O(1) index arithmetic for regular segments.
-  */
-case class SegmentStatsInRangeDyn(
-    lower: Double, hasLower: Boolean, upper: Double,
-    tsLo: Expression, tsHi: Expression,
-    modelTypeId: Expression, startTime: Expression, endTime: Expression,
-    timestamps: Expression, minValue: Expression, maxValue: Expression,
-    values: Expression, residuals: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(tsLo, tsHi,
-    modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
-    values, residuals)
-  override def dataType: DataType = StructType(Seq(
-    StructField("cnt", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("mn", FloatType, nullable = true),
-    StructField("mx", FloatType, nullable = true),
-    StructField("tmin", LongType, nullable = true),
-    StructField("tmax", LongType, nullable = true),
-    StructField("m2", DoubleType, nullable = false)))
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    SegmentKernels.statsInRangeRow(lower, hasLower, upper,
-      tsLo.eval(input).asInstanceOf[Long],
-      tsHi.eval(input).asInstanceOf[Long],
-      modelTypeId.eval(input).asInstanceOf[Byte],
-      startTime.eval(input).asInstanceOf[Long],
-      endTime.eval(input).asInstanceOf[Long],
-      timestamps.eval(input).asInstanceOf[Array[Byte]],
-      minValue.eval(input).asInstanceOf[Float],
-      maxValue.eval(input).asInstanceOf[Float],
-      values.eval(input).asInstanceOf[Array[Byte]],
-      residuals.eval(input).asInstanceOf[Array[Byte]])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val lowerBits = java.lang.Double.doubleToRawLongBits(lower)
-    val upperBits = java.lang.Double.doubleToRawLongBits(upper)
-    val rowCls = classOf[InternalRow].getName
-    ev.copy(
-      code = evals.map(_.code).reduce(_ + _) +
-        code"""
-           |$rowCls ${ev.value} = graft.tsdb.SegmentKernels.statsInRangeRow(
-           |  java.lang.Double.longBitsToDouble(${lowerBits}L), $hasLower,
-           |  java.lang.Double.longBitsToDouble(${upperBits}L),
-           |  ${evals(0).value}, ${evals(1).value},
-           |  ${evals.drop(2).map(_.value).mkString(", ")});
-           """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(lower, hasLower, upper, newChildren(0), newChildren(1),
-      newChildren(2), newChildren(3), newChildren(4), newChildren(5),
-      newChildren(6), newChildren(7), newChildren(8), newChildren(9))
-}
-
-/** [[SegmentStatsInRange]] with the value bounds as EXPRESSIONS (columns
-  * of a broadcast-joined per-group frame) — the kernel behind
-  * segment-native argmin/argmax (per-group target values) and per-group
-  * filtered stats. NULL lower = unbounded below, NULL upper = unbounded
-  * above (NaN sentinel, NaN values included). With `lowerInclusive` the
-  * lower bound itself qualifies: the kernel folds that into the exclusive
-  * form exactly — nextDown for finite bounds (no double lies between),
-  * "unbounded" for -Inf (nothing below it), +Inf for a NaN bound (only
-  * NaN sits above +Inf) — so `lower = upper = target, lowerInclusive`
-  * selects exactly the points equal to `target`, NaN targets included.
-  */
-case class SegmentStatsBetween(
-    lowerInclusive: Boolean, lower: Expression, upper: Expression,
-    tsLo: Long, tsHi: Long,
-    modelTypeId: Expression, startTime: Expression, endTime: Expression,
-    timestamps: Expression, minValue: Expression, maxValue: Expression,
-    values: Expression, residuals: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(lower, upper,
-    modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
-    values, residuals)
-  override def dataType: DataType = StructType(Seq(
-    StructField("cnt", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false),
-    StructField("mn", FloatType, nullable = true),
-    StructField("mx", FloatType, nullable = true),
-    StructField("tmin", LongType, nullable = true),
-    StructField("tmax", LongType, nullable = true),
-    StructField("m2", DoubleType, nullable = false)))
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = {
-    val lv = lower.eval(input)
-    val (lo, hasLower) = SegmentKernels.effectiveLower(
-      lv == null, if (lv == null) 0.0 else lv.asInstanceOf[Double],
-      lowerInclusive)
-    val uv = upper.eval(input)
-    val hi = if (uv == null) Double.NaN else uv.asInstanceOf[Double]
-    SegmentKernels.statsInRangeRow(lo, hasLower, hi, tsLo, tsHi,
-      modelTypeId.eval(input).asInstanceOf[Byte],
-      startTime.eval(input).asInstanceOf[Long],
-      endTime.eval(input).asInstanceOf[Long],
-      timestamps.eval(input).asInstanceOf[Array[Byte]],
-      minValue.eval(input).asInstanceOf[Float],
-      maxValue.eval(input).asInstanceOf[Float],
-      values.eval(input).asInstanceOf[Array[Byte]],
-      residuals.eval(input).asInstanceOf[Array[Byte]])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val rowCls = classOf[InternalRow].getName
-    val loVal = ctx.freshName("loBound")
-    val hasLo = ctx.freshName("hasLower")
-    val hiVal = ctx.freshName("hiBound")
-    ev.copy(
-      code = evals.map(_.code).reduce(_ + _) +
-        code"""
-           |boolean $hasLo = !${evals(0).isNull};
-           |double $loVal = $hasLo ? ${evals(0).value} : 0.0;
-           |if ($hasLo && $lowerInclusive) {
-           |  if (Double.isNaN($loVal)) $loVal = Double.POSITIVE_INFINITY;
-           |  else if ($loVal == Double.NEGATIVE_INFINITY) $hasLo = false;
-           |  else $loVal = Math.nextDown($loVal);
-           |}
-           |double $hiVal = ${evals(1).isNull} ? Double.NaN : ${evals(1).value};
-           |$rowCls ${ev.value} = graft.tsdb.SegmentKernels.statsInRangeRow(
-           |  $loVal, $hasLo, $hiVal, ${tsLo}L, ${tsHi}L,
-           |  ${evals.drop(2).map(_.value).mkString(", ")});
-           """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(lowerInclusive, newChildren(0), newChildren(1), tsLo, tsHi,
-      newChildren(2), newChildren(3), newChildren(4), newChildren(5),
-      newChildren(6), newChildren(7), newChildren(8), newChildren(9))
 }
 
 /** Number of a segment's points with timestamp in [tsLo, tsHi] — the
@@ -689,55 +594,59 @@ case class SegmentClippedLen(
   * the probe behind the exact-quantile bisection ladder: consumers extract
   * the elements in a CHAINED projection (like [[SegmentSumStats]]) so the
   * kernel evaluates once per segment however many thresholds a round
-  * probes. The thresholds ride along as a codegen reference object.
+  * probes. The `array<double>` of thresholds is an expression: a literal
+  * for the census, or a per-row column broadcast-joined onto the segment
+  * relation by tag group, so one job answers DIFFERENT thresholds for
+  * different series — each group of the ladder bisects its own interval.
+  * The window, like the segment columns, is never NULL.
   */
 case class SegmentCountAboveMulti(
-    lowers: Seq[Double], tsLo: Long, tsHi: Long,
+    thresholds: Expression, tsLo: Expression, tsHi: Expression,
     modelTypeId: Expression, startTime: Expression, endTime: Expression,
     timestamps: Expression, minValue: Expression, maxValue: Expression,
     values: Expression, residuals: Expression)
   extends Expression {
 
-  override def children: Seq[Expression] = Seq(
+  override def children: Seq[Expression] = Seq(thresholds, tsLo, tsHi,
     modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
     values, residuals)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
-  @transient private lazy val xs: Array[Double] = lowers.toArray
-
-  override def eval(input: InternalRow): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.ValueCounts.countAboveMulti(xs, tsLo, tsHi,
-        modelTypeId.eval(input).asInstanceOf[Byte],
-        startTime.eval(input).asInstanceOf[Long],
-        endTime.eval(input).asInstanceOf[Long],
-        timestamps.eval(input).asInstanceOf[Array[Byte]],
-        minValue.eval(input).asInstanceOf[Float],
-        maxValue.eval(input).asInstanceOf[Float],
-        values.eval(input).asInstanceOf[Array[Byte]],
-        residuals.eval(input).asInstanceOf[Array[Byte]]))
+  override def eval(input: InternalRow): Any = {
+    val xs = thresholds.eval(input)
+    SegmentKernels.countAboveMulti(xs == null, xs.asInstanceOf[ArrayData],
+      tsLo.eval(input).asInstanceOf[Long],
+      tsHi.eval(input).asInstanceOf[Long],
+      modelTypeId.eval(input).asInstanceOf[Byte],
+      startTime.eval(input).asInstanceOf[Long],
+      endTime.eval(input).asInstanceOf[Long],
+      timestamps.eval(input).asInstanceOf[Array[Byte]],
+      minValue.eval(input).asInstanceOf[Float],
+      maxValue.eval(input).asInstanceOf[Float],
+      values.eval(input).asInstanceOf[Array[Byte]],
+      residuals.eval(input).asInstanceOf[Array[Byte]])
+  }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val evals = children.map(_.genCode(ctx))
-    val xsRef = ctx.addReferenceObj("lowers", xs, "double[]")
-    val arrCls = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-    val genCls = classOf[org.apache.spark.sql.catalyst.util.GenericArrayData].getName
+    val xs = evals.head
+    val arrCls = classOf[ArrayData].getName
     ev.copy(
       code = evals.map(_.code).reduce(_ + _) +
         code"""
-           |$arrCls ${ev.value} = new $genCls(
-           |  graft.core.ValueCounts.countAboveMulti($xsRef, ${tsLo}L,
-           |  ${tsHi}L, ${evals.map(_.value).mkString(", ")}));
+           |$arrCls ${ev.value} = graft.tsdb.SegmentKernels.countAboveMulti(
+           |  ${xs.isNull}, ${xs.value},
+           |  ${evals.tail.map(_.value).mkString(", ")});
            """.stripMargin,
       isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
-    copy(lowers, tsLo, tsHi, newChildren(0), newChildren(1), newChildren(2),
-      newChildren(3), newChildren(4), newChildren(5), newChildren(6),
-      newChildren(7))
+    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3),
+      newChildren(4), newChildren(5), newChildren(6), newChildren(7),
+      newChildren(8), newChildren(9), newChildren(10))
 }
 
 /** One segment's regression partials (n, Σt', Σt'², Σv, Σv², Σv·t'),
@@ -790,127 +699,6 @@ case class SegmentRegressionSums(
     copy(t0, tsLo, tsHi, newChildren(0), newChildren(1), newChildren(2),
       newChildren(3), newChildren(4), newChildren(5), newChildren(6),
       newChildren(7))
-}
-
-/** [[SegmentCountInRange]] with the value bounds as EXPRESSIONS instead of
-  * literals — the kernel behind per-group dynamic thresholds (outlier
-  * screens counting beyond each series' own μ ± k·σ): bounds arrive as
-  * columns of a broadcast-joined statistics frame, so no driver-side
-  * collect of per-group bounds ever happens. NULL bounds mean unbounded
-  * below / above (above = the NaN sentinel, including NaN values).
-  */
-case class SegmentCountBetween(
-    lower: Expression, upper: Expression, tsLo: Long, tsHi: Long,
-    modelTypeId: Expression, startTime: Expression, endTime: Expression,
-    timestamps: Expression, minValue: Expression, maxValue: Expression,
-    values: Expression, residuals: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(lower, upper,
-    modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
-    values, residuals)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-
-  private def boundOf(e: Expression, input: InternalRow, lo: Boolean): Double = {
-    val v = e.eval(input)
-    if (v == null) { if (lo) Double.NegativeInfinity else Double.NaN }
-    else v.asInstanceOf[Double]
-  }
-
-  override def eval(input: InternalRow): Any = {
-    graft.core.ValueCounts.countInRange(
-      boundOf(lower, input, lo = true), boundOf(upper, input, lo = false),
-      tsLo, tsHi,
-      modelTypeId.eval(input).asInstanceOf[Byte],
-      startTime.eval(input).asInstanceOf[Long],
-      endTime.eval(input).asInstanceOf[Long],
-      timestamps.eval(input).asInstanceOf[Array[Byte]],
-      minValue.eval(input).asInstanceOf[Float],
-      maxValue.eval(input).asInstanceOf[Float],
-      values.eval(input).asInstanceOf[Array[Byte]],
-      residuals.eval(input).asInstanceOf[Array[Byte]])
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val loVal = ctx.freshName("lowerBound")
-    val hiVal = ctx.freshName("upperBound")
-    ev.copy(
-      code = evals.map(_.code).reduce(_ + _) +
-        code"""
-           |double $loVal = ${evals(0).isNull} ?
-           |  Double.NEGATIVE_INFINITY : ${evals(0).value};
-           |double $hiVal = ${evals(1).isNull} ? Double.NaN : ${evals(1).value};
-           |long ${ev.value} = graft.core.ValueCounts.countInRange(
-           |  $loVal, $hiVal, ${tsLo}L, ${tsHi}L,
-           |  ${evals.drop(2).map(_.value).mkString(", ")});
-           """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(newChildren(0), newChildren(1), tsLo, tsHi, newChildren(2),
-      newChildren(3), newChildren(4), newChildren(5), newChildren(6),
-      newChildren(7), newChildren(8), newChildren(9))
-}
-
-/** [[SegmentCountAboveMulti]] with PER-ROW thresholds: the probe array is
-  * a child expression (array<double>, broadcast-joined onto the segment
-  * relation by tag group), so one job can answer DIFFERENT thresholds for
-  * different series — the probe behind the per-group exact-quantile
-  * ladder, where each group bisects its own interval.
-  */
-case class SegmentCountAboveMultiDyn(
-    tsLo: Long, tsHi: Long, lowers: Expression,
-    modelTypeId: Expression, startTime: Expression, endTime: Expression,
-    timestamps: Expression, minValue: Expression, maxValue: Expression,
-    values: Expression, residuals: Expression)
-  extends Expression {
-
-  override def children: Seq[Expression] = Seq(
-    lowers, modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
-    values, residuals)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.ValueCounts.countAboveMulti(
-        lowers.eval(input)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          .toDoubleArray(),
-        tsLo, tsHi,
-        modelTypeId.eval(input).asInstanceOf[Byte],
-        startTime.eval(input).asInstanceOf[Long],
-        endTime.eval(input).asInstanceOf[Long],
-        timestamps.eval(input).asInstanceOf[Array[Byte]],
-        minValue.eval(input).asInstanceOf[Float],
-        maxValue.eval(input).asInstanceOf[Float],
-        values.eval(input).asInstanceOf[Array[Byte]],
-        residuals.eval(input).asInstanceOf[Array[Byte]]))
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val evals = children.map(_.genCode(ctx))
-    val arrCls = classOf[org.apache.spark.sql.catalyst.util.ArrayData].getName
-    val genCls = classOf[org.apache.spark.sql.catalyst.util.GenericArrayData].getName
-    ev.copy(
-      code = evals.map(_.code).reduce(_ + _) +
-        code"""
-           |$arrCls ${ev.value} = new $genCls(
-           |  graft.core.ValueCounts.countAboveMulti(
-           |  ((${arrCls}) ${evals.head.value}).toDoubleArray(), ${tsLo}L,
-           |  ${tsHi}L, ${evals.tail.map(_.value).mkString(", ")}));
-           """.stripMargin,
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(tsLo, tsHi, newChildren(0), newChildren(1), newChildren(2),
-      newChildren(3), newChildren(4), newChildren(5), newChildren(6),
-      newChildren(7), newChildren(8))
 }
 
 /** Distinct in-interval values with multiplicities of one segment —

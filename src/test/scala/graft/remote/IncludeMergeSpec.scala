@@ -494,6 +494,9 @@ class IncludeMergeSpec extends AnyFunSuite {
     assert(strip(prefix) == prefix)
     // No trailer at all: unchanged.
     assert(strip("FROM mts GROUP BY tag") == "FROM mts GROUP BY tag")
+    // Comments are skipped: an apostrophe in one opens no quote.
+    assert(strip("FROM mts -- don't limit\nGROUP BY tag ORDER BY n") ==
+      "FROM mts -- don't limit\nGROUP BY tag")
   }
 
   test("partial split survives FROM-like tokens inside expressions") {
@@ -502,5 +505,33 @@ class IncludeMergeSpec extends AnyFunSuite {
         "FROM mts WHERE tag <> 'from' GROUP BY extract(YEAR FROM ts_us)")
     assert(head == "SELECT extract(YEAR FROM ts_us) AS y, count(*) AS n")
     assert(tail.startsWith("FROM mts WHERE"))
+    // Comments are skipped: neither a `from` inside one nor an apostrophe
+    // (which would open a quote that never closes) moves the split.
+    Seq("-- rows from every store", "-- don't", "/* from 'x */").foreach { c =>
+      val (h, t) = FederatedAggregate.splitAtTopLevelFrom(
+        s"SELECT tag, count(v) AS n $c\nFROM mts GROUP BY tag")
+      assert(h == s"SELECT tag, count(v) AS n $c")
+      assert(t == "FROM mts GROUP BY tag")
+    }
+  }
+
+  test("comments in a grouped merge leave its answer unchanged") {
+    val local = makeEngine(Seq("a", "b"), 200)
+    val remote = makeEngine(Seq("b", "c"), 150)
+    val server = new RemoteServer(remote)
+    try {
+      def run(select: String): Seq[Seq[Any]] =
+        local.sql(s"INCLUDE MERGE '${server.address}' $select").collect()
+          .map(_.toSeq).sortBy(_.head.toString).toSeq
+      val items = "tag, count(v) AS n, percentile(v, 0.5) AS p"
+      val plain = run(s"SELECT $items FROM mts GROUP BY tag")
+      assert(plain.map(_.head) == Seq("a", "b", "c"))
+      Seq(
+        s"SELECT $items -- rows from every store\nFROM mts GROUP BY tag",
+        s"SELECT $items FROM mts -- don't\nGROUP BY tag",
+        s"SELECT tag, /* n's */ count(v) AS n, percentile(v, 0.5) AS p " +
+          "FROM mts /* where */ GROUP BY tag -- by tag"
+      ).foreach(commented => assert(run(commented) == plain, commented))
+    } finally server.close()
   }
 }

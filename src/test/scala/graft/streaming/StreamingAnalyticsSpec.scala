@@ -585,7 +585,9 @@ class StreamingAnalyticsSpec extends AnyFunSuite {
     val ctrl = segs
       .withColumn("__seg_end", timestamp_micros(col("end_time")))
       .withColumn("__ts_st",
-        graft.tsdb.SegmentAggregates.statsInRangeCol(Some(50.0), Double.NaN))
+        graft.tsdb.SegmentAggregates.statsInRangeCol(
+          graft.tsdb.SegmentAggregates.boundLit(Some(50.0)),
+          graft.tsdb.SegmentAggregates.boundLit(None)))
       .groupBy(window(col("__seg_end"), "1 minute"), col("tag"))
       .agg(
         coalesce(sum(col("__ts_st").getField("cnt")), lit(0L)).as("n_in"),
