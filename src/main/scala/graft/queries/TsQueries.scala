@@ -1655,12 +1655,13 @@ object TsQueries {
 
     // Federated EXACT percentiles: INCLUDE MERGE locates the combined
     // data's order statistics without moving points — the single partial
-    // round ships per-group (count, min, max), then a batched 16-ary rank
-    // search ships one count-probe statement per round (thresholds ride in
-    // an answer-sized VALUES join the endpoint broadcasts) and a final
-    // bounded in-interval fetch reads the rank off locally. Hash-exact vs
-    // DuckDB's quantile_cont over the doubled raw data: both interpolate
-    // the same two order statistics in double.
+    // round ships per-group (count, min, max), then each rank-search round
+    // ships one statement returning per-bin (count, min, max) of every
+    // state's interval, or its ≤ 1024 distinct values once the interval
+    // is that small (bin parameters ride in an answer-sized VALUES join
+    // the endpoint broadcasts), and the rank is read off locally.
+    // Hash-exact vs DuckDB's quantile_cont over the doubled raw data: both
+    // interpolate the same two order statistics in double.
     ("ts_include_percentile", (s: SparkSession, d: String) => {
       val engine = engineFor(s, d)
       val server = new graft.remote.RemoteServer(engine)

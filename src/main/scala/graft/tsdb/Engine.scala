@@ -2541,7 +2541,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     if (!fetch) {
       // count(x <= t) = clippedLen - countAbove(t): both sides include
       // NaN consistently (NaN sits above every threshold in the SQL
-      // total order, exactly like the generic `count_if(x <= t)`).
+      // total order, as in SQL's own `x <= t`).
       val perSeg = slice.partials(Seq(col("__sid")), joined) { clip =>
           val (lo, hi) = SegmentSlice.window(clip)
           Seq(SegmentAggregates.countAboveMultiCol(col("__xs"), lo, hi)

@@ -47,23 +47,25 @@ import org.apache.spark.sql.types._
   *   - `percentile` / `median` / `percentile_cont` / `percentile_disc`
   *     (scalar or array percentage, frequency 1): EXACT, via an
   *     interactive rank search; an array percentage registers one rank
-  *     state per element and returns the array Spark would. The search probes in DOUBLE, so integral/decimal children
-  *     are accepted only while their (min, max) stay inside the
-  *     exactly-double-representable range (±2^53 for BIGINT,
-  *     2^52·10^-scale for DECIMAL) — beyond it the statement is rejected
-  *     with a clear error rather than returning a silently-collapsed
-  *     value. After the single partial round establishes per-group
-  *     (count, min, max), the needed order statistics are located by a
-  *     batched 16-ary bisection where every round ships ONE count-probe
-  *     query (`count_if(x <= t)` per threshold) to every endpoint and only
-  *     per-state count scalars return; once a state's candidate interval
-  *     holds ≤ [[QuantileFetchGap]] points (or collapses to float-ulp
-  *     width) a final bounded fetch ships the ≤ gap distinct values in the
-  *     interval and the rank is read off locally. Probe thresholds and the
-  *     answer-sized group list travel inside the probe statement (a VALUES
-  *     join the endpoint broadcasts), so wire cost per round is
-  *     O(states × fanout) scalars and rounds are O(log(span)) — typically
-  *     2-4. Driver state is answer-sized (the merged groups themselves).
+  *     state per element and returns the array Spark would. The search
+  *     bins in DOUBLE, so integral/decimal children are accepted only
+  *     while their (min, max) stay inside the exactly-double-representable
+  *     range (±2^53 for BIGINT, 2^52·10^-scale for DECIMAL) — beyond it
+  *     the statement is rejected with a clear error rather than returning
+  *     a silently-collapsed value. The partial round establishes
+  *     per-group (count, min, max); each later round ships ONE statement
+  *     per endpoint that returns, per state, (count, min, max) of up to
+  *     1024 equal-width bins of its interval (`GROUP BY` bin, one
+  *     aggregate buffer per bin), or, once the interval holds
+  *     ≤ [[QuantileFetchGap]] points (or collapses to float-ulp width),
+  *     its distinct values. A state resolves as soon as the bin holding
+  *     its rank holds one value or the rank is the bin's first or last;
+  *     otherwise it narrows to that bin's [min, max]. Bin parameters and
+  *     the answer-sized group list travel inside the statement (a VALUES
+  *     join the endpoint broadcasts), so a statement returns a bounded
+  *     number of rows and a grouped median typically takes the partial
+  *     plus two rounds. Driver state is answer-sized (the merged groups
+  *     themselves).
   *
   *   - HAVING / ORDER BY / LIMIT / OFFSET on the merged statement: the
   *     analyzed Filter/Sort/Limit/Offset/Project chain around the
@@ -92,26 +94,36 @@ object FederatedAggregate {
       partialSql: String,
       merge: (Seq[DataFrame], String => Seq[DataFrame]) => DataFrame)
 
-  /** A candidate interval narrows by count-probes until it holds at most
-    * this many points, then the distinct values inside ship in one bounded
-    * fetch. Bounds the fetch result per state per round. Production value
-    * 1024; a var so scale tooling (FederationScaleProbe) can lower it to
-    * force probe rounds over small per-group data instead of synthesizing
-    * 10^3 points per group × 10^5 groups. `@volatile` (like every
-    * test/tooling knob here): a test pinning it on one thread must not
-    * leave another thread's concurrent statement reading a stale value;
-    * tooling must always save/restore the prior value, never a constant.
+  /** A candidate interval narrows by bin (or native count-probe) rounds
+    * until it holds at most this many points, then its distinct values
+    * ship in the next round. Bounds the fetch result per state per round.
+    * Production value 1024; a var so scale tooling (FederationScaleProbe)
+    * can lower it to force bin rounds over small per-group data instead of
+    * synthesizing 10^3 points per group × 10^5 groups. `@volatile` (like
+    * every test/tooling knob here): a test pinning it on one thread must
+    * not leave another thread's concurrent statement reading a stale
+    * value; tooling must always save/restore the prior value, never a
+    * constant.
     */
   @volatile private[graft] var QuantileFetchGap = 1024L
 
-  /** Probe fanout: thresholds per state per rank-search round (16-ary
-    * bisection — interval shrinks 16× per round).
+  /** Native count-probe fanout (a segment-probe round ships 15
+    * thresholds per state and narrows its interval 16-fold), and the
+    * fewest bins per state of a generic round.
     */
   private val QuantileFan = 16
 
-  /** Max rank states per probe/fetch statement: thresholds ride as VALUES
-    * text, so a round over more states than this splits into several
-    * parse-bounded statements (~2 MB each) instead of one unbounded one.
+  /** Row budget of one generic rank-search statement: each probing state
+    * gets `RoundRows / statesInChunk` bins, clamped to [QuantileFan,
+    * MaxBins]. A bin is one group of a single hash aggregate (count, min,
+    * max), so more bins cost rows, not aggregate buffers.
+    */
+  private val RoundRows = 1 << 17
+  private val MaxBins = 1024
+
+  /** Max rank states per round statement: states ride as VALUES text (or
+    * probe frames), so a round over more states than this splits into
+    * several parse-bounded statements instead of one unbounded one.
     */
   private val StatesPerStatement = 8192
 
@@ -702,7 +714,7 @@ object FederatedAggregate {
   }
 
   // ------------------------------------------------------------------
-  // Exact federated percentiles: batched 16-ary rank search.
+  // Exact federated percentiles: binned rank search.
   // ------------------------------------------------------------------
 
   /** One active rank search: the smallest value v of child `cix` (per the
@@ -719,14 +731,88 @@ object FederatedAggregate {
         hi - lo <= 64 * math.max(math.ulp(lo), math.ulp(hi))
   }
 
-  /** Resolve every percentile call against the endpoints and join the
-    * results onto the merged frame as the calls' __a<k> columns.
+  /** `c` values of a state's interval, all in [min, max] and above every
+    * value of the bins before it. `attained` when min and max are values
+    * themselves (a bin's merged min/max, a fetched value); a native count
+    * probe's bin (t₍ₘ₋₁₎, t₍ₘ₎] only knows its edges, nextUp(t₍ₘ₋₁₎) and
+    * t₍ₘ₎.
+    */
+  private final case class Bin(c: Long, min: Double, max: Double,
+      attained: Boolean)
+
+  /** The one bracket update of the rank search: walk a round's merged
+    * `bins` (ascending) from cLo to the bin holding the target rank. The
+    * state resolves when that bin holds one value (min = max) or the
+    * target is its first (min) or last (max) rank; otherwise the bracket
+    * becomes (nextDown(min), max] with the bin's cumulative counts. Exact
+    * without any bin-edge arithmetic: bins are contiguous in value, so
+    * every value below the bin is below its min. `complete` < +Inf marks a
+    * truncated (paginated) response whose values are whole only up to
+    * `complete`: a rank above it advances lo past the consumed prefix.
+    */
+  private def advance(st: RankState, bins: Seq[Bin], complete: Double): Unit = {
+    var cum = st.cLo
+    var narrowed = false
+    val it = bins.iterator
+    while (!st.done && !narrowed && it.hasNext) {
+      val b = it.next()
+      if (cum + b.c < st.target) cum += b.c
+      else if (b.min == b.max || (b.attained && st.target == cum + 1)) {
+        st.value = b.min; st.done = true
+      } else if (b.attained && st.target == cum + b.c) {
+        st.value = b.max; st.done = true
+      } else {
+        st.lo = math.nextDown(b.min); st.hi = b.max
+        st.cLo = cum; st.cHi = cum + b.c
+        narrowed = true
+      }
+    }
+    if (!st.done && !narrowed) {
+      if (complete.isPosInfinity) throw new IllegalStateException(
+        s"federated percentile round lost rank ${st.target} in " +
+          s"(${st.lo}, ${st.hi}] (cum=$cum) — endpoint data changed " +
+          "between rounds?")
+      // Truncated: the proven prefix is consumed; the next round fetches
+      // (complete, hi] — at least `limit` distinct values retire per
+      // round, so pagination terminates.
+      st.lo = complete
+      st.cLo = cum
+    }
+  }
+
+  /** Equal-width binning of the interval (lo, hi] into `nBins` bins:
+    * (k, o·k, s) with o = nextUp(lo) and the bin of v
+    * `floor((v·k − o·k)·s)`. The power-of-two scale k brings the interval's
+    * magnitude near 2^50 first, so neither the width (1e308 − (−1e308)
+    * overflows) nor s (nBins over a subnormal width) leaves the finite
+    * range. Correctly rounded products and differences and floor are
+    * monotone, so every endpoint cuts the same contiguous bins from these
+    * literals, and o (bin 0) and hi (bin ≥ nBins − 1) always split.
+    */
+  private def binScale(lo: Double, hi: Double,
+      nBins: Int): (Double, Double, Double) = {
+    val o = math.nextUp(lo)
+    val k = math.scalb(1.0, math.min(1023,
+      50 - math.getExponent(math.max(math.abs(o), math.abs(hi)))))
+    (k, o * k, nBins / (hi * k - o * k))
+  }
+
+  /** Bins per probing state of a generic round over `states` states: the
+    * statement returns at most about [[RoundRows]] rows, and never fewer
+    * bins than the native fan nor more than [[MaxBins]].
+    */
+  private def binsFor(states: Int): Int =
+    math.min(MaxBins, math.max(QuantileFan, RoundRows / math.max(1, states)))
+
+  /** Resolve every percentile call against the endpoints and return the
+    * merged rows with the calls' __a<k> columns beside them.
     *
     * All driver state here is answer-sized: the merged groups themselves
     * (which ARE the statement's result rows) plus O(1) per percentile
-    * call. Each search round ships one probe statement to every endpoint;
-    * per-state wire cost is `QuantileFan` count scalars per round and one
-    * ≤[[QuantileFetchGap]]-row fetch at the end.
+    * call. Each search round ships one statement per chunk to every
+    * endpoint; per state it returns at most [[binsFor]] bin rows
+    * (count, min, max) or, once the interval is fetchable, its
+    * ≤ [[QuantileFetchGap]] distinct values.
     */
   private def attachQuantiles(
       spark: SparkSession, grouped: DataFrame, nKeys: Int,
@@ -734,12 +820,9 @@ object FederatedAggregate {
       qChildren: Seq[String], fromWhere: String,
       runAll: String => Seq[DataFrame],
       fastProbe0: Option[(IndexedSeq[RankProbe.Target], Long)]): DataFrame = {
-    // The merged frame is answer-sized by definition — pin it as a local
-    // relation so the stats collect and the final join don't re-run the
-    // endpoint partials.
+    // The merged frame is answer-sized by definition: collect it once; the
+    // result rows are assembled from these rows on the driver.
     val groupedRows = grouped.collect()
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(groupedRows: _*), grouped.schema)
     val schema = grouped.schema
     def idx(name: String) = schema.fieldIndex(name)
 
@@ -837,8 +920,13 @@ object FederatedAggregate {
         sidGen += 1
         val effTarget = // test-only planted off-by-one, see fuzz spec
           if (plantRankBugForTests) math.min(target + 1, n) else target
-        states((g, cix, target)) = new RankState(
-          sidGen, g, cix, effTarget, math.nextDown(lo0), hi0, 0L, n)
+        val st = new RankState(sidGen, g, cix, effTarget, Double.NaN,
+          Double.NaN, 0L, n)
+        // The partial's (count, min, max) is the first bin: ranks 1 and n
+        // resolve here, every other rank starts on (nextDown(min), max].
+        advance(st, Seq(Bin(n, lo0, hi0, attained = true)),
+          Double.PositiveInfinity)
+        states((g, cix, target)) = st
       }
 
     groupedRows.indices.foreach { g =>
@@ -903,32 +991,36 @@ object FederatedAggregate {
     }
 
     // ---- Search rounds. ----
-    // Round cap scaled from the worst initial span: 16-ary bisection
-    // needs up to ceil(log16(span / (64·ulp))) rounds before the
-    // ulp-width fetch condition can fire, and extreme dynamic ranges
-    // (1e308 spans narrowing onto subnormal values) legitimately need
-    // ~520 of them. If the cap is still reached, the remaining states are
-    // FORCED into the fetch instead of failing — and that fetch is
-    // PAGINATED (see the fetch block), so a forced state whose interval
-    // still holds many distinct values stays wire-bounded per statement:
-    // the safety valve trades extra rounds for an answer, never an abort
-    // and never an unbounded result set.
+    // Round cap scaled from the worst initial span: a round narrows a
+    // probing interval at least `fan`-fold (the native threshold fan, or
+    // the generic rounds' fewest bins per state, which only grow as states
+    // resolve), so ceil(log_fan(span / (64·ulp))) rounds reach the
+    // ulp-width fetch condition; extreme dynamic ranges (1e308 spans
+    // narrowing onto subnormal values) need up to ~530 at fan 16. If the
+    // cap is still reached, the remaining states are FORCED into the
+    // fetch instead of failing — and that fetch is PAGINATED (see
+    // `limit`), so a forced state whose interval still holds many
+    // distinct values stays wire-bounded per statement: the safety valve
+    // trades extra rounds for an answer, never an abort and never an
+    // unbounded result set.
     val capRounds: Int = capRoundsOverrideForTests.getOrElse {
-      val tiny = 64.0 * java.lang.Double.MIN_VALUE
-      val worst = states.values.foldLeft(64.0) { (acc, st) =>
-        val span = st.hi - st.lo
-        if (span.isInfinite || span <= 0.0) math.max(acc, 600.0)
-        else math.max(acc,
-          math.log(span / tiny) / math.log(QuantileFan.toDouble) + 8.0)
+      val fan =
+        if (nativeCix.nonEmpty) QuantileFan
+        else binsFor(math.min(states.size, StatesPerStatement))
+      val tiny = math.log(64.0 * java.lang.Double.MIN_VALUE)
+      val worst = states.values.filter(!_.done).foldLeft(64.0) { (acc, st) =>
+        val span = st.hi / 2 - math.nextUp(st.lo) / 2 // halves never overflow
+        math.max(acc, (math.log(span) + math.log(2.0) - tiny) /
+          math.log(fan.toDouble) + 8.0)
       }
       math.min(600.0, worst).toInt
     }
     // INTERVAL DEDUP: states of the same (group, child) sharing the same
     // current interval — a median's two bracketing ranks, every element
     // of a percentile array before their brackets diverge — would ship
-    // IDENTICAL probe thresholds / fetch ranges and receive identical
-    // counts (cLo/cHi are functions of (group, child, lo, hi) alone). One
-    // representative per interval class ships; every member consumes the
+    // IDENTICAL bins / fetch ranges and receive identical rows (cLo/cHi
+    // are functions of (group, child, lo, hi) alone). One representative
+    // per interval class ships; every member consumes the
     // representative's response and diverges naturally on its own target.
     // This cuts both the statement text (the VALUES parse cost dominates
     // grouped statements at thousands of states) and the endpoint's
@@ -948,193 +1040,158 @@ object FederatedAggregate {
           cls.sortBy(_.sid)
         }.sortBy(_.head.sid)
 
+    // Native count-probe thresholds: the edges of `QuantileFan` equal
+    // bins, clamped into [lo, hi] (monotone, so counts never decrease).
+    def thresholds(st: RankState): Array[Double] = {
+      val (k, ok, s) = binScale(st.lo, st.hi, QuantileFan)
+      (1 until QuantileFan).map(m =>
+        math.max(st.lo, math.min(st.hi, (ok + m / s) / k))).toArray
+    }
+    val probeCols = Seq("__sid") ++ keyCols ++
+      Seq("__cix", "__lo", "__hi", "__k", "__o", "__s")
+    // Spark grouping folds -0.0 into 0.0; the driver-side merge must agree.
+    def norm(v: Double): Double = if (v == 0.0) 0.0 else v
+
     var rounds = 0
     while (states.values.exists(!_.done)) {
       rounds += 1
       val forceFetch = rounds > capRounds
-      val pending = states.values.filter(!_.done).toSeq
-      val (fetches, probes) =
-        if (forceFetch) (pending, Seq.empty[RankState])
-        else pending.partition(_.fetchable)
-
-      if (fetches.nonEmpty) {
-        // Forced fetches (round cap) may sit on intervals holding MANY
-        // distinct values (cHi-cLo >> gap): those fetches are PAGINATED —
-        // each endpoint returns at most QuantileFetchGap ascending values
-        // per state, the merge consumes every value it can prove complete
-        // across ALL endpoints (up to the smallest truncation point) and
-        // re-enters the next round with lo advanced. Per-statement fetch
-        // rows stay bounded even at the cap. Ordinary fetches (interval
-        // holds <= gap points combined) can never truncate, so the limit
-        // is attached only on forced rounds — the hot path's endpoint
-        // plan stays unchanged.
-        val limit = if (forceFetch) QuantileFetchGap else 0L
-        val probeCols =
-          Seq("__sid") ++ keyCols ++ Seq("__cix", "__lo", "__hi")
-        // Statement text is O(states): past the chunk size, several
-        // statements per round keep each one parse-bounded (the answer —
-        // and hence the state count — is already driver-materialized, so
-        // chunking changes round-trip count, never memory). Rows collect
-        // PER ENDPOINT: pagination needs each endpoint's own truncation
-        // point, so the frames are not pre-merged.
-        val byEndpoint =
-          mutable.ArrayBuffer.empty[mutable.ArrayBuffer[(Int, Double, Long)]]
-        val fetchClasses = intervalClasses(fetches)
-        chunksOf(fetchClasses.map(_.head)).foreach { case (chunk, native) =>
-          val sql =
-            if (native) RankProbe.render(RankProbe.Request(
-              fastProbe.get, fetch = true, nT = 2, fetchLimit = limit,
-              chunk.map(st => RankProbe.State(
-                st.sid, st.cix, keyStrs(st.groupIdx), Array(st.lo, st.hi)))))
-            else {
-              val rows = chunk.map { st =>
-                "(" + (Seq(st.sid.toString) ++ keyLits(st.groupIdx) ++
-                  Seq(st.cix.toString, renderDouble(st.lo),
-                    renderDouble(st.hi))).mkString(", ") + ")"
-              }
-              val inner =
-                s"""SELECT __probe.__sid AS __sid, __probe.__lo AS __lo,
-                   |         __probe.__hi AS __hi, $vExpr AS __v
-                   |  FROM ${onSql(probeCols, rows)}""".stripMargin
-              if (limit <= 0)
-                s"""SELECT __sid, __v, count(*) AS __c FROM (
-                   |$inner
-                   |) __j WHERE __v > __lo AND __v <= __hi
-                   |GROUP BY __sid, __v""".stripMargin
-              else
-                s"""SELECT __sid, __v, __c FROM (
-                   |SELECT __sid, __v, count(*) AS __c, row_number() OVER (
-                   |  PARTITION BY __sid ORDER BY __v) AS __rn FROM (
-                   |$inner
-                   |) __j WHERE __v > __lo AND __v <= __hi
-                   |GROUP BY __sid, __v) WHERE __rn <= $limit""".stripMargin
-            }
-          val frames = runAll(sql)
+      def fetches(st: RankState): Boolean = forceFetch || st.fetchable
+      // Forced fetches (round cap) may sit on intervals holding MANY
+      // distinct values (cHi-cLo >> gap): those fetches are PAGINATED —
+      // each endpoint returns at most QuantileFetchGap ascending values
+      // per state, the merge consumes every value it can prove complete
+      // across ALL endpoints (up to the smallest truncation point) and
+      // re-enters the next round with lo advanced. Ordinary rounds never
+      // truncate (a bin round returns ≤ binsFor + 1 rows per state, a
+      // fetch ≤ gap values), so the limit is attached only on forced
+      // rounds.
+      val limit = if (forceFetch) QuantileFetchGap else 0L
+      val classes = intervalClasses(states.values.filter(!_.done).toSeq)
+      val classOf = classes.map(cls => cls.head.sid -> cls).toMap
+      // Statement text is O(states): past the chunk size, several
+      // statements per round keep each one parse-bounded, and each
+      // chunk's rows are merged before the next chunk ships, so driver
+      // memory holds one chunk's response at a time.
+      chunksOf(classes.map(_.head)).foreach { case (chunk, native) =>
+        // Response rows PER ENDPOINT, as sid -> (sort key, bin):
+        // pagination needs each endpoint's own truncation point. Native
+        // count probes sum across endpoints into per-threshold counts.
+        val byEndpoint = mutable.ArrayBuffer.empty[
+          mutable.HashMap[Int, mutable.ArrayBuffer[(Double, Bin)]]]
+        val nativeCounts =
+          mutable.HashMap.empty[Int, (Array[Double], Array[Long])]
+        def collect(frames: Seq[DataFrame])(bin: Row => (Double, Bin)): Unit = {
           while (byEndpoint.size < frames.size)
-            byEndpoint += mutable.ArrayBuffer.empty[(Int, Double, Long)]
+            byEndpoint += mutable.HashMap.empty
           frames.zipWithIndex.foreach { case (f, e) =>
-            byEndpoint(e) ++= f.collect().iterator.map { r =>
-              // Spark grouping folds -0.0 into 0.0; the driver-side merge
-              // maps must agree.
-              val v = r.getDouble(1)
-              (r.getInt(0), if (v == 0.0) 0.0 else v, r.getLong(2))
+            f.collect().foreach { r =>
+              byEndpoint(e).getOrElseUpdate(r.getInt(0),
+                mutable.ArrayBuffer.empty) += bin(r)
             }
           }
         }
-        val bySidEp: Seq[Map[Int, Seq[(Double, Long)]]] =
-          byEndpoint.toSeq.map(_.toSeq.groupBy(_._1).map { case (sid, ts) =>
-            sid -> ts.map(t => (t._2, t._3)).sortBy(_._1)
-          })
-        fetchClasses.foreach { cls =>
-          val rep = cls.head
-          val perEp: Seq[Seq[(Double, Long)]] =
-            bySidEp.map(_.getOrElse(rep.sid, Seq.empty))
-          // Counts merge completely only up to the smallest truncation
-          // point: an endpoint that returned exactly `limit` rows may
-          // hold more values above its last one.
-          val completeV: Double =
-            if (limit <= 0) Double.PositiveInfinity
-            else perEp.map(rs =>
-              if (rs.length >= limit) rs.last._1
-              else Double.PositiveInfinity).min
-          val vals = perEp.flatten.filter(_._1 <= completeV)
-            .groupBy(_._1).map { case (v, ts) => (v, ts.map(_._2).sum) }
-            .toSeq.sortBy(_._1)
-          cls.foreach { st =>
-            var cum = st.cLo
-            var i = 0
-            while (!st.done && i < vals.length) {
-              cum += vals(i)._2
-              if (cum >= st.target) { st.value = vals(i)._1; st.done = true }
-              i += 1
+        if (native) {
+          val (fetch, probe) = chunk.partition(fetches)
+          if (fetch.nonEmpty)
+            collect(runAll(RankProbe.render(RankProbe.Request(
+              fastProbe.get, fetch = true, nT = 2, fetchLimit = limit,
+              fetch.map(st => RankProbe.State(st.sid, st.cix,
+                keyStrs(st.groupIdx), Array(st.lo, st.hi))))))) { r =>
+              val v = norm(r.getDouble(1))
+              (v, Bin(r.getLong(2), v, v, attained = true))
             }
-            if (!st.done) {
-              if (completeV.isPosInfinity) throw new IllegalStateException(
-                s"federated percentile fetch lost rank ${st.target} in " +
-                  s"(${st.lo}, ${st.hi}] (cum=$cum) — endpoint data changed " +
-                  "between rounds?")
-              // Truncated: the proven prefix is consumed; the next round
-              // fetches (completeV, hi] — at least `limit` distinct values
-              // retire per round, so pagination terminates.
-              st.lo = completeV
-              st.cLo = cum
-            }
+          if (probe.nonEmpty) {
+            probe.foreach(st => nativeCounts(st.sid) =
+              (thresholds(st), new Array[Long](QuantileFan - 1)))
+            runAll(RankProbe.render(RankProbe.Request(
+              fastProbe.get, fetch = false, nT = QuantileFan - 1,
+              fetchLimit = 0L, probe.map(st => RankProbe.State(st.sid,
+                st.cix, keyStrs(st.groupIdx), nativeCounts(st.sid)._1)))))
+              .foreach(_.collect().foreach { r =>
+                val counts = nativeCounts(r.getInt(0))._2
+                counts.indices.foreach(m =>
+                  if (!r.isNullAt(m + 1)) counts(m) += r.getLong(m + 1))
+              })
+          }
+        } else {
+          val nBins = binsFor(chunk.size)
+          val rows = chunk.map { st =>
+            val (k, ok, s) =
+              if (fetches(st)) (1.0, 0.0, 0.0)
+              else binScale(st.lo, st.hi, nBins)
+            "(" + (Seq(st.sid.toString) ++ keyLits(st.groupIdx) ++
+              Seq(st.cix.toString) ++ Seq(st.lo, st.hi, k, ok, s)
+              .map(renderDouble)).mkString(", ") + ")"
+          }
+          // One statement for both kinds of state: a probing state's __b
+          // is its bin, a fetchable state's (__s = 0) the value itself. A
+          // chunk of fetches alone groups by value and skips the bins'
+          // min/max, which equal the value there.
+          val (bin, mn, mx) =
+            if (chunk.forall(fetches)) ("__v", "__b", "__b")
+            else ("IF(__s = 0, __v, " +
+              "CAST(floor((__v * __k - __o) * __s) AS DOUBLE))",
+              "min(__v)", "max(__v)")
+          val binned =
+            s"""SELECT __sid, __b, count(*) AS __c, $mn AS __mn,
+               |       $mx AS __mx FROM (
+               |  SELECT __sid, __v, $bin AS __b
+               |  FROM (
+               |    SELECT __probe.__sid AS __sid, __probe.__lo AS __lo,
+               |           __probe.__hi AS __hi, __probe.__k AS __k,
+               |           __probe.__o AS __o, __probe.__s AS __s,
+               |           $vExpr AS __v
+               |    FROM ${onSql(probeCols, rows)}
+               |  ) __j WHERE __v > __lo AND __v <= __hi
+               |) __r GROUP BY __sid, __b""".stripMargin
+          collect(runAll(
+            if (limit <= 0) binned
+            else
+              s"""SELECT __sid, __b, __c, __mn, __mx FROM (
+                 |SELECT *, row_number() OVER (
+                 |  PARTITION BY __sid ORDER BY __b) AS __rn FROM (
+                 |$binned
+                 |) __g) WHERE __rn <= $limit""".stripMargin)) { r =>
+            (norm(r.getDouble(1)), Bin(r.getLong(2), norm(r.getDouble(3)),
+              norm(r.getDouble(4)), attained = true))
           }
         }
-      }
-
-      if (probes.nonEmpty) {
-        val probeClasses = intervalClasses(probes)
-        // Fixed 16-ary fan, deliberately: widening it when few states are
-        // active was MEASURED SLOWER (r17 A/B) — each generic probe
-        // threshold is one count_if AGGREGATE column in the shipped
-        // statement, so a 256-ary round compiles a 255-buffer aggregate
-        // (past codegen's comfort zone) and per-round cost grows ~fan
-        // while rounds shrink only ~1/log(fan):
-        // ts_include_percentile_global 3.1 s → 9.8 s, decimal merge
-        // 2.8 s → 5.8 s under an adaptive 256 fan.
-        val fan = QuantileFan
-        val nT = fan - 1
-        val probeCols = Seq("__sid") ++ keyCols ++ Seq("__cix") ++
-          (1 to nT).map(m => s"__t$m")
-        def thresholds(st: RankState): Seq[Double] =
-          (1 to nT).map(m => st.lo + (st.hi - st.lo) * m / fan)
-        val merged = chunksOf(probeClasses.map(_.head)).flatMap { case (chunk, native) =>
-          val sql =
-            if (native) RankProbe.render(RankProbe.Request(
-              fastProbe.get, fetch = false, nT = nT, fetchLimit = 0L,
-              chunk.map(st => RankProbe.State(
-                st.sid, st.cix, keyStrs(st.groupIdx),
-                thresholds(st).toArray))))
-            else {
-              val rows = chunk.map { st =>
-                "(" + (Seq(st.sid.toString) ++ keyLits(st.groupIdx) ++
-                  Seq(st.cix.toString) ++ thresholds(st).map(renderDouble))
-                  .mkString(", ") + ")"
-              }
-              s"""SELECT __sid, ${(1 to nT)
-                .map(m => s"count_if(__v <= __t$m) AS __c$m").mkString(", ")}
-                 |FROM (
-                 |  SELECT __probe.__sid AS __sid, ${(1 to nT)
-                .map(m => s"__probe.__t$m AS __t$m").mkString(", ")},
-                 |         $vExpr AS __v
-                 |  FROM ${onSql(probeCols, rows)}
-                 |) __j GROUP BY __sid""".stripMargin
-            }
-          val sumCols = (1 to nT).map(m => sum(col(s"__c$m")).as(s"__c$m"))
-          runAll(sql).reduce(_ unionByName _)
-            .groupBy("__sid")
-            .agg(sumCols.head, sumCols.tail: _*)
-            .collect().toSeq
-        }
-        val bySid = merged.map(r => r.getInt(0) -> r).toMap
-        probeClasses.foreach { cls =>
-          val rep = cls.head
-          val ts = thresholds(rep)
-          val row = bySid.getOrElse(rep.sid, null)
-          cls.foreach { st =>
-            def cnt(m: Int): Long =
-              if (m == 0) st.cLo
-              else if (m == fan) st.cHi
-              else if (row == null || row.isNullAt(m)) 0L
-              else row.getLong(m)
-            def thr(m: Int): Double =
-              if (m == 0) st.lo else if (m == fan) st.hi else ts(m - 1)
-            var m = 1
-            while (m <= fan && cnt(m) < st.target) m += 1
-            require(m <= fan, s"probe lost rank ${st.target}")
-            st.lo = thr(m - 1); st.cLo = cnt(m - 1)
-            st.hi = thr(m); st.cHi = cnt(m)
+        chunk.foreach { rep =>
+          val (bins, complete) = nativeCounts.get(rep.sid) match {
+            case Some((ts, counts)) =>
+              val edges = rep.lo +: ts :+ rep.hi
+              val cum = rep.cLo +: counts :+ rep.cHi
+              ((1 until edges.length).map(m => Bin(cum(m) - cum(m - 1),
+                math.nextUp(edges(m - 1)), edges(m), attained = false)),
+                Double.PositiveInfinity)
+            case scala.None =>
+              val perEp = byEndpoint.toSeq.map(_.get(rep.sid)
+                .fold(Seq.empty[(Double, Bin)])(_.toSeq.sortBy(_._1)))
+              // Counts merge completely only up to the smallest
+              // truncation point: an endpoint that returned exactly
+              // `limit` rows may hold more values above its last one.
+              val complete =
+                if (limit <= 0) Double.PositiveInfinity
+                else perEp.map(rs =>
+                  if (rs.length >= limit) rs.last._1
+                  else Double.PositiveInfinity).min
+              (perEp.flatten.filter(_._1 <= complete).groupBy(_._1).toSeq
+                .sortBy(_._1).map { case (_, kbs) =>
+                  val bs = kbs.map(_._2)
+                  Bin(bs.map(_.c).sum, bs.map(_.min).min, bs.map(_.max).max,
+                    attained = true)
+                }, complete)
           }
+          classOf(rep.sid).foreach(advance(_, bins, complete))
         }
       }
     }
 
-    // ---- Assemble per-call results and join them onto the frame. ----
+    // ---- Assemble per-call results beside each merged row. ----
     def valueOf(g: Int, cix: Int, target: Long): Double =
       states((g, cix, target)).value
-    val qRows: Seq[Row] = groupedRows.indices.map { g =>
-      val keyVals = (0 until nKeys).map(i => groupedRows(g).get(idx(s"__g$i")))
+    val rows: Seq[Row] = groupedRows.indices.map { g =>
       def resolve(plan: CallPlan): Double = plan match {
         case Const(v) => v
         case Disc(cix, target) => valueOf(g, cix, target)
@@ -1155,35 +1212,31 @@ object FederatedAggregate {
         else if (spec.isArray) elems.map(resolve)
         else java.lang.Double.valueOf(resolve(elems.head))
       }
-      Row.fromSeq(keyVals ++ callVals)
+      Row.fromSeq(groupedRows(g).toSeq ++ callVals)
     }
-    val qSchema = StructType(
-      (0 until nKeys).map(i => schema(idx(s"__g$i")).copy(name = s"__qk$i")) ++
-        quantiles.map { case (a, spec) => StructField(a,
+    // A local relation: the statement's projection over it folds on the
+    // driver. Each call's column carries the analyzed expression's type
+    // (double for continuous percentiles, the child type for
+    // percentile_disc).
+    quantiles.foldLeft(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(schema.fields ++ quantiles.map { case (a, spec) =>
+        StructField(a,
           if (spec.isArray) ArrayType(DoubleType, containsNull = false)
-          else DoubleType) })
-    val qFrame = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qSchema)
-    val joined =
-      if (nKeys == 0) local.crossJoin(broadcast(qFrame))
-      else {
-        val cond = (0 until nKeys)
-          .map(i => col(s"__g$i") <=> col(s"__qk$i")).reduce(_ && _)
-        local.join(broadcast(qFrame), cond, "left")
-          .drop((0 until nKeys).map(i => s"__qk$i"): _*)
-      }
-    // Each call's column carries the analyzed expression's type (double
-    // for continuous percentiles, the child type for percentile_disc).
-    quantiles.foldLeft(joined) { case (df, (a, spec)) =>
+          else DoubleType) }))) { case (df, (a, spec)) =>
       df.withColumn(a, col(a).cast(spec.resultType))
     }
   }
 
+  /** An exact DOUBLE literal: a finite value as its shortest round-trip
+    * decimal with the `D` suffix (the parser converts it with the same
+    * correctly rounded parse), the rest as casts. Round statements carry
+    * five doubles per state, and their parse cost grows with the text.
+    */
   private def renderDouble(d: Double): String =
     if (d.isNaN) "CAST('NaN' AS DOUBLE)"
     else if (d == Double.PositiveInfinity) "CAST('Infinity' AS DOUBLE)"
     else if (d == Double.NegativeInfinity) "CAST('-Infinity' AS DOUBLE)"
-    else s"CAST('${java.lang.Double.toString(d)}' AS DOUBLE)"
+    else s"${java.lang.Double.toString(d)}D"
 
   /** Render one collected group-key value as a SQL literal for the probe
     * statement's VALUES join. Group values are answer-sized, so this runs
@@ -1229,10 +1282,11 @@ object FederatedAggregate {
   /** Paren depth of every character of `sql` that is SQL code; -1 inside
     * a quoted string or backticked identifier (delimiters included), -2
     * inside a `--` or `/* */` comment. The one scanner behind every clause
-    * cut below: keywords, parens and commas inside quotes or comments
-    * never cut, and an apostrophe in a comment opens no quote.
+    * cut below and the time-travel rewrite in [[SqlExtensions]]: keywords,
+    * parens and commas inside quotes or comments never cut, and an
+    * apostrophe in a comment opens no quote.
     */
-  private def codeDepths(sql: String): Array[Int] = {
+  private[tsdb] def codeDepths(sql: String): Array[Int] = {
     val out = new Array[Int](sql.length)
     def mark(from: Int, until: Int, v: Int): Int = {
       java.util.Arrays.fill(out, from, until.min(sql.length), v)

@@ -7,7 +7,7 @@ import java.util.Base64
 /** Segment-native transport for the federated rank search's probe and
   * fetch rounds (`INCLUDE MERGE` exact percentiles).
   *
-  * The generic rounds ship plain SQL (`count_if(x <= t)` over the
+  * The generic rounds ship plain SQL (per-bin count/min/max over the
   * statement's FROM/WHERE joined to a VALUES relation), which every
   * endpoint answers by RE-GRIDDING its segments — a full reconstruction
   * per round. When the statement's shape allows it (FROM is a bare time
@@ -37,9 +37,10 @@ import java.util.Base64
   * Base64-armored into the statement text): endpoints of this library
   * decode it exactly; strings are length-prefixed UTF-8, so arbitrary tag
   * content survives independent of any SQL parser configuration. The
-  * response schema matches the generic rounds' exactly — (__sid, __c1…)
-  * for probes, (__sid, __v, __c) for fetches — so the merge side treats
-  * both transports identically.
+  * response is (__sid, __c1…) cumulative counts for probes and
+  * (__sid, __v, __c) for fetches; the merge reads both as bins — the
+  * threshold intervals (t₍ₘ₋₁₎, t₍ₘ₎] and one-value [v, v] — through the
+  * same bracket update as the generic rounds' bins.
   */
 object RankProbe {
 

@@ -118,9 +118,11 @@ object SegmentAggregates {
       attr("model_type_id"), attr("start_time"), attr("end_time"),
       attr("timestamps"), attr("min_value"), attr("max_value"),
       attr("values"), attr("residuals")))
-    // Constant bounds fold to plain metadata tests in the optimizer.
+    // Constant bounds fold to plain metadata tests in the optimizer. A NULL
+    // upper is unbounded like NaN, so it gets the same hidden-NaN guard.
     val allOut = coalesce(
-      when(isnan(upper), col("max_value") <= lower && !nanCapable)
+      when(upper.isNull || isnan(upper),
+        col("max_value") <= lower && !nanCapable)
         .otherwise(col("max_value") <= lower || col("min_value") > upper),
       lit(false))
     val allIn = coalesce(!nanCapable && col("min_value") > lower &&

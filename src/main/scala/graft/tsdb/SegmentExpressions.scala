@@ -132,18 +132,28 @@ object SegmentKernels {
   }
 
   /** [[SegmentCountInRange]]'s one entry point, interpreted and generated:
-    * a NULL lower bound is the -Inf sentinel, a NULL upper bound the NaN
-    * "unbounded" sentinel (the SQL order's maximum, NaN values included).
+    * a NULL bound is unbounded on its side. A NULL upper is the NaN
+    * sentinel (the SQL order's maximum, NaN values included); a NULL lower
+    * counts everything up to the upper bound, -Inf included, as the
+    * clipped length less the count above the upper bound (one traversal).
     */
   def countInRange(lowerNull: Boolean, lower: Double, upperNull: Boolean,
       upper: Double, tsLo: Long, tsHi: Long, modelTypeId: Byte,
       startTime: Long, endTime: Long, timestamps: Array[Byte],
       minValue: Float, maxValue: Float, values: Array[Byte],
-      residuals: Array[Byte]): Long =
-    graft.core.ValueCounts.countInRange(
-      if (lowerNull) Double.NegativeInfinity else lower,
-      if (upperNull) Double.NaN else upper, tsLo, tsHi, modelTypeId,
-      startTime, endTime, timestamps, minValue, maxValue, values, residuals)
+      residuals: Array[Byte]): Long = {
+    val up = if (upperNull) Double.NaN else upper
+    if (lowerNull) {
+      val len = graft.core.ValueCounts.clippedLen(tsLo, tsHi, startTime,
+        endTime, timestamps)
+      if (java.lang.Double.isNaN(up)) len
+      else len - graft.core.ValueCounts.countAboveMulti(Array(up), tsLo,
+        tsHi, modelTypeId, startTime, endTime, timestamps, minValue,
+        maxValue, values, residuals)(0)
+    } else graft.core.ValueCounts.countInRange(lower, up, tsLo, tsHi,
+      modelTypeId, startTime, endTime, timestamps, minValue, maxValue,
+      values, residuals)
+  }
 
   /** [[SegmentStatsInRange]]'s one entry point, interpreted and generated.
     * The kernel's lower bound is exclusive with NaN meaning unbounded, so

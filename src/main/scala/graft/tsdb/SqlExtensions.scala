@@ -142,35 +142,14 @@ object SqlExtensions {
     }
   }
 
-  /** Spans [start, end) of single-quoted string literals ('' escapes). */
-  private def literalSpans(sql: String): Seq[(Int, Int)] = {
-    val spans = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    var i = 0
-    while (i < sql.length) {
-      if (sql.charAt(i) == '\'') {
-        val start = i
-        i += 1
-        var closed = false
-        while (i < sql.length && !closed) {
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') i += 2
-            else { closed = true; i += 1 }
-          } else i += 1
-        }
-        spans += ((start, i))
-      } else i += 1
-    }
-    spans.toSeq
-  }
-
   /** Rewrite every `t VERSION AS OF n` / `t TIMESTAMP AS OF '...'` to its
     * snapshot view name; returns the rewritten SQL plus the distinct
     * (table, travel) pairs to bind.
     *
     * Like the other pre-parser rewrites this is textual, with two guarded
-    * limitations: matches inside single-quoted string literals are left
-    * untouched (a literal containing the words "VERSION AS OF" is data,
-    * not syntax), and qualified names (`db.tbl VERSION AS OF n`) raise a
+    * limitations: matches inside quoted text or comments are left
+    * untouched (a literal or comment containing the words "VERSION AS OF"
+    * is not syntax), and qualified names (`db.tbl VERSION AS OF n`) raise a
     * clear unsupported error instead of mangling the name — the engine
     * binds snapshot views by unqualified table name only.
     */
@@ -178,9 +157,9 @@ object SqlExtensions {
     val targets = scala.collection.mutable.LinkedHashSet[(String, Travel)]()
     def pass(input: String, re: scala.util.matching.Regex,
              travelOf: scala.util.matching.Regex.Match => Travel): String = {
-      val literals = literalSpans(input)
+      val depths = FederatedAggregate.codeDepths(input)
       re.replaceSomeIn(input, m => {
-        if (literals.exists(s => m.start >= s._1 && m.start < s._2)) None
+        if (depths(m.start) < 0) None
         else if (m.start > 0 && input.charAt(m.start - 1) == '.')
           throw new IllegalArgumentException(
             s"Time travel on qualified names is not supported: " +

@@ -14,8 +14,9 @@ import graft.tsdb.{Engine, FederatedAggregate, RankProbe}
   * order of magnitude above the spec-level chunking test (4,100 groups).
   *
   * Two modes (third CLI arg, default `both`):
-  *  - `generic`: normal table, thresholds ride as VALUES text — measures
-  *    the SQL transport's statement sizes and parse cost.
+  *  - `generic`: normal table, bin parameters ride as VALUES text —
+  *    measures the SQL transport's statement sizes and parse cost (kind
+  *    `round`: one bin-or-fetch statement per chunk per round).
   *  - `native`: segment-backed time series table with one tag per group,
   *    the same states ride as `GRAFT SEGMENT PROBE` binary frames
   *    (base64-armored) — measures the frame transport at the same state
@@ -23,8 +24,8 @@ import graft.tsdb.{Engine, FederatedAggregate, RankProbe}
   *
   * The per-group row count stays SMALL (the build must not dominate the
   * probe); [[FederatedAggregate.QuantileFetchGap]] is lowered instead so
-  * the search runs real bisection rounds rather than jumping straight to
-  * the bounded fetch — the round machinery (threshold rendering, VALUES
+  * the search runs real bin rounds rather than jumping straight to
+  * the bounded fetch — the round machinery (bin rendering, VALUES
   * join or frame decode, chunked statements, per-round merge) is identical
   * to what 10^3 points per group would exercise, at tool-runtime cost
   * O(groups).
@@ -108,8 +109,8 @@ object FederationScaleProbe {
       if (s.contains("__p0")) "partial"
       else if (RankProbe.matches(s))
         if (RankProbe.decode(s).fetch) "segment-fetch" else "segment-probe"
-      else if (s.contains("count_if")) "probe"
-      else if (s.contains("__v")) "fetch"
+      else if (s.contains("__rn")) "fetch"
+      else if (s.contains("__b")) "round"
       else "other"
     val server = new graft.remote.RemoteServer(remote,
       onStatement = s => log.add((System.nanoTime(), s.length, kindOf(s))))
@@ -168,7 +169,7 @@ object FederationScaleProbe {
           else acc :+ (k, 1)
       }
       val probeEntries = entries.filter(e =>
-        e._3 == "probe" || e._3 == "segment-probe")
+        e._3 == "round" || e._3 == "segment-probe")
       println(s"[fed-scale] $label groups=$groups states=${2 * groups}(approx) " +
         f"wall=$wallSec%.1fs heapMB=$heapBefore->$heapAfter")
       println(s"[fed-scale] $label statements: $summary")

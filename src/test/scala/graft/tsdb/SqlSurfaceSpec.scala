@@ -32,6 +32,23 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(engine.sql("SELECT COUNT(*) AS n FROM ins").collect().head.getLong(0) == 6L)
   }
 
+  test("time-travel clauses inside SQL comments are not bound") {
+    val engine = newEngine()
+    engine.sql("CREATE TIME SERIES TABLE tc(ts TIMESTAMP, v FIELD, tag TAG)")
+    engine.sql("INSERT INTO tc VALUES " +
+      "(TIMESTAMP '2024-01-01 00:00:00', CAST(1.0 AS FLOAT), 'a')," +
+      "(TIMESTAMP '2024-01-01 00:00:01', CAST(2.0 AS FLOAT), 'a')")
+    // The table has one manifest version: binding the commented clauses
+    // would fail on the unknown versions.
+    assert(engine.sql("SELECT count(*) FROM tc -- unlike tc VERSION AS OF 99")
+      .collect().head.getLong(0) == 2L)
+    assert(engine.sql("SELECT count(*) /* tc TIMESTAMP AS OF '1999-01-01' */ " +
+      "FROM tc /* or tc CHANGES FROM 5 TO 9 */").collect().head.getLong(0) == 2L)
+    // A clause in code beside a comment still binds.
+    assert(engine.sql("SELECT count(*) FROM tc VERSION AS OF 1 -- first commit")
+      .collect().head.getLong(0) == 2L)
+  }
+
   test("SELECT ... VERSION AS OF reads a manifest snapshot through SQL") {
     val engine = newEngine()
     engine.sql("CREATE TIME SERIES TABLE tv(ts TIMESTAMP, v FIELD, tag TAG)")

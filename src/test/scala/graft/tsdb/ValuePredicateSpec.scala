@@ -922,6 +922,49 @@ class ValuePredicateSpec extends AnyFunSuite {
     }
   }
 
+  /** One lossless series of 200 random values in [0, 10) with `k` of them
+    * replaced by `special`, and thresholdCountBy's count_in for the bounds
+    * (lower, upper) beside Spark's count over the reconstructed points.
+    */
+  private def specialBoundCount(special: Float, k: Int,
+      lower: java.lang.Double, upper: java.lang.Double,
+      truth: String): (Long, Long) = {
+    val engine = newEngine()
+    engine.sql("CREATE TIME SERIES TABLE nb(ts TIMESTAMP, value FIELD, tag TAG)")
+    val rng = new scala.util.Random(77L)
+    val ts = DataGeneration.generateTimestamps(200, irregular = false, rng)
+    val vs = Array.fill(200)(rng.nextFloat() * 10f)
+    rng.shuffle((0 until 200).toList).take(k).foreach(i => vs(i) = special)
+    import spark.implicits._
+    engine.write("nb", ts.indices.map(i => (ts(i), vs(i), "a"))
+      .toDF("ts", "value", "tag"))
+    val bounds = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row("a", lower, upper)),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "tag STRING, lower DOUBLE, upper DOUBLE"))
+    val got = engine.thresholdCountBy("nb", "value", bounds)
+      .collect().head.getAs[Long]("count_in_value")
+    val want = engine.readTable("nb").where(expr(truth)).count()
+    (got, want)
+  }
+
+  test("thresholdCountBy: a NULL upper bound keeps NaN values on a segment " +
+      "whose max is below the lower bound") {
+    // Every finite value is below 100, so the stored max settles the
+    // segment; the 12 NaN values still lie above 100 in the SQL order.
+    val (got, want) = specialBoundCount(Float.NaN, 12, 100.0, null,
+      "value > 100")
+    assert(want == 12L)
+    assert(got == want, s"count_in $got, count(v > 100) $want")
+  }
+
+  test("thresholdCountBy: a NULL lower bound is unbounded, -Inf included") {
+    val (got, want) = specialBoundCount(Float.NegativeInfinity, 11, null,
+      5.0, "value <= 5")
+    assert(want > 11L)
+    assert(got == want, s"count_in $got, count(v <= 5) $want")
+  }
+
   test("histogram fast path: single-bin segments never reach the generator") {
     val engine = newEngine()
     // A linear ramp fits Swing losslessly (not NaN-capable), and stays
