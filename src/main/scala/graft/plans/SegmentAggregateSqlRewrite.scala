@@ -1700,15 +1700,19 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
           throw new IllegalStateException("distinct-tag counts decline buckets")
       }
       bucketed.select(ordered: _*)
-    } else if (m.startUs.isEmpty && m.endUs.isEmpty) {
-      // No time range: tag equalities and IN-lists prune the denormalized
-      // segment relation directly — still metadata-only.
+    } else if (m.startUs.isEmpty && m.endUs.isEmpty && (m.groupTags.nonEmpty ||
+        m.specs.exists(_.isInstanceOf[TagDistinctAgg]))) {
+      // Grouped whole-table statements and distinct-tag counts: one
+      // aggregate over the segment relation computes exactly the requested
+      // (kind, field) pairs; tag equalities and IN-lists prune it directly —
+      // still metadata-only.
       buildWholeTable(engine, m.meta, m.groupTags, m.specs, m.tagEq, m.tagIn)
     } else {
-      // Filtered path: route through the engine's structured read — tag
-      // equalities and IN-lists stay segment-native prunes, a time range
-      // takes the hybrid interior/boundary plan. One pass answers every
-      // requested kind.
+      // Route through the engine's structured read — tag equalities and
+      // IN-lists stay segment-native prunes, a time range takes the hybrid
+      // interior/boundary plan, and ungrouped simple aggregates read the
+      // files wholly inside the range from their manifest value stats.
+      // One pass answers every requested kind.
       val fields0 = m.specs.collect {
         case FieldAgg(_, f, _) => f
         case fe: FieldExprAgg => fe.field
@@ -1736,7 +1740,7 @@ object SegmentAggregateSqlRewrite extends PredicateHelper {
         case TsAgg(kind, outName) =>
           col(s"${kind}_${m.meta.timestampColumn}").as(outName)
         case TagDistinctAgg(_, _) =>
-          throw new IllegalStateException("distinct-tag counts decline ranges")
+          throw new IllegalStateException("distinct-tag counts branch earlier")
       }
       multi.select(ordered: _*)
     }

@@ -58,7 +58,7 @@ object TsQueries {
   // v5: manifests carry per-file tag bounds too — rebuild so benched
   // tables exercise tag-equality file skipping on top of the v4
   // (size + time bounds) manifest-planned scans.
-  private val CacheVersion = "v6" // v6: events_multi gained generated column vf
+  private val CacheVersion = "v7" // v7: segment files carry manifest value stats
 
   /** Build (once per JVM x scale factor) a data folder holding the events
     * time series tables; reused across queries via an on-disk marker.
@@ -197,11 +197,27 @@ object TsQueries {
       // fail-fast foreach(_.get()) would leave sibling writes still
       // appending to their table directories while the caller already
       // treats the build as torn — and a rebuild of the same folder could
-      // race the orphaned writer.
-      val errors = futures.flatMap(f =>
-        try { f.get(); scala.None }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          Some(Option(e.getCause).getOrElse(e)) })
+      // race the orphaned writer. An interrupt while waiting is held until
+      // every write has settled, then restored and rethrown.
+      var interrupted = false
+      val errors = futures.flatMap { f =>
+        var outcome: Option[Option[Throwable]] = scala.None
+        while (outcome.isEmpty)
+          try { f.get(); outcome = Some(scala.None) }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              outcome = Some(Some(Option(e.getCause).getOrElse(e)))
+            case e: java.util.concurrent.CancellationException =>
+              outcome = Some(Some(e))
+            case _: InterruptedException => interrupted = true
+          }
+        outcome.get
+      }
+      if (interrupted) {
+        Thread.currentThread().interrupt()
+        throw errors.headOption.getOrElse(new InterruptedException(
+          "Interrupted while building the time series tables."))
+      }
       errors.headOption.foreach(throw _)
     } finally {
       pool.shutdown()

@@ -26,10 +26,13 @@ import graft.tsdb.Engine
   * Batches are encoded lazily from the executed plan, so the server holds
   * one batch in memory per connection, not the result set. Each connection
   * is one statement (mirroring one Flight call); connections are handled
-  * on a cached daemon pool.
+  * on a cached daemon pool. A client that does not deliver its whole
+  * request within `requestTimeoutMs` is dropped, so a silent connection
+  * cannot pin a worker thread; executing the statement has no deadline.
   */
 final class RemoteServer(engine: Engine, port: Int = 0,
-    onStatement: String => Unit = _ => ()) extends AutoCloseable {
+    onStatement: String => Unit = _ => (),
+    requestTimeoutMs: Int = 30000) extends AutoCloseable {
 
   private val server = new ServerSocket(port)
   @volatile private var running = true
@@ -62,10 +65,12 @@ final class RemoteServer(engine: Engine, port: Int = 0,
       val in = new DataInputStream(socket.getInputStream)
       val out = new DataOutputStream(
         new java.io.BufferedOutputStream(socket.getOutputStream))
+      socket.setSoTimeout(requestTimeoutMs)
       val sqlLen = in.readInt()
       require(sqlLen >= 0 && sqlLen <= 16 * 1024 * 1024, "oversized request")
       val sqlBytes = new Array[Byte](sqlLen)
       in.readFully(sqlBytes)
+      socket.setSoTimeout(0)
       val sqlText = new String(sqlBytes, UTF_8)
       onStatement(sqlText)
       try {

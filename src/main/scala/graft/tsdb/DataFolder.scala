@@ -240,25 +240,40 @@ final class DataFolder(val spark: SparkSession, val root: String) {
   def appendSegments(table: String, segments: DataFrame,
       applyWalBatches: Seq[String] = Seq.empty,
       streamVersion: Option[(String, Long)] = scala.None): Unit =
-    committedAppend(table, applyWalBatches, streamVersion) { dir =>
-      segments.write
-        .mode("append")
-        // ZSTD like the reference's segment writer tuning
-        // (/root/reference/crates/modelardb_storage/src/lib.rs:248-261).
-        .option("compression", "zstd")
-        .partitionBy(SegmentSchema.FieldColumn)
-        .parquet(dir)
-    }
+    committedAppend(table, applyWalBatches, streamVersion)(
+      writeSegments(segments, _, metadata(table).tagColumns,
+        Seq(SegmentSchema.FieldColumn)))
 
-  /** Run a Spark append against the table directory, then publish exactly
-    * the files that write produced as the next manifest snapshot. If the
+  /** Write segment rows as ZSTD Parquet (like the reference's segment
+    * writer tuning in `modelardb_storage/src/lib.rs`)
+    * into the fresh directory `dir` in ONE Spark write whose tasks measure
+    * every file's statistics as they write it ([[FileStatsTracker]]): no
+    * footer read, no extra job. Returns the statistics (size 0) by path
+    * relative to `dir`.
+    */
+  private def writeSegments(segments: DataFrame, dir: String,
+      tagColumns: Seq[String],
+      partitionBy: Seq[String]): Map[String, TableManifest.FileStats] = {
+    val tracker = FileStatsTracker(spark,
+      StructType(segments.schema.filterNot(f => partitionBy.contains(f.name))),
+      tagColumns, partitioned = partitionBy.nonEmpty)
+    org.apache.spark.sql.graft.TrackedWrite.parquet(segments, dir, partitionBy,
+      Map("compression" -> "zstd"), Seq(tracker))
+    tracker.measured
+  }
+
+  /** Run a Spark write into a staging directory, then publish exactly the
+    * files that write produced as the next manifest snapshot, with the
+    * per-file statistics `doWrite` returns (by path relative to the
+    * staging directory; sizes come from the staging listing, and a file
+    * `doWrite` reports nothing for gets the scan-always sentinel). If the
     * job dies mid-write, no manifest is published and its partial output
     * stays invisible to every scan (vacuum reclaims it after retention).
     */
   private def committedAppend(table: String,
       applyWalBatches: Seq[String] = Seq.empty,
       streamVersion: Option[(String, Long)] = scala.None)
-      (doWrite: String => Unit): Unit = {
+      (doWrite: String => Map[String, TableManifest.FileStats]): Unit = {
     val dir = tableDir(table)
     // The Spark job writes into a per-append staging directory (the `_`
     // prefix hides it from any scan), so discovering what the job produced
@@ -275,22 +290,13 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     // that the manifest is the source of truth (so files an earlier failed
     // job orphaned are never resurrected by an unrelated later commit).
     val before = if (hadManifest) Seq.empty else listDataFiles(dir)
-    doWrite(staging.toString)
+    val measured = doWrite(staging.toString)
     val addedWithSize = listDataFilesWithSize(staging.toString)
     val added = addedWithSize.map(_._1)
-    // Per-file stats are measured while the files still sit in staging:
-    // sizes fall out of the listing above, time and tag bounds out of the
-    // footers (or one small job). Relative paths are stable across the
-    // rename, so the stats key by exactly the names the manifest publishes.
-    val tableMeta = metadata(table)
-    val staged =
-      if (tableMeta.isTimeSeries)
-        stagedFileMeta(staging.toString, added, tableMeta.tagColumns)
-      else Map.empty[String, StagedMeta]
+    // Relative paths are stable across the rename, so the stats key by
+    // exactly the names the manifest publishes.
     val stats = addedWithSize.map { case (rel, size) =>
-      val m = staged.getOrElse(rel, StagedMeta(scala.None, Map.empty))
-      val (mn, mx) = m.timeBounds.getOrElse((Long.MinValue, Long.MaxValue))
-      rel -> TableManifest.FileStats(size, mn, mx, m.tagBounds)
+      rel -> measured.getOrElse(rel, unmeasured).copy(sizeBytes = size)
     }.toMap
     added.foreach { rel =>
       val target = new Path(dir, rel)
@@ -332,8 +338,8 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     *
     * With `clusterByTags` (SQL `OPTIMIZE t ZORDER`), EVERY live file of
     * each partition is instead re-clustered through one range shuffle on
-    * (tags…, start_time) and each output gets per-file footer stats — so
-    * file tag bounds become narrow and disjoint, and tag-equality
+    * (tags…, start_time), so the per-file tag bounds the write measures
+    * become narrow and disjoint, and tag-equality
     * manifest skipping opens O(files holding the series) even after
     * appends interleaved every series into every file. Same atomic swap,
     * same time-travel and streaming-suppression semantics.
@@ -360,7 +366,6 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     val removed = Seq.newBuilder[String]
     val created = Seq.newBuilder[String]
     val createdStats = Map.newBuilder[String, TableManifest.FileStats]
-    val snapStats = snapOpt.get.fileStats
     byPartition.foreach { case (part, rels) =>
       val partPath = if (part.isEmpty) new Path(dir) else new Path(dir, part)
       // One listing per partition gives every candidate's size.
@@ -402,40 +407,19 @@ final class DataFolder(val spark: SparkSession, val root: String) {
             else if (meta.isTimeSeries)
               input.coalesce(nOut).sortWithinPartitions(sortCols: _*)
             else input.coalesce(nOut)
-          val writer = arranged.write.mode("overwrite")
-          (if (meta.isTimeSeries) writer.option("compression", "zstd")
-           else writer).parquet(stagedPart.toString)
-          // Plain compaction outputs inherit the union of their inputs'
-          // time and tag bounds (every input point lands in some output
-          // of this partition) — correct, conservative, and free. Any
-          // stats-less input poisons the time bound to the
-          // cover-everything sentinel (and drops tag bounds), so skipping
-          // stays safe. ZORDER outputs instead get PER-FILE bounds from
-          // their own footers — the union would erase exactly the
-          // disjointness the shuffle just built.
-          val haveAll = candidates.forall(snapStats.contains)
-          val inBounds =
-            if (haveAll)
-              (candidates.map(snapStats(_).minStartUs).min,
-                candidates.map(snapStats(_).maxEndUs).max)
-            else (Long.MinValue, Long.MaxValue)
-          val inTagBounds: Map[String, (String, String)] =
-            if (haveAll) {
-              val all = candidates.map(snapStats)
-              meta.tagColumns.flatMap { t =>
-                val bs = all.map(_.tagBounds.get(t))
-                if (bs.forall(_.isDefined))
-                  Some(t -> (bs.map(_.get._1).reduce(TagBounds.min),
-                    bs.map(_.get._2).reduce(TagBounds.max)))
-                else scala.None
-              }.toMap
-            } else Map.empty
+          // Time series outputs are measured per file as they are written,
+          // like appends: exact bounds and value stats for plain and ZORDER
+          // outputs alike (a union of the inputs' bounds would erase the
+          // disjointness the ZORDER shuffle builds).
+          val measured =
+            if (meta.isTimeSeries)
+              writeSegments(arranged, stagedPart.toString, meta.tagColumns,
+                Seq.empty)
+            else {
+              arranged.write.parquet(stagedPart.toString)
+              Map.empty[String, TableManifest.FileStats]
+            }
           val staged = listDataFilesWithSize(stagedPart.toString)
-          val perFile: Map[String, StagedMeta] =
-            if (clusterByTags)
-              stagedFileMeta(stagedPart.toString, staged.map(_._1),
-                meta.tagColumns)
-            else Map.empty
           staged.foreach { case (stagedRel, stagedSize) =>
             // The `opt-` name prefix marks provenance: this file re-packs
             // already-committed points. Streaming readers (manifest-diff
@@ -450,15 +434,8 @@ final class DataFolder(val spark: SparkSession, val root: String) {
               throw new java.io.IOException(
                 s"Could not move compacted file $rel into $dir.")
             created += rel
-            val stats = perFile.get(stagedRel) match {
-              case Some(m) =>
-                val (mn, mx) = m.timeBounds.getOrElse(
-                  (Long.MinValue, Long.MaxValue))
-                TableManifest.FileStats(stagedSize, mn, mx, m.tagBounds)
-              case scala.None => TableManifest.FileStats(
-                stagedSize, inBounds._1, inBounds._2, inTagBounds)
-            }
-            createdStats += rel -> stats
+            createdStats += rel -> measured.getOrElse(stagedRel, unmeasured)
+              .copy(sizeBytes = stagedSize)
           }
           removed ++= candidates
         }
@@ -561,122 +538,6 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Per-file statistics payload of a freshly staged segment file: time
-    * bounds plus per-tag-column [min, max] value ranges. Tag bounds are
-    * kept only when every row group has them, compared EVERYWHERE in
-    * unsigned UTF-8 byte order via [[TagBounds]] (Parquet's UTF8
-    * comparator and Spark's UTF8String order; Java String order disagrees
-    * above the BMP), and truncated with Parquet's truncate-and-increment
-    * approach so a pathological tag value never bloats the manifest.
-    */
-  private final case class StagedMeta(
-    timeBounds: Option[(Long, Long)],
-    tagBounds: Map[String, (String, String)])
-
-  /** Staged-file statistics. Typical batches read the Parquet FOOTERS
-    * driver-side (row-group column statistics — milliseconds per file, no
-    * job-scheduling latency on the commit path); batches larger than
-    * [[DataFolder.FooterBoundsMaxFiles]] switch to one column-pruned
-    * distributed Spark job so the driver never serially stats an unbounded
-    * list. A file whose footer lacks usable statistics (external writer
-    * with stats disabled) simply reports no bounds and the caller records
-    * the cover-everything sentinel — a file can never be wrongly skipped.
-    */
-  private def stagedFileMeta(stagingDir: String, relFiles: Seq[String],
-      tagCols: Seq[String]): Map[String, StagedMeta] =
-    if (relFiles.isEmpty) Map.empty
-    else if (relFiles.size > DataFolder.FooterBoundsMaxFiles)
-      stagedFileMetaJob(stagingDir, relFiles, tagCols)
-    else {
-      // Footer reads are independent metadata I/O: overlap them instead of
-      // paying sequential per-file latency on every commit (on object
-      // stores each open is a round trip). Runs on a dedicated pool, NOT
-      // ForkJoinPool.commonPool — see [[DataFolder.footerIoPool]].
-      val futures = relFiles.map { rel =>
-        DataFolder.footerIoPool.submit(
-          new java.util.concurrent.Callable[(String, StagedMeta)] {
-            def call(): (String, StagedMeta) =
-              rel -> footerMeta(new Path(s"$stagingDir/$rel"), tagCols)
-          })
-      }
-      futures.map(_.get()).toMap
-    }
-
-  /** One file's stats from its footer's row-group statistics. */
-  private def footerMeta(path: Path, tagCols: Seq[String]): StagedMeta =
-    try {
-      import scala.jdk.CollectionConverters._
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, fs.getConf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala
-        def stat(b: org.apache.parquet.hadoop.metadata.BlockMetaData,
-            name: String) = b.getColumns.asScala
-          .find(_.getPath.toDotString == name).map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var timeOk = blocks.nonEmpty
-        blocks.foreach { b =>
-          (stat(b, "start_time"), stat(b, "end_time")) match {
-            case (Some(s), Some(e)) =>
-              mn = math.min(mn, s.genericGetMin.asInstanceOf[java.lang.Long])
-              mx = math.max(mx, e.genericGetMax.asInstanceOf[java.lang.Long])
-            case _ => timeOk = false
-          }
-        }
-        val tags = tagCols.flatMap { t =>
-          val perBlock = blocks.map(stat(_, t))
-          if (blocks.isEmpty || perBlock.exists(_.isEmpty)) scala.None
-          else {
-            def str(x: Any) =
-              x.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
-            val los = perBlock.map(s => str(s.get.genericGetMin: Any))
-            val his = perBlock.map(s => str(s.get.genericGetMax: Any))
-            // Row-group stats are already UTF-8-ordered (Parquet's UTF8
-            // comparator); fold and truncate in the same order.
-            Some(t -> (TagBounds.truncateLo(los.reduce(TagBounds.min)),
-              TagBounds.truncateHi(his.reduce(TagBounds.max))))
-          }
-        }.toMap
-        StagedMeta(if (timeOk) Some((mn, mx)) else scala.None, tags)
-      } finally reader.close()
-    } catch {
-      case scala.util.control.NonFatal(_) => StagedMeta(scala.None, Map.empty)
-    }
-
-  /** Distributed stats for large batches: one column-pruned job grouped by
-    * file, collect bounded by the batch's file count. Spark's string
-    * min/max order UTF8Strings byte-wise, matching the footer path.
-    */
-  private def stagedFileMetaJob(stagingDir: String, relFiles: Seq[String],
-      tagCols: Seq[String]): Map[String, StagedMeta] = {
-    val stagingUri = fs.makeQualified(new Path(stagingDir)).toUri
-    val aggs = Seq(min(col("start_time")).as("mn"),
-      max(col("end_time")).as("mx")) ++
-      tagCols.zipWithIndex.flatMap { case (t, i) =>
-        Seq(min(col(t)).as(s"__tlo_$i"), max(col(t)).as(s"__thi_$i"))
-      }
-    spark.read.option("basePath", stagingDir)
-      .parquet(relFiles.map(rel => s"$stagingDir/$rel"): _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val full = fs.makeQualified(new Path(new java.net.URI(r.getString(0))))
-        val rel = stagingUri.relativize(full.toUri).getPath
-        val tags = tagCols.zipWithIndex.flatMap { case (t, i) =>
-          val lo = r.getAs[String](s"__tlo_$i")
-          val hi = r.getAs[String](s"__thi_$i")
-          // Spark's string min/max are UTF8String (byte-order) aggregates —
-          // the same order the bound compare uses.
-          if (lo != null && hi != null)
-            Some(t -> (TagBounds.truncateLo(lo), TagBounds.truncateHi(hi)))
-          else scala.None
-        }.toMap
-        rel -> StagedMeta(Some((r.getLong(1), r.getLong(2))), tags)
-      }.toMap
-  }
-
   /** Streaming segment scan over the manifest history: offsets are
     * manifest versions, each micro-batch is a commit's data-carrying adds
     * (see [[SegmentStreamProvider]]). Every appended segment (batch write,
@@ -765,33 +626,39 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     */
   def segmentsPruned(table: String, startUs: Option[Long],
       endUs: Option[Long], tagEq: Map[String, String],
-      tagIn: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    if (startUs.isEmpty && endUs.isEmpty && tagEq.isEmpty && tagIn.isEmpty)
-      return segments(table)
-    val dir = tableDir(table)
-    TableManifest.latest(fs, dir) match {
-      case Some(snapshot) =>
-        val lo = startUs.getOrElse(Long.MinValue)
-        val hi = endUs.getOrElse(Long.MaxValue)
-        def inBounds(s: TableManifest.FileStats, t: String,
-            vs: Seq[String]): Boolean =
-          s.tagBounds.get(t).forall { case (mn, mx) =>
-            // UTF-8 byte order — the order the bounds were recorded in.
-            vs.exists(v => TagBounds.contains(mn, mx, v))
-          }
-        val kept = snapshot.files.filter { rel =>
-          snapshot.fileStats.get(rel).forall { s =>
-            s.maxEndUs >= lo && s.minStartUs <= hi &&
-              tagEq.forall { case (t, v) => inBounds(s, t, Seq(v)) } &&
-              tagIn.forall { case (t, vs) =>
-                vs.isEmpty || inBounds(s, t, vs)
-              }
-          }
-        }
-        segmentScan(table, kept, snapshot.fileStats)
+      tagIn: Map[String, Seq[String]] = Map.empty): DataFrame =
+    prunedFiles(table, startUs, endUs, tagEq, tagIn) match {
+      case Some((kept, stats)) => segmentScan(table, kept, stats)
       case scala.None => segments(table) // pre-manifest: no stats to consult
     }
-  }
+
+  /** The newest snapshot's live files that [[segmentsPruned]] keeps, with
+    * the snapshot's per-file stats; None for a pre-manifest table.
+    */
+  private[tsdb] def prunedFiles(table: String, startUs: Option[Long],
+      endUs: Option[Long], tagEq: Map[String, String],
+      tagIn: Map[String, Seq[String]]):
+      Option[(Seq[String], Map[String, TableManifest.FileStats])] =
+    TableManifest.latest(fs, tableDir(table)).map { snapshot =>
+      val lo = startUs.getOrElse(Long.MinValue)
+      val hi = endUs.getOrElse(Long.MaxValue)
+      def inBounds(s: TableManifest.FileStats, t: String,
+          vs: Seq[String]): Boolean =
+        s.tagBounds.get(t).forall { case (mn, mx) =>
+          // UTF-8 byte order — the order the bounds were recorded in.
+          vs.exists(v => TagBounds.contains(mn, mx, v))
+        }
+      val kept = snapshot.files.filter { rel =>
+        snapshot.fileStats.get(rel).forall { s =>
+          s.maxEndUs >= lo && s.minStartUs <= hi &&
+            tagEq.forall { case (t, v) => inBounds(s, t, Seq(v)) } &&
+            tagIn.forall { case (t, vs) =>
+              vs.isEmpty || inBounds(s, t, vs)
+            }
+        }
+      }
+      (kept, snapshot.fileStats)
+    }
 
   /** CDC at the segment-file grain: the data-carrying files each manifest
     * commit in (fromVersion, toVersion] added — the commit's file-list
@@ -835,7 +702,7 @@ final class DataFolder(val spark: SparkSession, val root: String) {
     * external layouts that don't encode `field_column=` fall back to the
     * listing-based reader wholesale.
     */
-  private def segmentScan(table: String, relFiles: Seq[String],
+  private[tsdb] def segmentScan(table: String, relFiles: Seq[String],
       stats: Map[String, TableManifest.FileStats]): DataFrame = {
     val meta = metadata(table)
     val dir = tableDir(table)
@@ -900,8 +767,10 @@ final class DataFolder(val spark: SparkSession, val root: String) {
       streamVersion: Option[(String, Long)] = scala.None): Unit = {
     val meta = metadata(table)
     require(!meta.isTimeSeries, s"$table is a time series table; use write.")
-    committedAppend(table, applyWalBatches, streamVersion)(
-      dir => df.write.mode("append").parquet(dir))
+    committedAppend(table, applyWalBatches, streamVersion) { dir =>
+      df.write.mode("append").parquet(dir)
+      Map.empty
+    }
   }
 
   def readNormal(table: String): DataFrame = {
@@ -966,25 +835,10 @@ object DataFolder {
     */
   val CompactedFilePrefix = "opt-"
 
-  /** Commit-time stats collection reads footers driver-side up to this many
-    * staged files; larger batches use a distributed Spark job instead.
+  /** The statistics of a file nothing measured: its size alone, with time
+    * bounds that cover everything, so no scan ever skips it.
     */
-  val FooterBoundsMaxFiles = 256
-
-  /** Dedicated pool for commit-time footer metadata I/O. parallelStream()
-    * would run these blocking parquet opens on ForkJoinPool.commonPool,
-    * where one slow object-store round trip starves every other commonPool
-    * user in the JVM (and concurrent commits contend on the same pool);
-    * a small named daemon pool isolates the blocking I/O instead.
-    */
-  private[tsdb] lazy val footerIoPool: java.util.concurrent.ExecutorService = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger()
-    java.util.concurrent.Executors.newFixedThreadPool(16, (r: Runnable) => {
-      val t = new Thread(r, s"graft-footer-io-${counter.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    })
-  }
+  private val unmeasured = TableManifest.FileStats(0L, Long.MinValue, Long.MaxValue)
 
   /** Max points buffered per series chunk before segments are cut, matching
     * the reference's uncompressed buffer capacity

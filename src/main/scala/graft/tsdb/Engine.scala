@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -359,11 +359,9 @@ final class Engine(val spark: SparkSession, val root: String) {
     val meta = slice.meta
     val selected = slice.fields
 
-    if (hasAgg && groupByTags.forall(meta.tagColumns.contains)) {
-      if (slice.ranged)
-        hybridRangeAggregate(slice, aggregates, groupByTags, tsAggregates)
-      else segmentNativeAggregate(slice, aggregates, groupByTags, tsAggregates)
-    } else {
+    if (hasAgg && groupByTags.forall(meta.tagColumns.contains))
+      segmentAggregate(slice, aggregates, groupByTags, tsAggregates)
+    else {
       val points = GridView.dataPoints(slice.tagFiltered, meta, selected,
         slice.startUs, slice.endUs)
       if (!hasAgg) points
@@ -445,7 +443,7 @@ final class Engine(val spark: SparkSession, val root: String) {
       withSq, withEdges)
     val combined = slice.split(slice.contained &&
         bucketOf(col("start_time")) === bucketOf(col("end_time")))(
-      interiorPartials(_, keys, Some(bucketOf(col("start_time"))), withSq,
+      Engine.interiorPartials(_, keys, Some(bucketOf(col("start_time"))), withSq,
         withEdges, withSum = needsSum(aggregates)),
       GridView.bucketPartials(_, meta, selected, bucketUs, slice.startUs,
           slice.endUs, withEdges)
@@ -1839,7 +1837,7 @@ final class Engine(val spark: SparkSession, val root: String) {
     val mergeAggs = partialMergeAggs(meta, selected, tsAggregates.nonEmpty,
       withSq, withEdges)
     val combined = slice.split(contained)(
-      interiorPartials(_, keys, Some(truncOf(col("start_time"))), withSq,
+      Engine.interiorPartials(_, keys, Some(truncOf(col("start_time"))), withSq,
         withEdges, withSum = needsSum(aggregates)),
       GridView.explodedPoints(_, meta, selected, slice.startUs, slice.endUs)
       .select(keys ++ Seq(
@@ -1915,90 +1913,6 @@ final class Engine(val spark: SparkSession, val root: String) {
       "Duplicate timestamp aggregate kinds would produce duplicate columns.")
   }
 
-  /** Closed-form partial rows for interior (range/bucket-contained)
-    * segments: (keys..., field_column[, __graft_bucket], __bp_cnt/__bp_sum/
-    * __bp_min/__bp_max/__bp_tmin/__bp_tmax), zero decode for fitted models.
-    *
-    * NaN note: segment min/max metadata is written NaN-IGNORING (the
-    * reference's f32 fmin/fmax semantics, Compressor.scala), but Spark's
-    * float ordering sorts NaN greatest, so MAX must surface NaN as soon as
-    * a segment hides one among other values. The sum partial — computed
-    * for every row here anyway — detects it for free: a float sum is NaN
-    * iff the values hold a NaN or both infinities, and the stored bounds
-    * disambiguate the both-infinities case. (MIN needs no adjustment:
-    * Spark MIN skips NaN unless every value is NaN, and an all-NaN segment
-    * already stores NaN bounds.) The one undetectable corner — a segment
-    * holding +Inf AND -Inf AND NaN — keeps metadata semantics. The
-    * chained select is deliberate: CollapseProject won't inline the
-    * non-cheap sum expression twice.
-    */
-  private def interiorPartials(
-      segments: DataFrame, keys: Seq[Column],
-      bucketCol: Option[Column] = scala.None,
-      withSq: Boolean = false,
-      withEdges: Boolean = false,
-      withSum: Boolean = true): DataFrame = {
-    // With the moment requested, sum and m2 extract from ONE SegmentSumStats
-    // struct — a single decode pass; the chained projection keeps
-    // CollapseProject from inlining (re-decoding) the kernel per field.
-    // Edge values (FIRST/LAST) likewise: one SegmentEdgeValues struct,
-    // extracted in the same chained projection — an interior segment's
-    // chronological edges ARE its first/last points. With NO sum-family
-    // kind requested the Σv partial is a dead zero — COUNT/MIN/MAX/
-    // FIRST/LAST interiors never decode the value stream, EXCEPT the
-    // NaN-capable minority (see __bp_nan below).
-    val sumCols =
-      if (withSq) Seq(SegmentAggregates.sumStatsCol.as("__bp_stats"))
-      else if (withSum) Seq(SegmentAggregates.sumCol.as("__bp_sum"),
-        lit(0d).as("__bp_m2"))
-      else Seq(lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"))
-    // MAX must surface a hidden NaN (Spark float ordering), and segment
-    // bounds are written NaN-ignoring. But NaN can only HIDE in a
-    // MacaqueV value stream or a residual tail — a fitted PMC/Swing model
-    // is within-bound of NaN only when its own values are NaN, which the
-    // stored bounds already show. Without a sum partial (the usual
-    // detector), only that NaN-capable minority pays a detection decode.
-    val nanCols =
-      if (withSq || withSum) Seq.empty
-      else Seq(when(
-        col("model_type_id") === lit(graft.core.Models.MacaqueVId.toInt) ||
-          length(col("residuals")) > 0,
-        isnan(SegmentAggregates.sumCol)).otherwise(lit(false)).as("__bp_nan"))
-    val edgeCols =
-      if (withEdges) Seq(SegmentAggregates.edgeValuesCol.as("__bp_edges"))
-      else Seq.empty
-    val base0 = segments.select(
-      keys ++ Seq(col(SegmentSchema.FieldColumn)) ++
-        bucketCol.map(_.as("__graft_bucket")).toSeq ++
-        Seq(SegmentAggregates.lenCol.as("__bp_cnt")) ++ sumCols ++ nanCols ++
-        edgeCols ++ Seq(
-        col("min_value").as("__bp_min"),
-        col("max_value").as("__bp_max0"),
-        col("start_time").as("__bp_tmin"),
-        col("end_time").as("__bp_tmax")): _*)
-    val base1 =
-      if (!withSq) base0
-      else base0
-        .withColumn("__bp_sum", col("__bp_stats").getField("sum"))
-        .withColumn("__bp_m2", col("__bp_stats").getField("m2"))
-        .drop("__bp_stats")
-    val base =
-      if (!withEdges) base1
-      else base1
-        .withColumn("__bp_vfirst", col("__bp_edges").getField("first"))
-        .withColumn("__bp_vlast", col("__bp_edges").getField("last"))
-        .drop("__bp_edges")
-    val infMix = col("__bp_min") === lit(Float.NegativeInfinity) &&
-      col("__bp_max0") === lit(Float.PositiveInfinity)
-    val nanDetect =
-      if (withSq || withSum) isnan(col("__bp_sum")) else col("__bp_nan")
-    base
-      .withColumn("__bp_max",
-        when(nanDetect && !infMix, lit(Float.NaN))
-          .otherwise(col("__bp_max0")))
-      .drop("__bp_max0", "__bp_nan")
-  }
-
   /** Merge raw partial rows — closed-form per-segment (interior) and
     * decode-generator per-bucket (boundary), both shaped (field_column,
     * __bp_cnt/__bp_sum/__bp_min/__bp_max/__bp_tmin/__bp_tmax) — into
@@ -2072,96 +1986,92 @@ final class Engine(val spark: SparkSession, val root: String) {
       case _ => timestamp_micros(col("__tmax")).as(s"max_$tsName")
     }
 
-  /** COUNT/MIN/MAX/SUM/AVG (optionally grouped by tags) straight from
-    * segment metadata — the Spark shape of the reference's
-    * ModelSimpleAggregates rewrite, extended to tag group-bys (tags are
-    * denormalized into every segment row, so the group-by shuffles the tiny
-    * segment relation, never the reconstructed points). All requested
-    * aggregate kinds are emitted from the same aggregation — one job, one
-    * segment scan, however many kinds are asked for.
+  /** Aggregates (optionally grouped by tags) without reconstruction, the
+    * Spark shape of the reference's ModelSimpleAggregates rewrite extended
+    * to tag group-bys and time ranges. Every part of the slice emits raw
+    * partial rows in one shape, merged by a single aggregation however many
+    * kinds are asked for:
+    *
+    *  - segments inside the range: closed-form per-segment expressions
+    *    ([[Engine.interiorPartials]]), zero decode for fitted models;
+    *  - the (at most two per series) boundary segments straddling a range
+    *    edge: one decode-generator partial each (bucket width = MaxValue),
+    *    or for COUNT-only ranges just the range-clipped point count from
+    *    the timestamp metadata (SegmentClippedLen), so a ranged `count(*)`
+    *    decodes nothing anywhere;
+    *  - for ungrouped COUNT/MIN/MAX/SUM/AVG (and the timestamp extent),
+    *    every file wholly inside the range whose manifest records value
+    *    stats: one partial row per file, and the file is never opened
+    *    ([[SegmentSlice.statsFiles]]). When no file is left to scan the
+    *    merge runs on the driver ([[LocalAggregate]]) and the statement
+    *    starts no Spark job.
+    *
+    * A long range over a long retention window thus reconstructs a sliver
+    * of the data — an optimization beyond the reference, which disables
+    * its aggregate rewrite whenever any predicate is present.
     */
-  private def segmentNativeAggregate(slice: SegmentSlice,
-      aggregates: Seq[Aggregate], groupByTags: Seq[String],
-      tsAggregates: Seq[Aggregate]): DataFrame = {
-    // The slice restricts to the aggregated fields' partitions FIRST: the
-    // per-field conditional aggregation below is correct either way, but
-    // without that predicate a 1-of-N-fields aggregate scans all N
-    // `field_column` directories instead of pruning to one. Tag equalities
-    // and IN-lists additionally skip whole files via manifest tag bounds.
-    val meta = slice.meta
-    val segments = slice.segments
-    val tsName = meta.timestampColumn
-    val aggs = (for (agg <- aggregates; f <- slice.fields) yield {
-      val kind = kindOf(agg)
-      SegmentAggregates.aggColumnFor(kind, meta.fieldIndex(f)).as(s"${kind}_$f")
-    }) ++ tsAggregates.map {
-      // Segment bounds ARE the first/last point of each segment — exact.
-      case Aggregate.Min =>
-        timestamp_micros(min(col("start_time"))).as(s"min_$tsName")
-      case _ => timestamp_micros(max(col("end_time"))).as(s"max_$tsName")
-    }
-    if (groupByTags.isEmpty) segments.agg(aggs.head, aggs.tail: _*)
-    else segments.groupBy(groupByTags.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Time-ranged aggregates without full reconstruction: segments entirely
-    * inside the range contribute metadata-only partials; only the (at most
-    * two per series) boundary segments straddling a range edge are gridded
-    * and filtered exactly. At scale a long range over a long retention
-    * window reconstructs a sliver of the data instead of the whole range —
-    * an optimization beyond the reference, which disables its aggregate
-    * rewrite whenever any predicate is present.
-    */
-  private def hybridRangeAggregate(slice: SegmentSlice,
+  private def segmentAggregate(slice: SegmentSlice,
       aggregates: Seq[Aggregate], groupByTags: Seq[String],
       tsAggregates: Seq[Aggregate]): DataFrame = {
     val meta = slice.meta
     val fields = slice.fields
-    // Both sides emit raw partial rows in one shape, merged by a single
-    // aggregation: interior segments as closed-form per-segment
-    // expressions, boundary segments as one decode-generator partial each
-    // (bucket width = MaxValue) — no point stream, no combine layer.
-    // COUNT-only ranges go further: the boundary partial is just the
-    // range-clipped point count from the timestamp metadata
-    // (SegmentClippedLen, O(1) for regular segments), so a ranged
-    // `count(*)` decodes NOTHING anywhere — no values, no generator.
     val withSq = needsSumSq(aggregates)
     val withEdges = needsEdges(aggregates)
     val countOnly = aggregates.forall(_ == Aggregate.Count) &&
       tsAggregates.isEmpty
+    val fromStats = groupByTags.isEmpty && aggregates.forall {
+      case Aggregate.Count | Aggregate.Min | Aggregate.Max | Aggregate.Sum |
+           Aggregate.Avg => true
+      case _ => false
+    }
     val (tsLo, tsHi) = slice.clip
-    val partials = slice.split(slice.contained)(
-      interiorPartials(_, groupByTags.map(col), withSq = withSq,
-        withEdges = withEdges, withSum = needsSum(aggregates)),
-      straddling =>
-        if (countOnly)
-          // Dead sum/min/max/tmin/tmax placeholders: the merge computes
-          // them but COUNT is the only final column that reads anything.
-          straddling.select(groupByTags.map(col) ++ Seq(
-            col(SegmentSchema.FieldColumn),
-            SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__bp_cnt"),
-            lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"),
-            lit(Float.NaN).as("__bp_min"), lit(Float.NaN).as("__bp_max"),
-            lit(0L).as("__bp_tmin"), lit(0L).as("__bp_tmax")): _*)
-        else GridView.bucketPartials(straddling, meta, fields, Long.MaxValue,
-            slice.startUs, slice.endUs, withEdges)
-          .select(groupByTags.map(col) ++ Seq(
-            col(SegmentSchema.FieldColumn),
-            col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
-            col("__bp_min"), col("__bp_max"),
-            col("__bp_tmin"), col("__bp_tmax")) ++
-            (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
-            else Seq.empty): _*))
+    val interior = Engine.interiorPartials(_: DataFrame, groupByTags.map(col),
+      withSq = withSq, withEdges = withEdges, withSum = needsSum(aggregates))
+    val scanned = (if (fromStats) slice.unanswered else Some(slice.segments))
+      .map { segments =>
+        if (!slice.ranged) interior(segments)
+        else slice.split(slice.contained, segments)(interior, straddling =>
+          if (countOnly)
+            // Dead sum/min/max/tmin/tmax placeholders: the merge computes
+            // them but COUNT is the only final column that reads anything.
+            straddling.select(groupByTags.map(col) ++ Seq(
+              col(SegmentSchema.FieldColumn),
+              SegmentAggregates.clippedLenCol(tsLo, tsHi).as("__bp_cnt"),
+              lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"),
+              lit(Float.NaN).as("__bp_min"), lit(Float.NaN).as("__bp_max"),
+              lit(0L).as("__bp_tmin"), lit(0L).as("__bp_tmax")): _*)
+          else GridView.bucketPartials(straddling, meta, fields, Long.MaxValue,
+              slice.startUs, slice.endUs, withEdges)
+            .select(groupByTags.map(col) ++ Seq(
+              col(SegmentSchema.FieldColumn),
+              col("__bp_cnt"), col("__bp_sum"), col("__bp_m2"),
+              col("__bp_min"), col("__bp_max"),
+              col("__bp_tmin"), col("__bp_tmax")) ++
+              (if (withEdges) Seq(col("__bp_vfirst"), col("__bp_vlast"))
+              else Seq.empty): _*))
+      }
+    val fileRows = if (fromStats) slice.statsFiles.toSeq.sortBy(_._1).map {
+      case (_, (field, s)) =>
+        val v = s.values.get
+        Row(field, v.count, v.sum, 0d, v.min, v.max, s.minStartUs, s.maxEndUs)
+    } else Seq.empty
+    // With nothing left to scan the stats rows stand alone, even when
+    // there are none: the merge of no rows is the empty-range answer.
+    val statsPartials =
+      if (fileRows.isEmpty && scanned.nonEmpty) scala.None
+      else Some(spark.createDataFrame(java.util.Arrays.asList(fileRows: _*),
+        Engine.FilePartialSchema))
+    val partials = (scanned ++ statsPartials).reduce(_ unionByName _)
     val mergeAggs = partialMergeAggs(meta, fields, tsAggregates.nonEmpty,
       withSq, withEdges)
     val combined =
       if (groupByTags.isEmpty) partials.agg(mergeAggs.head, mergeAggs.tail: _*)
       else partials.groupBy(groupByTags.map(col): _*)
         .agg(mergeAggs.head, mergeAggs.tail: _*)
-
-    combined.select(
+    val answer = combined.select(
       (groupByTags.map(col) ++ finalAggColumns(aggregates, fields,
         tsAggregates, meta.timestampColumn)): _*)
+    if (scanned.isEmpty) LocalAggregate.collapse(answer) else answer
   }
 
   /** Copy the result of a SQL query into a normal table (the reference
@@ -2576,6 +2486,101 @@ final class Engine(val spark: SparkSession, val root: String) {
 }
 
 object Engine {
+  /** The shape of one file's partial row read from manifest value stats:
+    * the interior partials' columns, with a zero m2 (the stats path takes
+    * no variance).
+    */
+  private val FilePartialSchema = StructType(Seq(
+    StructField(SegmentSchema.FieldColumn, IntegerType, nullable = false),
+    StructField("__bp_cnt", LongType, nullable = false),
+    StructField("__bp_sum", DoubleType, nullable = false),
+    StructField("__bp_m2", DoubleType, nullable = false),
+    StructField("__bp_min", FloatType, nullable = false),
+    StructField("__bp_max", FloatType, nullable = false),
+    StructField("__bp_tmin", LongType, nullable = false),
+    StructField("__bp_tmax", LongType, nullable = false)))
+
+  /** Closed-form partial rows for interior (range/bucket-contained)
+    * segments: (keys..., field_column[, __graft_bucket], __bp_cnt/__bp_sum/
+    * __bp_min/__bp_max/__bp_tmin/__bp_tmax), zero decode for fitted models.
+    *
+    * NaN note: segment min/max metadata is written NaN-IGNORING (the
+    * reference's f32 fmin/fmax semantics, Compressor.scala), but Spark's
+    * float ordering sorts NaN greatest, so MAX must surface NaN as soon as
+    * a segment hides one among other values. The sum partial — computed
+    * for every row here anyway — detects it for free: a float sum is NaN
+    * iff the values hold a NaN or both infinities, and the stored bounds
+    * disambiguate the both-infinities case. (MIN needs no adjustment:
+    * Spark MIN skips NaN unless every value is NaN, and an all-NaN segment
+    * already stores NaN bounds.) The one undetectable corner — a segment
+    * holding +Inf AND -Inf AND NaN — keeps metadata semantics
+    * ([[SegmentAggregates.maxCol]]). The chained select is deliberate:
+    * CollapseProject won't inline the non-cheap sum expression twice.
+    *
+    * The segment writer evaluates the same columns per written segment to
+    * record each file's value stats ([[FileStatsTracker]]).
+    */
+  private[tsdb] def interiorPartials(
+      segments: DataFrame, keys: Seq[Column],
+      bucketCol: Option[Column] = scala.None,
+      withSq: Boolean = false,
+      withEdges: Boolean = false,
+      withSum: Boolean = true): DataFrame = {
+    // With the moment requested, sum and m2 extract from ONE SegmentSumStats
+    // struct — a single decode pass; the chained projection keeps
+    // CollapseProject from inlining (re-decoding) the kernel per field.
+    // Edge values (FIRST/LAST) likewise: one SegmentEdgeValues struct,
+    // extracted in the same chained projection — an interior segment's
+    // chronological edges ARE its first/last points. With NO sum-family
+    // kind requested the Σv partial is a dead zero — COUNT/MIN/MAX/
+    // FIRST/LAST interiors never decode the value stream, EXCEPT the
+    // NaN-capable minority (see __bp_nan below).
+    val sumCols =
+      if (withSq) Seq(SegmentAggregates.sumStatsCol.as("__bp_stats"))
+      else if (withSum) Seq(SegmentAggregates.sumCol.as("__bp_sum"),
+        lit(0d).as("__bp_m2"))
+      else Seq(lit(0d).as("__bp_sum"), lit(0d).as("__bp_m2"))
+    // MAX must surface a hidden NaN (Spark float ordering), and segment
+    // bounds are written NaN-ignoring. But NaN can only HIDE in a
+    // MacaqueV value stream or a residual tail — a fitted PMC/Swing model
+    // is within-bound of NaN only when its own values are NaN, which the
+    // stored bounds already show. Without a sum partial (the usual
+    // detector), only that NaN-capable minority pays a detection decode.
+    val nanCols =
+      if (withSq || withSum) Seq.empty
+      else Seq((SegmentAggregates.nanCapable && isnan(SegmentAggregates.sumCol))
+        .as("__bp_nan"))
+    val edgeCols =
+      if (withEdges) Seq(SegmentAggregates.edgeValuesCol.as("__bp_edges"))
+      else Seq.empty
+    val base0 = segments.select(
+      keys ++ Seq(col(SegmentSchema.FieldColumn)) ++
+        bucketCol.map(_.as("__graft_bucket")).toSeq ++
+        Seq(SegmentAggregates.lenCol.as("__bp_cnt")) ++ sumCols ++ nanCols ++
+        edgeCols ++ Seq(
+        col("min_value"), col("max_value"),
+        col("start_time").as("__bp_tmin"),
+        col("end_time").as("__bp_tmax")): _*)
+    val base1 =
+      if (!withSq) base0
+      else base0
+        .withColumn("__bp_sum", col("__bp_stats").getField("sum"))
+        .withColumn("__bp_m2", col("__bp_stats").getField("m2"))
+        .drop("__bp_stats")
+    val base =
+      if (!withEdges) base1
+      else base1
+        .withColumn("__bp_vfirst", col("__bp_edges").getField("first"))
+        .withColumn("__bp_vlast", col("__bp_edges").getField("last"))
+        .drop("__bp_edges")
+    val nanDetect =
+      if (withSq || withSum) isnan(col("__bp_sum")) else col("__bp_nan")
+    base
+      .withColumn("__bp_max", SegmentAggregates.maxCol(nanDetect))
+      .withColumnRenamed("min_value", "__bp_min")
+      .drop("max_value", "__bp_nan")
+  }
+
   /** Truncation units accepted by [[Engine.readTimeSeriesTableTruncated]] —
     * the levels Spark's `date_trunc` resolves for timestamps.
     */
@@ -2697,8 +2702,18 @@ private[graft] final class SegmentSlice(
     endUs.map(hi => col("end_time") <= hi).toSeq)
     .reduceOption(_ && _).getOrElse(lit(true))
 
-  private lazy val pruned = dataFolder.segmentsPruned(meta.name, startUs,
-    endUs, tagFilters, tagInFilters)
+  /** The pruned live files with the snapshot's stats; None for a
+    * pre-manifest table.
+    */
+  private lazy val live = dataFolder.prunedFiles(meta.name, startUs, endUs,
+    tagFilters, tagInFilters)
+
+  private def scanOf(files: Seq[String]): DataFrame = live match {
+    case Some((_, stats)) => dataFolder.segmentScan(meta.name, files, stats)
+    case scala.None => dataFolder.segments(meta.name)
+  }
+
+  private lazy val pruned = scanOf(live.fold(Seq.empty[String])(_._1))
 
   private def withTagPredicate(df: DataFrame): DataFrame =
     (tagFilters.toSeq.sortBy(_._1).map { case (k, v) => col(k) === v } ++
@@ -2706,10 +2721,46 @@ private[graft] final class SegmentSlice(
         col(k).isin(vs.map(v => v: Any): _*)
       }).reduceOption(_ && _).map(df.where).getOrElse(df)
 
-  /** The slice's segment rows. */
-  lazy val segments: DataFrame = withTagPredicate(pruned
+  private def segmentsOf(scan: DataFrame): DataFrame = withTagPredicate(scan
     .where(SegmentSlice.fieldColumnPredicate(meta, fields))
     .where(GridView.segmentTimePredicate(startUs, endUs)))
+
+  /** The slice's segment rows. */
+  lazy val segments: DataFrame = segmentsOf(pruned)
+
+  /** The files whose manifest value stats answer the slice's ungrouped
+    * COUNT/MIN/MAX/SUM/AVG without a scan, by path, as (field_column,
+    * stats): files of the slice's fields with value stats, lying wholly
+    * inside the time range (so every segment in them is contained). None
+    * qualifies under a tag predicate: file stats do not split by tag.
+    */
+  lazy val statsFiles: Map[String, (Int, TableManifest.FileStats)] =
+    live match {
+      case Some((files, stats))
+          if tagFilters.isEmpty && tagInFilters.isEmpty =>
+        val (lo, hi) = clip
+        files.flatMap { rel =>
+          for {
+            s <- stats.get(rel) if s.values.nonEmpty &&
+              s.minStartUs >= lo && s.maxEndUs <= hi
+            field <- SegmentSlice.fieldOf(rel) if wanted(field)
+          } yield rel -> (field, s)
+        }.toMap
+      case _ => Map.empty
+    }
+
+  /** The slice's segments outside the [[statsFiles]], or None when no file
+    * of the slice's fields is left to scan.
+    */
+  lazy val unanswered: Option[DataFrame] = live match {
+    case Some((files, _)) =>
+      val rest = files.filter(rel =>
+        !statsFiles.contains(rel) && SegmentSlice.fieldOf(rel).forall(wanted))
+      if (rest.isEmpty) scala.None else Some(segmentsOf(scanOf(rest)))
+    case scala.None => Some(segments)
+  }
+
+  private lazy val wanted = fields.map(meta.fieldIndex).toSet
 
   /** The pruned files under the tag predicate alone, for [[GridView]]
     * reconstruction, which applies the field and time predicates itself.
@@ -2774,6 +2825,17 @@ private[graft] object SegmentSlice {
   def lenOf(clip: Option[(Long, Long)]): Column = clip match {
     case Some((lo, hi)) => SegmentAggregates.clippedLenCol(lo, hi)
     case scala.None => SegmentAggregates.lenCol
+  }
+
+  /** The field of a segment file at `<field_column>=<i>/…`, if it lies
+    * under one.
+    */
+  def fieldOf(rel: String): Option[Int] = {
+    val prefix = s"${SegmentSchema.FieldColumn}="
+    val dir = rel.takeWhile(_ != '/')
+    if (dir.length < rel.length && dir.startsWith(prefix))
+      dir.drop(prefix.length).toIntOption
+    else scala.None
   }
 
   /** Partition predicate selecting exactly the fields' `field_column`

@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -59,9 +59,24 @@ object SegmentAggregates {
     * residual tails can — a fitted PMC/Swing model's own NaN shows in its
     * stored bounds.
     */
-  private def nanCapable: Column =
+  private[tsdb] def nanCapable: Column =
     col("model_type_id") === lit(graft.core.Models.MacaqueVId.toInt) ||
       length(col("residuals")) > 0
+
+  /** A segment's MAX under Spark's float order (NaN greatest). Stored
+    * bounds are written NaN-ignoring, so the stored `max_value` is the
+    * answer unless the segment hides a NaN. `sumIsNaN` is that detector:
+    * true when the segment's float sum is NaN, i.e. its values hold a NaN
+    * or both infinities, and the stored bounds tell the two apart. The one
+    * corner they cannot — a segment holding +Inf, -Inf AND NaN — answers
+    * +Inf. Every MAX over segments goes through here: the whole-table
+    * and ranged aggregates and the writer's per-file value stats.
+    */
+  def maxCol(sumIsNaN: Column): Column = {
+    val infMix = col("min_value") === lit(Float.NegativeInfinity) &&
+      col("max_value") === lit(Float.PositiveInfinity)
+    when(sumIsNaN && !infMix, lit(Float.NaN)).otherwise(col("max_value"))
+  }
 
   /** True when the segment's stored bounds prove every value is outside
     * the constant interval (lower, upper] (None or NaN upper = unbounded,
@@ -270,7 +285,9 @@ object SegmentAggregates {
     kind match {
       case "count" => coalesce(sum(onField(lenCol)), lit(0L))
       case "min" => org.apache.spark.sql.functions.min(onField(col("min_value")))
-      case "max" => org.apache.spark.sql.functions.max(onField(col("max_value")))
+      // Only the NaN-capable minority decodes its sum to detect a NaN.
+      case "max" => org.apache.spark.sql.functions.max(
+        onField(maxCol(nanCapable && isnan(sumCol))))
       case "sum" => sum(onField(sumCol))
       case "avg" => sum(onField(sumCol)) / sum(onField(lenCol))
       case "var_samp" => varianceFromM2(cnt, statsM2, sample = true)
@@ -293,26 +310,4 @@ object SegmentAggregates {
       case other => throw new IllegalArgumentException(s"Unknown aggregate $other.")
     }
   }
-
-  /** `SELECT count(field) FROM t` on segments of one field column. */
-  def count(segments: DataFrame, fieldIndex: Int): DataFrame =
-    perField(segments, fieldIndex).agg(coalesce(sum(lenCol), lit(0L)).as("count"))
-
-  def min(segments: DataFrame, fieldIndex: Int): DataFrame =
-    perField(segments, fieldIndex)
-      .agg(org.apache.spark.sql.functions.min("min_value").as("min"))
-
-  def max(segments: DataFrame, fieldIndex: Int): DataFrame =
-    perField(segments, fieldIndex)
-      .agg(org.apache.spark.sql.functions.max("max_value").as("max"))
-
-  def sumOf(segments: DataFrame, fieldIndex: Int): DataFrame =
-    perField(segments, fieldIndex).agg(sum(sumCol).as("sum"))
-
-  def avg(segments: DataFrame, fieldIndex: Int): DataFrame =
-    perField(segments, fieldIndex)
-      .agg((sum(sumCol) / sum(lenCol)).as("avg"))
-
-  private def perField(segments: DataFrame, fieldIndex: Int): DataFrame =
-    segments.where(col(SegmentSchema.FieldColumn) === fieldIndex)
 }

@@ -101,22 +101,39 @@ private[graft] object TableManifest {
     fileStats: Map[String, FileStats] = Map.empty)
 
   /** Per-file statistics recorded atomically with the commit that added the
-    * file — the role of Delta's per-AddFile `size`/`stats` payload. `size`
-    * lets the scan planner build splits without ever calling the
-    * filesystem (zero per-file RPCs at plan time); the time bounds let it
-    * SKIP files whose segments cannot match a pushed `start_time` /
-    * `end_time` predicate; `tagBounds` holds per-TAG-column [min, max]
-    * value ranges so tag-equality predicates (`WHERE tag = 'sensor-123'`,
-    * the dominant TSDB access pattern) skip files too. Tag bounds are
-    * recorded and compared in unsigned UTF-8 byte order (see
-    * [[graft.tsdb.TagBounds]] — Parquet's UTF8 comparator and Spark's
-    * UTF8String order; multilingual values included), truncated with the
-    * truncate-and-increment approach; a tag absent from the map never
-    * skips. Stats are advisory: a file absent entirely is planned via a
-    * filesystem probe and never skipped.
+    * file — the role of Delta's per-AddFile `size`/`stats` payload. The
+    * segment writer measures them while its write tasks produce the file
+    * ([[FileStatsTracker]]); the commit adds the size from its listing.
+    *
+    *  - `size` lets the scan planner build splits without ever calling the
+    *    filesystem (zero per-file RPCs at plan time).
+    *  - The time bounds let it SKIP files whose segments cannot match a
+    *    pushed `start_time` / `end_time` predicate.
+    *  - `tagBounds` holds per-TAG-column [min, max] value ranges so
+    *    tag-equality predicates (`WHERE tag = 'sensor-123'`) skip files too.
+    *    They are recorded and compared in unsigned UTF-8 byte order (see
+    *    [[graft.tsdb.TagBounds]]; multilingual values included) and
+    *    truncated with the truncate-and-increment approach; a tag absent
+    *    from the map never skips.
+    *  - `values` holds the field's exact partial over the file's segments
+    *    ([[ValueStats]]), from which ungrouped COUNT/MIN/MAX/SUM/AVG over a
+    *    file wholly inside a query's range are answered without opening it.
+    *
+    * Bounds are advisory and may be loose (the sentinel covers everything);
+    * value stats are exact or absent. A file absent from the map is planned
+    * via a filesystem probe and never skipped; a file without value stats
+    * (legacy commits, adopted files, external writers, old manifests) is
+    * always scanned.
     */
   final case class FileStats(sizeBytes: Long, minStartUs: Long,
-    maxEndUs: Long, tagBounds: Map[String, (String, String)] = Map.empty)
+    maxEndUs: Long, tagBounds: Map[String, (String, String)] = Map.empty,
+    values: Option[ValueStats] = scala.None)
+
+  /** A file's value partial as the segment path computes it: its points,
+    * their f64 sum, and Spark's MIN/MAX over them (NaN greatest, a NaN a
+    * segment hides behind its stored bounds included).
+    */
+  final case class ValueStats(count: Long, sum: Double, min: Float, max: Float)
 
   /** One manifest JSON as stored: exactly one of `files` (inline),
     * `checkpoint` (sidecar name), or `deltaBase` (+ add/remove) is set.
@@ -400,9 +417,12 @@ private[graft] object TableManifest {
         b.result()
       }.getOrElse(Map.empty[String, Long])
       // Per-file stats: `{"stats": {"<file>": {"size_bytes": n,
-      // "min_start_us": n, "max_end_us": n, "tags": {"t": ["lo","hi"]}}}}`.
+      // "min_start_us": n, "max_end_us": n, "tags": {"t": ["lo","hi"]},
+      // "values": {"count": n, "sum": "d", "min": "f", "max": "f"}}}}`.
       // Absent (legacy manifests) means no file carries stats — never an
-      // error; `tags` is optional per file.
+      // error; `tags` and `values` are optional per file. Value floats are
+      // Java's shortest round-trip strings, so NaN, ±Inf and -0.0 read
+      // back bit for bit.
       val stats = Option(root.get("stats")).map { node =>
         val it = node.fields()
         val b = Map.newBuilder[String, FileStats]
@@ -423,7 +443,10 @@ private[graft] object TableManifest {
             v.get("size_bytes").asLong(),
             v.get("min_start_us").asLong(),
             v.get("max_end_us").asLong(),
-            tags)
+            tags,
+            Option(v.get("values")).map(vn => ValueStats(
+              vn.get("count").asLong(), vn.get("sum").asText().toDouble,
+              vn.get("min").asText().toFloat, vn.get("max").asText().toFloat)))
         }
         b.result()
       }.getOrElse(Map.empty[String, FileStats])
@@ -656,6 +679,13 @@ private[graft] object TableManifest {
             arr.add(hi)
           }
         }
+        s.values.foreach { v =>
+          val vn = o.putObject("values")
+          vn.put("count", v.count)
+          vn.put("sum", v.sum.toString)
+          vn.put("min", v.min.toString)
+          vn.put("max", v.max.toString)
+        }
       }
     }
 
@@ -702,7 +732,8 @@ private[graft] object TableManifest {
   /** Stats columns are OPTIONAL so sidecars written before the feature (and
     * rows for files that never had stats) read back as stats-less — the
     * planner then falls back to a filesystem probe and never skips them,
-    * mirroring Delta checkpoints' optional per-AddFile size/stats.
+    * mirroring Delta checkpoints' optional per-AddFile size/stats. The
+    * value columns hold the floats' own bits (NaN, ±Inf, -0.0 included).
     */
   private val CheckpointSchema = MessageTypeParser.parseMessageType(
     """message graft_checkpoint {
@@ -711,6 +742,10 @@ private[graft] object TableManifest {
       |  optional int64 min_start_us;
       |  optional int64 max_end_us;
       |  optional binary tag_bounds (STRING);
+      |  optional int64 value_count;
+      |  optional double value_sum;
+      |  optional float value_min;
+      |  optional float value_max;
       |}""".stripMargin)
 
   /** Compact JSON for the sidecar's per-file tag bounds column:
@@ -767,6 +802,12 @@ private[graft] object TableManifest {
         g.add("min_start_us", s.minStartUs)
         g.add("max_end_us", s.maxEndUs)
         if (s.tagBounds.nonEmpty) g.add("tag_bounds", tagBoundsJson(s.tagBounds))
+        s.values.foreach { v =>
+          g.add("value_count", v.count)
+          g.add("value_sum", v.sum)
+          g.add("value_min", v.min)
+          g.add("value_max", v.max)
+        }
       }
       writer.write(g)
     } finally writer.close()
@@ -802,11 +843,18 @@ private[graft] object TableManifest {
                     g.getFieldRepetitionCount("tag_bounds") > 0)
                   parseTagBounds(g.getString("tag_bounds", 0))
                 else Map.empty[String, (String, String)]
+              val values =
+                if (schema.containsField("value_count") &&
+                    g.getFieldRepetitionCount("value_count") > 0)
+                  Some(ValueStats(g.getLong("value_count", 0),
+                    g.getDouble("value_sum", 0), g.getFloat("value_min", 0),
+                    g.getFloat("value_max", 0)))
+                else scala.None
               st += f -> FileStats(
                 g.getLong("size_bytes", 0),
                 g.getLong("min_start_us", 0),
                 g.getLong("max_end_us", 0),
-                tags)
+                tags, values)
             }
             g = reader.read()
           }

@@ -168,6 +168,30 @@ class RemoteSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  test("a client that never sends its request is dropped, and serving goes on") {
+    val engine = makeEngine("idle", 50)
+    val server = new RemoteServer(engine, requestTimeoutMs = 300)
+    try {
+      val silent = new java.net.Socket("localhost", server.boundPort)
+      try {
+        // The server must close the connection after its request timeout;
+        // without one this read blocks until the client gives up.
+        silent.setSoTimeout(20000)
+        val t0 = System.nanoTime()
+        assert(silent.getInputStream.read() == -1)
+        assert((System.nanoTime() - t0) / 1e6 < 15000)
+      } finally silent.close()
+      // Statement execution itself has no deadline: a statement that
+      // takes longer than the request timeout still answers.
+      val addr = RemoteClient.parseAddress(server.address).get
+      val n = RemoteClient.sql(spark, addr,
+        "SELECT count(*) AS n FROM rts CROSS JOIN (SELECT reflect(" +
+          "'java.lang.Thread', 'sleep', CAST(500 AS BIGINT)) AS z)")
+        .collect().head.getLong(0)
+      assert(n == 50L)
+    } finally server.close()
+  }
+
   test("parseAddress accepts only graft:// endpoints") {
     assert(RemoteClient.parseAddress("graft://host:9999")
       .contains(RemoteClient.Address("host", 9999)))

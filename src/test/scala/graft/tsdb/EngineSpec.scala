@@ -141,17 +141,25 @@ class EngineSpec extends AnyFunSuite {
     // Segment-native 1-of-2-fields aggregate: the scan must carry a
     // field_column partition filter — at a 32-field industrial table this
     // is the difference between reading 1/32 and 32/32 of the segments.
-    val one = engine.readTimeSeriesTable("fp", Seq("field_2"),
-      engine.Aggregate.Sum)
-    val plan = one.queryExecution.executedPlan.toString
+    // (Grouped: an ungrouped one reads the manifest's value stats and
+    // scans nothing at all.)
+    val grouped = engine.readTimeSeriesTable("fp", Seq("field_2"),
+      engine.Aggregate.Sum, groupByTags = Seq("tag"))
+    val plan = grouped.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("field_column"),
       s"expected a field_column partition filter, plan:\n$plan")
 
     // Same for the hybrid (time-ranged) shape.
     val ranged = engine.readTimeSeriesTable("fp", Seq("field_2"),
-      engine.Aggregate.Sum, startTime = Some(java.time.Instant.EPOCH))
+      engine.Aggregate.Sum, groupByTags = Seq("tag"),
+      startTime = Some(java.time.Instant.EPOCH))
     val rplan = ranged.queryExecution.executedPlan.toString
     assert(rplan.contains("PartitionFilters") && rplan.contains("field_column"))
+
+    val one = engine.readTimeSeriesTable("fp", Seq("field_2"),
+      engine.Aggregate.Sum)
+    assert(!one.queryExecution.executedPlan.toString.contains("FileScan"),
+      "an ungrouped aggregate over whole files reads their manifest stats")
 
     // And the pruned aggregate still answers exactly: sum(field_2) from
     // the one partition equals the gridded sum over reconstructed points.

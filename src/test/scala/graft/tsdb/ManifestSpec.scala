@@ -699,9 +699,9 @@ class ManifestSpec extends AnyFunSuite {
       startTime = Some(java.time.Instant.ofEpochSecond(60L)),
       endTime = Some(java.time.Instant.ofEpochSecond(61L))).count() == 200)
 
-    // Compaction: outputs inherit the union of their inputs' bounds — but
-    // here a stats-less input poisons the union to cover-everything, so the
-    // compacted file must carry the sentinel (size still real).
+    // Compaction: the writer measures every output itself, so even an
+    // output holding a stats-less input's points gets exact bounds and
+    // value stats (size still real).
     val (compacted, created) = engine.compact("ns", targetBytes = 64L * 1024 * 1024)
     if (compacted > 0) {
       val after = TableManifest.latest(fs, dir).get
@@ -710,8 +710,9 @@ class ManifestSpec extends AnyFunSuite {
       createdRels.foreach { rel =>
         val s = after.fileStats(rel)
         assert(s.sizeBytes > 0L)
-        assert(s.minStartUs == Long.MinValue && s.maxEndUs == Long.MaxValue,
-          "a stats-less input must poison the output bound to cover-everything")
+        assert(s.minStartUs == 1_000_000L && s.maxEndUs == 60_199_000L,
+          s"an output must carry its measured bounds, got $s")
+        assert(s.values.exists(_.count == 400L))
       }
     }
   }

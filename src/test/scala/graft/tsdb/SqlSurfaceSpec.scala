@@ -781,16 +781,18 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // Under a time range the extent rides the hybrid plan: interior
     // segments answer from their bounds, boundary segments from the
     // decode generator's timestamp partials — points never materialize.
+    // The range cuts through the files (a file wholly inside it would
+    // answer from its manifest stats without a scan).
     val ranged = engine.sql(
       "SELECT MIN(ts) AS t0, MAX(ts) AS t1 FROM ext " +
-        "WHERE ts >= TIMESTAMP '2024-02-01 00:00:00'")
+        "WHERE ts >= TIMESTAMP '2024-02-01 01:00:00'")
     val rangedPlan = ranged.queryExecution.executedPlan.toString
     assert(rangedPlan.contains("bucketpartials"),
       s"ranged extent must use timestamp partials:\n$rangedPlan")
     assert(!rangedPlan.contains("gridpoints"),
       s"ranged extent must not materialize points:\n$rangedPlan")
     val rangedExp = engine.readTable("ext")
-      .where(col("ts") >= lit("2024-02-01 00:00:00").cast("timestamp"))
+      .where(col("ts") >= lit("2024-02-01 01:00:00").cast("timestamp"))
       .agg(min(col("ts")), max(col("ts"))).collect().head
     val rangedGot = ranged.collect().head
     assert(rangedGot.getTimestamp(0) == rangedExp.getTimestamp(0))
