@@ -1,7 +1,8 @@
 package graft.remote
 
-import java.io.{DataInputStream, DataOutputStream}
-import java.net.{ServerSocket, Socket, SocketException}
+import java.io.{DataOutputStream, EOFException}
+import java.net.{ServerSocket, Socket, SocketException, SocketTimeoutException}
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
 
@@ -27,12 +28,13 @@ import graft.tsdb.Engine
   * one batch in memory per connection, not the result set. Each connection
   * is one statement (mirroring one Flight call); connections are handled
   * on a cached daemon pool. A client that does not deliver its whole
-  * request within `requestTimeoutMs` is dropped, so a silent connection
-  * cannot pin a worker thread; executing the statement has no deadline.
+  * request within [[RemoteServer.RequestTimeoutMs]] of connecting is
+  * dropped, so a silent or trickling connection cannot pin a worker
+  * thread; executing the statement has no deadline.
   */
 final class RemoteServer(engine: Engine, port: Int = 0,
-    onStatement: String => Unit = _ => (),
-    requestTimeoutMs: Int = 30000) extends AutoCloseable {
+    onStatement: String => Unit = _ => ()) extends AutoCloseable {
+  import RemoteServer._
 
   private val server = new ServerSocket(port)
   @volatile private var running = true
@@ -62,14 +64,12 @@ final class RemoteServer(engine: Engine, port: Int = 0,
 
   private def handle(socket: Socket): Unit = {
     try {
-      val in = new DataInputStream(socket.getInputStream)
       val out = new DataOutputStream(
         new java.io.BufferedOutputStream(socket.getOutputStream))
-      socket.setSoTimeout(requestTimeoutMs)
-      val sqlLen = in.readInt()
+      val deadline = System.nanoTime() + RequestTimeoutMs * 1000000L
+      val sqlLen = ByteBuffer.wrap(readBefore(socket, 4, deadline)).getInt
       require(sqlLen >= 0 && sqlLen <= 16 * 1024 * 1024, "oversized request")
-      val sqlBytes = new Array[Byte](sqlLen)
-      in.readFully(sqlBytes)
+      val sqlBytes = readBefore(socket, sqlLen, deadline)
       socket.setSoTimeout(0)
       val sqlText = new String(sqlBytes, UTF_8)
       onStatement(sqlText)
@@ -98,5 +98,30 @@ final class RemoteServer(engine: Engine, port: Int = 0,
     running = false
     server.close()
     pool.shutdownNow()
+  }
+}
+
+object RemoteServer {
+  /** How long a client has, from connecting, to deliver its whole request.
+    * Clients write a request in one go, so this only ends connections that
+    * stall or trickle their request in. */
+  private[remote] val RequestTimeoutMs = 5000
+
+  /** Reads exactly `n` bytes from `socket`, failing once `deadline`
+    * (`System.nanoTime`) passes: each read waits only for the time left,
+    * so a client that sends one byte at a time cannot restart the clock. */
+  private def readBefore(socket: Socket, n: Int, deadline: Long): Array[Byte] = {
+    val in = socket.getInputStream
+    val buf = new Array[Byte](n)
+    var off = 0
+    while (off < n) {
+      val leftMs = (deadline - System.nanoTime()) / 1000000L
+      if (leftMs <= 0) throw new SocketTimeoutException("request timed out")
+      socket.setSoTimeout(leftMs.toInt)
+      val got = in.read(buf, off, n - off)
+      if (got < 0) throw new EOFException("request cut short")
+      off += got
+    }
+    buf
   }
 }

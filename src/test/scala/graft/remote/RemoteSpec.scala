@@ -168,27 +168,57 @@ class RemoteSpec extends AnyFunSuite {
     } finally server.close()
   }
 
-  test("a client that never sends its request is dropped, and serving goes on") {
+  test("a client that stalls or trickles its request is dropped, and serving goes on") {
     val engine = makeEngine("idle", 50)
-    val server = new RemoteServer(engine, requestTimeoutMs = 300)
+    val server = new RemoteServer(engine)
+    val timeoutMs = RemoteServer.RequestTimeoutMs
+    val addr = RemoteClient.parseAddress(server.address).get
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
     try {
-      val silent = new java.net.Socket("localhost", server.boundPort)
-      try {
-        // The server must close the connection after its request timeout;
-        // without one this read blocks until the client gives up.
-        silent.setSoTimeout(20000)
-        val t0 = System.nanoTime()
-        assert(silent.getInputStream.read() == -1)
-        assert((System.nanoTime() - t0) / 1e6 < 15000)
-      } finally silent.close()
-      // Statement execution itself has no deadline: a statement that
-      // takes longer than the request timeout still answers.
-      val addr = RemoteClient.parseAddress(server.address).get
-      val n = RemoteClient.sql(spark, addr,
+      // Statement execution itself has no deadline: a statement that runs
+      // longer than the request timeout, alongside the dropped clients,
+      // still answers.
+      val slow = Future(RemoteClient.sql(spark, addr,
         "SELECT count(*) AS n FROM rts CROSS JOIN (SELECT reflect(" +
-          "'java.lang.Thread', 'sleep', CAST(500 AS BIGINT)) AS z)")
-        .collect().head.getLong(0)
-      assert(n == 50L)
+          s"'java.lang.Thread', 'sleep', CAST(${timeoutMs + 500} AS BIGINT)) AS z)")
+        .collect().head.getLong(0))
+      val silent = new java.net.Socket("localhost", server.boundPort)
+      // Announces a 1000-byte request, then sends one byte every 200 ms:
+      // each read sees data well inside the timeout, so only a deadline
+      // on the whole request ends it.
+      val trickle = new java.net.Socket("localhost", server.boundPort)
+      @volatile var trickling = true
+      val writer = new Thread(() => {
+        val out = trickle.getOutputStream
+        try {
+          out.write(java.nio.ByteBuffer.allocate(4).putInt(1000).array())
+          while (trickling) { out.write('x'); out.flush(); Thread.sleep(200) }
+        } catch { case _: java.io.IOException => } // the server hung up
+      })
+      writer.setDaemon(true)
+      writer.start()
+      try {
+        // The server closes both connections once its request timeout has
+        // passed (a close with trickled bytes unread may arrive as a
+        // reset); a server without one leaves these reads blocked until
+        // the client's own timeout fails them.
+        val t0 = System.nanoTime()
+        for (c <- Seq(silent, trickle)) {
+          c.setSoTimeout(3 * timeoutMs)
+          val closed =
+            try c.getInputStream.read() == -1
+            catch { case _: java.net.SocketException => true }
+          assert(closed)
+        }
+        assert((System.nanoTime() - t0) / 1e6 < 2 * timeoutMs)
+      } finally {
+        trickling = false
+        silent.close(); trickle.close()
+        writer.join(5000)
+      }
+      assert(Await.result(slow, 60.seconds) == 50L)
     } finally server.close()
   }
 
